@@ -3,33 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // r18: the two r17 join-posture flags are env-overridable so a
-    // fresh-JVM A/B can run each arm under the DRIVER'S OWN measurement
-    // (cold JVM, warm-up, median-of-3) instead of the same-JVM AbJoin
-    // interleave the r17 verdict found contradicted. Defaults = the
-    // shipped posture; the driver contract is unchanged.
-    val preferSmj = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
-    val shjThreshold = sys.env.getOrElse("SPARK_GRAFT_AQE_SHJ_THRESHOLD", "128m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r17 (guide §3.1/§9): let the planner pick shuffled-hash over
-      // sort-merge when the per-partition build side fits — an interleaved
-      // same-JVM canary-normalized A/B (tools/AbJoin) measured SHJ at
-      // 0.72-0.84x of SMJ on 6 of the 7 SMJ-bearing queries (q29 -28%,
-      // ds_snapshot_diff -26%, ds_drift -25%, sim_drift -25%, dd_cluster
-      // -16%, q45 -7%) and neutral on the 7th. Scale posture: the planner
-      // still gates on build-side size estimates, and AQE skew-split
-      // handles SHJ — this trades the per-partition sorts away, which is
-      // the same win on a cluster as on local.
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      // ...and the AQE runtime form of the same choice: rewrite a planned
-      // sort-merge to shuffled-hash when every post-shuffle build
-      // partition is under 128 MB (a per-TASK memory bound, safe at any
-      // cluster size; AbJoin A/B on top of the static flag: 0.85-0.99x
-      // on all seven SMJ shapes, no losers).
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjThreshold)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the join posture and its measured reason live in Session.local
+    val spark = Session.local(cpus)
       // TEST-SCALE-ONLY split sizing: the whole sf0.1 lineitem is ONE
       // ~10 MB parquet file, and the default 128 MB maxPartitionBytes
       // turns every heavy scan into a single-core job on a 32-core
@@ -39,7 +15,6 @@ object Bench {
       // count); keep the default there. openCost keeps tiny dims whole.
       .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm-up: touch each fixture table once so per-query timings measure

@@ -17,8 +17,8 @@ import graft.reliability.Backoff
 /** S3's HTTP client `Serve` poll loop as a CHECKPOINTED Structured
   * Streaming source — `readStream.format("graft-http")` — closing the
   * last reference `Serve` loop without the streaming-offset treatment its
-  * S3 (r12, `GraftS3FileSystem` tail) and Postgres (r13, `graft-jdbc`)
-  * siblings received. The reference re-fetches the endpoint on a ticker
+  * S3 (`GraftS3FileSystem` tail) and Postgres (`graft-jdbc`) siblings
+  * received. The reference re-fetches the endpoint on a ticker
   * and re-submits whatever comes back
   * (`/root/reference/pkg/internal/adapter/httpclient/serve.go:13-67`,
   * retry policy in `attemptFetchAndSubmit` at `:70-110`); the Spark-first
@@ -34,19 +34,12 @@ import graft.reliability.Backoff
   *    `cursorParam`). The offset log checkpoints the high-water mark;
   *    each record ships in exactly one micro-batch, and an uncommitted
   *    epoch replays after a crash by RE-FETCHING from its start mark and
-  *    filtering to the logged `(start, end]` — the same exactly-once
-  *    contract as `graft-jdbc`. A `lookback` window (cursor units, the
-  *    standard CDC hardening) re-polls below the high-water mark each
-  *    trigger and dedupes on the cursor mark against the offset's `seen`
-  *    list, so a record that COMMITS OUT OF ORDER inside the window
-  *    still ships exactly once; a record landing below the window (or
-  *    re-using an already-shipped mark) is missed — the append-monotonic
-  *    caveat narrows to "beyond `lookback`". The window is measured
-  *    against the hwm at each trigger's scan: a record committing
-  *    CONCURRENTLY with a trigger that advances the hwm by Δ is
-  *    guaranteed only when it lands within `lookback − Δ` of the
-  *    pre-trigger hwm (the scan runs after the forward poll to keep
-  *    that race to the scan-to-offset-write interval; cap Δ with
+  *    filtering to the logged epoch — the same exactly-once contract as
+  *    `graft-jdbc`. A `lookback` window (cursor units, the standard CDC
+  *    hardening) re-polls below the high-water mark each trigger so a
+  *    record that COMMITS OUT OF ORDER inside the window still ships
+  *    exactly once; [[CursorWindow]] holds the window contract and its
+  *    concurrent-commit caveat (cap the per-epoch advance with
   *    `maxRecordsPerPoll` when concurrent late commits matter).
   *  - **Change-detection mode** (no `cursorField`): the endpoint is a
   *    document that occasionally changes. Each poll is a conditional GET
@@ -80,13 +73,9 @@ import graft.reliability.Backoff
   * `jsonarray`), `attempts` (per-fetch retry budget, full-jitter backoff
   * — the reference `maxRetries`), `timeoutMillis`, `header.<Name>`
   * static headers, `lookback` (cursor-mode out-of-order window, CURSOR
-  * UNITS; 0 = strict append-monotonic), `maxSeenMarks` (ceiling in
-  * MARKS on the distinct in-window cursor values one window may hold —
-  * the `seen` list rides every offset-log entry and the window is
-  * re-scanned every trigger, so a window too hot for the feed fails
-  * loudly at this bound instead of silently bloating checkpoint and
-  * poll; default [[HttpStream.defaultMaxSeenMarks]]), and the
-  * OAuth/pinning options above.
+  * UNITS; 0 = strict append-monotonic) and `maxSeenMarks` (the window's
+  * mark ceiling, default [[CursorWindow.defaultMaxSeenMarks]]) — both
+  * as [[CursorWindow.Opts]] — and the OAuth/pinning options above.
   *
   * Schema is fixed: one `value STRING` column per record (the codec
   * split the reference applies); parse downstream with `from_json`.
@@ -127,13 +116,13 @@ object HttpStream {
     StructType(Seq(StructField("value", StringType, nullable = false)))
 
   final case class Opts(url: String, cursorField: String, cursorParam: String,
-                        startingCursor: String, maxRecordsPerPoll: Option[Long],
+                        maxRecordsPerPoll: Option[Long],
                         pagesPerPoll: Int, numPartitions: Int, format: String,
                         attempts: Int, timeoutMillis: Long,
                         headers: Map[String, String],
                         pinnedCertPath: Option[String],
                         oauth: Option[(String, String, String, Option[String])],
-                        lookback: Long, maxSeenMarks: Int)
+                        window: CursorWindow.Opts)
 
   object Opts {
     def apply(o: CaseInsensitiveStringMap): Opts = {
@@ -152,7 +141,6 @@ object HttpStream {
       val parsed = Opts(url,
         Option(o.get("cursorField")).getOrElse(""),
         Option(o.get("cursorParam")).getOrElse("after"),
-        Option(o.get("startingCursor")).getOrElse("earliest"),
         Option(o.get("maxRecordsPerPoll")).map(_.toLong),
         Option(o.get("pagesPerPoll")).map(_.toInt).getOrElse(1),
         Option(o.get("numPartitions")).map(_.toInt).getOrElse(1),
@@ -160,8 +148,7 @@ object HttpStream {
         Option(o.get("attempts")).map(_.toInt).getOrElse(5),
         Option(o.get("timeoutMillis")).map(_.toLong).getOrElse(10000L),
         headers, Option(o.get("pinnedCertPath")).filter(_.nonEmpty), oauth,
-        Option(o.get("lookback")).map(_.toLong).getOrElse(0L),
-        Option(o.get("maxSeenMarks")).map(_.toInt).getOrElse(defaultMaxSeenMarks))
+        CursorWindow.Opts("graft-http", "startingCursor", o))
       // misconfigurations fail at load, loudly — a pagesPerPoll=0 stream
       // would otherwise run "healthy" forever shipping zero rows, and a
       // typo'd format would silently parse a JSON array as one NDJSON line
@@ -175,69 +162,13 @@ object HttpStream {
         s"graft-http: maxRecordsPerPoll must be positive")
       require(parsed.format == "ndjson" || parsed.format == "jsonarray",
         s"graft-http: format must be ndjson|jsonarray, got '${parsed.format}'")
-      require(parsed.startingCursor.toLowerCase == "earliest" ||
-        parsed.startingCursor.toLowerCase == "latest" ||
-        parsed.startingCursor.matches("-?\\d+"),
-        s"graft-http: startingCursor must be earliest|latest|<long>, " +
-          s"got '${parsed.startingCursor}'")
       require(parsed.timeoutMillis > 0,
         s"graft-http: timeoutMillis must be positive, got ${parsed.timeoutMillis}")
-      require(parsed.lookback >= 0,
-        s"graft-http: lookback must be non-negative, got ${parsed.lookback}")
-      // upper bound: the window clamp (`lateMin + lookback - 1`) and the
-      // poll floor (`mark - lookback`) do Long arithmetic on real cursor
-      // values; a pathological lookback would overflow the clamp negative
-      // and silently empty the window filter. Long.MaxValue/4 is far past
-      // any sane window while keeping every sum representable.
-      require(parsed.lookback < Long.MaxValue / 4,
-        s"graft-http: lookback too large (max ${Long.MaxValue / 4}), " +
-          s"got ${parsed.lookback}")
-      require(parsed.lookback == 0 || parsed.cursorField.nonEmpty,
+      require(parsed.window.lookback == 0 || parsed.cursorField.nonEmpty,
         "graft-http: lookback requires cursorField (cursor mode)")
-      require(parsed.maxSeenMarks > 0,
-        s"graft-http: maxSeenMarks must be positive, got ${parsed.maxSeenMarks}")
       parsed
     }
   }
-
-  /** Ceiling on the marks one lookback window may hold (overridable via
-    * `maxSeenMarks`). The `seen` list rides EVERY offset-log entry and
-    * the window is re-scanned to completion EVERY trigger, so a window
-    * that holds more than control-plane-sized mark counts poisons the
-    * checkpoint and the poll budget slowly and silently — the guard
-    * turns that misconfiguration into an immediate, attributable
-    * failure. Note the units: `lookback` is CURSOR UNITS (how far below
-    * the hwm the scan reaches); this bound is MARKS (how many distinct
-    * in-window cursor values the feed actually produced). */
-  val defaultMaxSeenMarks: Int = 4096
-
-  /** Saturating a+b for the window-clamp arithmetic: marks are raw feed
-    * values, so `lateMin + lookback` can exceed Long range even with the
-    * parse-time lookback bound; saturation keeps the clamp a no-op
-    * instead of flipping it negative and dropping every seen mark. */
-  private[sources] def satAdd(a: Long, b: Long): Long = {
-    val r = a + b
-    if (((a ^ r) & (b ^ r)) < 0) { if (a < 0) Long.MinValue else Long.MaxValue }
-    else r
-  }
-
-  /** The [[defaultMaxSeenMarks]] guard, shared with graft-jdbc: `seen`
-    * is about to be checkpointed — fail loudly when the window holds
-    * more marks than the configured ceiling. */
-  private[sources] def guardSeen(source: String, seen: Vector[Long],
-                                 lookback: Long, maxSeenMarks: Int): Vector[Long] = {
-    if (seen.size > maxSeenMarks) throw new IllegalStateException(
-      s"$source: lookback window ($lookback cursor units) holds ${seen.size} " +
-        s"marks, over the maxSeenMarks ceiling $maxSeenMarks — every offset-log " +
-        "entry carries the window's marks and every trigger re-scans the full " +
-        "window, so this feed is too hot for this window: shrink `lookback` " +
-        "or (if the offset-log/poll cost is acceptable) raise `maxSeenMarks`")
-    seen
-  }
-
-  /** Floor mark for `startingCursor=earliest`: below any real id/sequence/
-    * epoch value but far from Long overflow in range arithmetic. */
-  val earliestFloor: Long = Long.MinValue / 2
 
   private[sources] def decode(opts: Opts): String => Seq[String] =
     opts.format match {
@@ -335,47 +266,12 @@ private[sources] trait HttpStreamFetch {
     }
 }
 
-/** Offset = exclusive high-water mark already shipped (cursor mode),
-  * plus — when a `lookback` window is configured — the sorted marks
-  * already shipped WITHIN `(mark - lookback, mark]`, so a poll can
-  * re-read the window and ship only genuinely late records. `seen` is
-  * bounded by the records one window holds (control-plane sized, like
-  * the poll itself); with `lookback = 0` the json stays the pre-r15
-  * `{"mark":N}` form, so existing checkpoints parse unchanged. */
-private[sources] final case class HttpCursorOffset(
-    mark: Long, seen: Vector[Long] = Vector.empty) extends Offset {
-  override def json(): String =
-    if (seen.isEmpty) s"""{"mark":$mark}"""
-    else s"""{"mark":$mark,"seen":[${seen.mkString(",")}]}"""
-  def seenSet: Set[Long] = seen.toSet
-}
-private[sources] object HttpCursorOffset {
-  def fromJson(s: String): HttpCursorOffset = {
-    val n =
-      try Auth.mapper.readTree(s)
-      catch { case e: Exception =>
-        throw new IllegalArgumentException(s"bad graft-http offset: $s", e) }
-    if (n == null || !n.isObject || !n.hasNonNull("mark") || !n.path("mark").isNumber)
-      throw new IllegalArgumentException(s"bad graft-http offset: $s")
-    import scala.jdk.CollectionConverters._
-    // each seen mark gets the same loud validation as `mark`: asLong()
-    // on a corrupted element would silently coerce to 0 — a bogus seen
-    // mark that weakens dedup instead of failing the restart
-    val seen =
-      if (!n.has("seen")) Vector.empty[Long]
-      else n.path("seen").elements().asScala.map { e =>
-        if (!e.isNumber)
-          throw new IllegalArgumentException(s"bad graft-http offset: $s")
-        e.asLong()
-      }.toVector
-    HttpCursorOffset(n.path("mark").asLong(), seen)
-  }
-}
-
 private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
   extends MicroBatchStream with SupportsAdmissionControl with HttpStreamFetch {
 
   private val decode = HttpStream.decode(opts)
+  private val window =
+    new CursorWindow("graft-http", "mark", opts.window, CursorWindow.minMark)
 
   // the fresh-path cache: the epoch latestOffset just discovered, so
   // planInputPartitions doesn't pay a second round of GETs. Keyed by the
@@ -390,12 +286,6 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
   // small budget re-transfers each page once per epoch it spans
   // (O(n²/pageSize) bytes). Bounded by one poll's fetch.
   @volatile private var pendingPast: (String, Vector[(Long, String)]) = _
-
-  /** Poll start for a committed mark: `lookback` cursor units below the
-    * hwm, so late-committing records inside the window are re-seen (and
-    * deduped against the offset's `seen` marks). */
-  private def pollFloor(mark: Long): Long =
-    if (opts.lookback == 0) mark else mark - opts.lookback
 
   /** Chained page walk from `from`: GET with cursor=mark, keep records
     * whose mark advances, follow with cursor=new max, until a page adds
@@ -433,13 +323,13 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
   }
 
   override def initialOffset(): Offset = {
-    val mark = opts.startingCursor.toLowerCase match {
-      case "earliest" => HttpStream.earliestFloor
+    val mark = opts.window.start.toLowerCase match {
+      case "earliest" => CursorWindow.minMark
       case "latest" =>
         // walk the feed to its current END (page-limited endpoints need
         // the full walk to find the true max) keeping only the mark —
         // "latest" on a deep backlog must not buffer the whole history
-        var m = HttpStream.earliestFloor
+        var m = CursorWindow.minMark
         var progress = true
         while (progress) {
           val body = fetchRetry(HttpStream.cursorUrl(opts, m)).body
@@ -451,16 +341,8 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
         m
       case n => n.toLong
     }
-    // with a lookback window, marks already present inside it count as
-    // shipped — otherwise the first poll would re-deliver the window
-    // below a `latest`/explicit start as "late" records ("earliest"
-    // ships everything anyway, so its window is legitimately empty)
-    val seen =
-      if (opts.lookback == 0 || mark == HttpStream.earliestFloor) Vector.empty[Long]
-      else pollRange(pollFloor(mark), mark)
-        .map(_._1).filter(_ <= mark).distinct.sorted
-    HttpCursorOffset(mark,
-      HttpStream.guardSeen("graft-http", seen, opts.lookback, opts.maxSeenMarks))
+    // "earliest" ships everything anyway: its window is at the floor, empty
+    window.initial(mark)((lo, hi) => pollRange(lo, hi).map(_._1))
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -469,13 +351,13 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
 
-  /** The poll: fetch forward from the committed mark (or `lookback`
-    * below it); candidates are records not yet shipped — mark above the
-    * hwm, or inside the window and absent from `seen`. Under a row
+  /** The poll: fetch forward from the committed mark and re-scan its
+    * lookback window; candidates are records not yet shipped — mark above
+    * the hwm, or inside the window and absent from `seen`. Under a row
     * budget the epoch's end mark is the n-th candidate's mark (ties on
     * the final mark ride along, as in graft-jdbc). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[HttpCursorOffset]
+    val s = start.asInstanceOf[CursorOffset]
     val carried = {
       val p = pendingPast
       if (p != null && p._1 == s.json()) p._2 else Vector.empty
@@ -485,16 +367,16 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
     // (bounded by the window's record count by definition — a page cap
     // there would leave late records undetected while forward epochs
     // advance the hwm past their eviction horizon, silently losing them;
-    // HttpStreamModelSpec catches exactly this against the earlier
+    // HttpStreamModelSpec catches exactly this against a
     // page-budgeted-walk-plus-forward-fallback design), while the
     // forward walk keeps the configured pagesPerPoll budget exactly like
     // the no-lookback path. The scan also runs while DRAINING a carried
     // backlog (carried epochs advance the hwm too), and runs AFTER the
     // forward poll so a record committing while the forward GETs are in
     // flight is still seen by this trigger's scan and bounded by the
-    // clamp below — the residual race narrows to commits landing between
-    // the scan and the offset write, bounded by the admission budget's
-    // per-epoch hwm advance (see the class scaladoc caveat).
+    // end-mark clamp — the residual race narrows to commits landing
+    // between the scan and the offset write, bounded by the admission
+    // budget's per-epoch hwm advance (the [[CursorWindow]] caveat).
     // Cost per trigger: ceil(window/pageSize) + pagesPerPoll requests.
     //
     // carried records at-or-below the hwm (a budget-cut late batch) are
@@ -506,9 +388,7 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
     val forwardFetched =
       if (carriedForward.nonEmpty) carriedForward
       else pollPages(s.mark, opts.pagesPerPoll)
-    val windowFetched =
-      if (opts.lookback == 0 || s.mark == HttpStream.earliestFloor) Vector.empty
-      else pollRange(pollFloor(s.mark), s.mark).filter(_._1 <= s.mark)
+    val windowFetched = window.scan(s.mark)(pollRange).filter(_._1 <= s.mark)
     val fetched = windowFetched ++ forwardFetched
     val seen = s.seenSet
     val cands = fetched.filter { case (m, _) => m > s.mark || !seen.contains(m) }
@@ -518,27 +398,12 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
         cands.map(_._1).sorted.apply(mr.maxRows().toInt - 1)
       case _ => cands.map(_._1).max
     }
-    // an epoch that ships a late mark must NOT advance the hwm past
-    // mark + lookback: `end.seen` (filtered to end's window) is the only
-    // channel that can replay an in-window late mark, so letting the
-    // same epoch outrun the window would ship it on the fresh path but
-    // LOSE it on crash replay. Clamp the end mark so every late mark
-    // taken stays inside end's window; the outrun new records simply
-    // ship next epoch (they are still above the hwm).
-    val lateTaken = cands.collect { case (m, _) if m <= s.mark && m <= budgetCap => m }
-    val capMark =
-      if (lateTaken.isEmpty) budgetCap
-      else math.min(budgetCap, HttpStream.satAdd(lateTaken.min, opts.lookback - 1))
+    val late = cands.collect { case (m, _) if m <= s.mark && m <= budgetCap => m }
+    val endMark = window.endMark(s.mark, budgetCap, late)
+    // the epoch takes what both the budget and the window clamp admit
+    val capMark = math.min(budgetCap, endMark)
     val taken = cands.filter(_._1 <= capMark)
-    // a late-only epoch must not regress the hwm — it grows `seen` only
-    val endMark = math.max(s.mark, capMark)
-    val endSeen =
-      if (opts.lookback == 0) Vector.empty[Long]
-      else HttpStream.guardSeen("graft-http",
-        (s.seen ++ taken.map(_._1)).distinct
-          .filter(m => m > endMark - opts.lookback && m <= endMark).sorted,
-        opts.lookback, opts.maxSeenMarks)
-    val end = HttpCursorOffset(endMark, endSeen)
+    val end = window.end(s, endMark, taken.map(_._1))
     cached = (s.json(), end.json(), taken.map(_._2).toArray)
     // carry only UNSHIPPED records past the cap — carrying anything
     // already in `seen` would satisfy the next poll with zero candidates
@@ -547,33 +412,23 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
     end
   }
 
-  /** Epoch membership from the two offsets alone (replay-deterministic):
-    * a mark ships iff it is new-and-below-the-end-window (unconditional
-    * — `seen` can't track it) or it entered `seen` in this epoch. With
-    * `lookback = 0` this is exactly the old `(start, end]` rule. */
-  private def shipsIn(m: Long, s: HttpCursorOffset, e: HttpCursorOffset,
-                      eSeen: Set[Long], sSeen: Set[Long]): Boolean =
-    (m > s.mark && m <= e.mark - opts.lookback) ||
-      (m <= e.mark && eSeen.contains(m) && !sSeen.contains(m))
-
   /** Fresh path serves the poll's own records; a cache miss is RESTART
     * REPLAY of an epoch in the offset log — re-fetch from the start
-    * mark's poll floor and filter by [[shipsIn]], which is exactly-once
-    * for feeds append-monotonic beyond the lookback window (the records
-    * at those marks are immutable; a record arriving DURING replay ships
-    * in a later epoch, not this one, because it isn't in `end.seen`). */
+    * mark's poll floor and keep the [[CursorWindow.epoch]] members, which
+    * is exactly-once for feeds append-monotonic beyond the lookback
+    * window (the records at those marks are immutable; a record arriving
+    * DURING replay ships in a later epoch, not this one, because it isn't
+    * in `end.seen`). */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[HttpCursorOffset]
-    val e = end.asInstanceOf[HttpCursorOffset]
-    if (e.mark <= s.mark && e.seen == s.seen) return Array.empty
+    val s = start.asInstanceOf[CursorOffset]
+    val e = end.asInstanceOf[CursorOffset]
+    val epoch = window.epoch(s, e)
+    if (epoch.isEmpty) return Array.empty
     val c = cached
     val records =
       if (c != null && c._1 == s.json() && c._2 == e.json()) c._3
-      else {
-        val eSeen = e.seenSet; val sSeen = s.seenSet
-        pollRange(pollFloor(s.mark), e.mark)
-          .collect { case (m, r) if shipsIn(m, s, e, eSeen, sSeen) => r }.toArray
-      }
+      else pollRange(window.pollFloor(s.mark), e.mark)
+        .collect { case (m, r) if epoch.contains(m) => r }.toArray
     if (records.isEmpty) return Array.empty
     val n = math.min(math.max(1, opts.numPartitions), records.length)
     (0 until n).map { i =>
@@ -584,7 +439,7 @@ private[sources] class GraftHttpCursorStream(val opts: HttpStream.Opts)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new HttpReaderFactory
-  override def deserializeOffset(json: String): Offset = HttpCursorOffset.fromJson(json)
+  override def deserializeOffset(json: String): Offset = window.parse(json)
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }

@@ -35,22 +35,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the standard incremental-ingest caveat; same as the reference when
   * its WhereClause tracks a cursor). A `lookback` window (mark units —
   * raw values for integral watermarks, MICROSECONDS for TIMESTAMP ones;
-  * the standard CDC hardening) re-scans `(hwm - lookback, hwm]` each
-  * poll and dedupes on the watermark value against the offset's `seen`
-  * marks, so a row that COMMITS OUT OF ORDER inside the window still
-  * ships exactly once; the caveat narrows to rows landing beyond
-  * `lookback` (or re-using an already-shipped mark). The window is
-  * measured against the hwm at each trigger's probe: a row committing
-  * CONCURRENTLY with a trigger that advances the hwm by Δ is guaranteed
-  * only when it lands within `lookback − Δ` of the pre-trigger hwm (the
-  * probe runs after the forward MAX/cap queries to keep that race to
-  * the probe-to-offset-write interval; cap Δ with `maxRowsPerPoll` when
-  * concurrent late commits matter — the graft-http caveat, mirrored).
-  * `maxSeenMarks` (default [[HttpStream.defaultMaxSeenMarks]]) bounds
-  * the MARKS one window may hold — `lookback` is MARK UNITS wide, but
-  * the `seen` list rides every offset-log entry and the window is
-  * re-probed every trigger, so a window too hot for the feed fails
-  * loudly at the bound instead of silently bloating both. Updates in
+  * the standard CDC hardening) re-probes `(hwm - lookback, hwm]` each
+  * poll so a row that COMMITS OUT OF ORDER inside the window still ships
+  * exactly once; `maxSeenMarks` (default
+  * [[CursorWindow.defaultMaxSeenMarks]]) bounds the marks one window may
+  * hold. [[CursorWindow]] holds the window contract and its
+  * concurrent-commit caveat (cap the per-epoch advance with
+  * `maxRowsPerPoll` when concurrent late commits matter). Updates in
   * place are still invisible: poll CDC-style tables on an updated-at
   * column, or use the batch reader.
   *
@@ -91,9 +82,8 @@ object JdbcStream {
 
   final case class Opts(url: String, driver: String, table: String,
                         watermarkColumn: String, where: Option[String],
-                        startingWatermark: String, numPartitions: Int,
-                        maxRowsPerPoll: Option[Long], lookback: Long = 0L,
-                        maxSeenMarks: Int = HttpStream.defaultMaxSeenMarks) {
+                        numPartitions: Int, maxRowsPerPoll: Option[Long],
+                        window: CursorWindow.Opts) {
     def whereAnd(cond: String): String =
       where.map(w => s"($w) AND $cond").getOrElse(cond)
   }
@@ -105,25 +95,12 @@ object JdbcStream {
         require(v != null && v.nonEmpty, s"graft-jdbc: option '$k' is required")
         v
       }
-      val parsed = Opts(req("url"), Option(o.get("driver")).getOrElse(""), req("table"),
+      Opts(req("url"), Option(o.get("driver")).getOrElse(""), req("table"),
         req("watermarkColumn"),
         Option(o.get("where")).filter(_.nonEmpty),
-        Option(o.get("startingWatermark")).getOrElse("earliest"),
         Option(o.get("numPartitions")).map(_.toInt).getOrElse(1),
         Option(o.get("maxRowsPerPoll")).map(_.toLong),
-        Option(o.get("lookback")).map(_.toLong).getOrElse(0L),
-        Option(o.get("maxSeenMarks")).map(_.toInt)
-          .getOrElse(HttpStream.defaultMaxSeenMarks))
-      require(parsed.lookback >= 0,
-        s"graft-jdbc: lookback must be non-negative, got ${parsed.lookback}")
-      // same overflow fence as graft-http: the window clamp
-      // (`lateMin + lookback - 1`) runs on real mark values
-      require(parsed.lookback < Long.MaxValue / 4,
-        s"graft-jdbc: lookback too large (max ${Long.MaxValue / 4}), " +
-          s"got ${parsed.lookback}")
-      require(parsed.maxSeenMarks > 0,
-        s"graft-jdbc: maxSeenMarks must be positive, got ${parsed.maxSeenMarks}")
-      parsed
+        CursorWindow.Opts("graft-jdbc", "startingWatermark", o))
     }
   }
 
@@ -222,41 +199,6 @@ object JdbcStream {
     } else ps.setLong(i, mark)
 }
 
-/** Offset = the exclusive high-water mark already shipped, plus — when a
-  * `lookback` window is configured — the sorted marks already shipped
-  * WITHIN `(hwm - lookback, hwm]`, so a poll can re-scan the window and
-  * ship only genuinely late rows. With `lookback = 0` the json stays the
-  * pre-r15 `{"hwm":N}` form, so existing checkpoints parse unchanged. */
-private[sources] final case class JdbcSourceOffset(
-    hwm: Long, seen: Vector[Long] = Vector.empty) extends Offset {
-  override def json(): String =
-    if (seen.isEmpty) s"""{"hwm":$hwm}"""
-    else s"""{"hwm":$hwm,"seen":[${seen.mkString(",")}]}"""
-  def seenSet: Set[Long] = seen.toSet
-}
-private[sources] object JdbcSourceOffset {
-  def fromJson(s: String): JdbcSourceOffset = {
-    val n =
-      try Auth.mapper.readTree(s)
-      catch { case e: Exception =>
-        throw new IllegalArgumentException(s"bad jdbc offset: $s", e) }
-    if (n == null || !n.isObject || !n.hasNonNull("hwm") || !n.path("hwm").isNumber)
-      throw new IllegalArgumentException(s"bad jdbc offset: $s")
-    import scala.jdk.CollectionConverters._
-    // each seen mark gets the same loud validation as `hwm`: asLong()
-    // on a corrupted element would silently coerce to 0 — a bogus seen
-    // mark that weakens dedup instead of failing the restart
-    val seen =
-      if (!n.has("seen")) Vector.empty[Long]
-      else n.path("seen").elements().asScala.map { e =>
-        if (!e.isNumber)
-          throw new IllegalArgumentException(s"bad jdbc offset: $s")
-        e.asLong()
-      }.toVector
-    JdbcSourceOffset(n.path("hwm").asLong(), seen)
-  }
-}
-
 private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
                                                        opts: JdbcStream.Opts)
   extends MicroBatchStream with SupportsAdmissionControl {
@@ -300,7 +242,8 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
     } finally st.close()
   }
 
-  /** Empty-table floor: for TIMESTAMP watermarks the sentinel must BIND
+  /** Empty-table floor, also the window's floor so no probe binds below
+    * it: for TIMESTAMP watermarks the sentinel must BIND
     * as a legal timestamp (Derby allows years 1–9999, Postgres 4713 BC+)
     * — a Long.MinValue-ish value would throw out-of-range on every poll
     * of an initially-empty table. 0001-01-03T00:00:00Z in epoch-micros:
@@ -308,13 +251,15 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
     * (setTimestamp without a Calendar) inside year 1 in every timezone. */
   private val emptyFloor: Long =
     if (wmIsTimestamp) -62135596800000000L + 2L * 86400L * 1000000L
-    else Long.MinValue / 2
+    else CursorWindow.minMark
+
+  private val window = new CursorWindow("graft-jdbc", "hwm", opts.window, emptyFloor)
 
   override def initialOffset(): Offset = {
     val wm = opts.watermarkColumn
     val t = opts.table
     val guard = opts.where.map(w => s" WHERE ($w)").getOrElse("")
-    val hwm = opts.startingWatermark.toLowerCase match {
+    val hwm = opts.window.start.toLowerCase match {
       case "earliest" =>
         // one below the smallest mark: the first epoch ships everything
         oneLong(s"SELECT MIN($wm) FROM $t$guard").map(_ - 1).getOrElse(emptyFloor)
@@ -322,15 +267,8 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
         oneLong(s"SELECT MAX($wm) FROM $t$guard").getOrElse(emptyFloor)
       case n => n.toLong
     }
-    // with a lookback window, marks already present inside it count as
-    // shipped — otherwise the first poll would re-deliver the window
-    // below a `latest`/explicit start as "late" rows (for `earliest`
-    // the window below MIN-1 is empty, so the probe is a no-op)
-    val seen =
-      if (opts.lookback == 0 || hwm <= emptyFloor) Vector.empty[Long]
-      else marksIn(pollFloor(hwm), hwm)
-    JdbcSourceOffset(hwm,
-      HttpStream.guardSeen("graft-jdbc", seen, opts.lookback, opts.maxSeenMarks))
+    // for `earliest` the window below MIN-1 is empty, so the probe is a no-op
+    window.initial(hwm)(marksIn)
   }
 
   override def getDefaultReadLimit: ReadLimit =
@@ -338,14 +276,6 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
 
   override def latestOffset(): Offset =
     throw new UnsupportedOperationException("use latestOffset(start, limit)")
-
-  /** Poll start for a committed hwm: `lookback` mark units below it
-    * (clamped to the bindable floor for TIMESTAMP columns), so rows that
-    * COMMITTED OUT OF ORDER inside the window are re-seen and deduped
-    * against the offset's `seen` marks. */
-  private def pollFloor(hwm: Long): Long =
-    if (opts.lookback == 0 || hwm <= emptyFloor) hwm
-    else math.max(hwm - opts.lookback, emptyFloor)
 
   /** DISTINCT marks in `(lo, hi]` with their ROW counts — the window
     * probe. Bounded by the rows one lookback window holds; never run for
@@ -380,12 +310,12 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
     * ordering) so a row committing into the window while the forward
     * queries execute is still caught by this trigger's probe — the
     * residual concurrent-commit race narrows to the probe-to-offset-
-    * write interval (class scaladoc caveat; cap the per-epoch hwm
+    * write interval (the [[CursorWindow]] caveat; cap the per-epoch hwm
     * advance with `maxRowsPerPoll` when concurrent late commits
-    * matter). A late-only epoch keeps the hwm and grows `seen`. */
+    * matter). */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val s = start.asInstanceOf[JdbcSourceOffset]
-    val from = s.hwm
+    val s = start.asInstanceOf[CursorOffset]
+    val from = s.mark
     val wm = opts.watermarkColumn
     val t = opts.table
     val max = withConn { c =>
@@ -420,10 +350,8 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
       case _ => Long.MaxValue
     }
     val forwardFull = cappedForward(fullBudget)
-    val lateAll =
-      if (opts.lookback == 0) Vector.empty[(Long, Long)]
-      else { val seen = s.seenSet
-             windowMarks(pollFloor(from), from).filterNot(m => seen.contains(m._1)) }
+    val seen = s.seenSet
+    val lateAll = window.scan(from)(windowMarks).filterNot(m => seen.contains(m._1))
     // admit late marks ascending until their ROW total exhausts the
     // budget (always at least one, overrun bounded to that mark's ties —
     // the old nth-mark softness); the remainder ships next epochs
@@ -446,40 +374,22 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
     val uncappedEnd =
       if (late.isEmpty || fullBudget == Long.MaxValue) forwardFull
       else cappedForward(math.max(0L, fullBudget - lateRows))
-    // an epoch that ships a late mark must NOT advance the hwm past
-    // mark + lookback: `end.seen` (filtered to end's window) is the only
-    // channel that can ship an in-window late mark at plan time, so
-    // letting the same epoch outrun the window would silently DROP the
-    // late rows (they are below the range part's floor and evicted from
-    // the IN-list). Clamp; the outrun new rows ship next epoch.
-    val endHwm =
-      if (late.isEmpty) uncappedEnd
-      else math.min(uncappedEnd,
-        math.max(from, HttpStream.satAdd(late.min, opts.lookback - 1)))
+    val endHwm = window.endMark(from, uncappedEnd, late)
     if (late.isEmpty && endHwm == from) return start
-    val endSeen =
-      if (opts.lookback == 0) Vector.empty[Long]
-      else HttpStream.guardSeen("graft-jdbc",
-        (s.seen ++ late ++ marksIn(math.max(from, pollFloor(endHwm)), endHwm))
-          .distinct.filter(m => m > pollFloor(endHwm) && m <= endHwm).sorted,
-        opts.lookback, opts.maxSeenMarks)
-    JdbcSourceOffset(endHwm, endSeen)
+    // forward marks landing inside the end window join `seen` too (the
+    // range below that window ships unconditionally)
+    window.end(s, endHwm, late ++ window.scan(endHwm, above = from)(marksIn))
   }
 
-  /** Epoch membership is derived from the two offsets alone, so replay
-    * after a crash is deterministic even if more late rows have arrived
-    * since: the range part `(start.hwm, end.hwm - lookback]` is
-    * unconditional (below `end`'s window, `seen` can't track it), and
-    * the in-window part ships exactly the marks that entered `seen`
-    * this epoch — an IN-list per partition. With `lookback = 0` this is
-    * exactly the old contiguous `(a, b]` range split. */
+  /** [[CursorWindow.epoch]] as partitions: the range part splits into
+    * contiguous slices, the in-window marks ride as an IN-list per
+    * partition. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[JdbcSourceOffset]
-    val e = end.asInstanceOf[JdbcSourceOffset]
-    if (e.hwm <= s.hwm && e.seen == s.seen) return Array.empty
-    val rangeLo = s.hwm
-    val rangeHi = if (opts.lookback == 0) e.hwm else math.max(rangeLo, e.hwm - opts.lookback)
-    val inMarks = (e.seen.toSet -- s.seen.toSet).toArray.sorted
+    val epoch = window.epoch(start.asInstanceOf[CursorOffset], end.asInstanceOf[CursorOffset])
+    if (epoch.isEmpty) return Array.empty
+    val rangeLo = epoch.lo
+    val rangeHi = epoch.hi
+    val inMarks = epoch.marks.toArray.sorted
     val n = math.max(1, opts.numPartitions)
     val span = math.max(0L, rangeHi - rangeLo)
     // split the range into numPartitions contiguous mark slices — each
@@ -504,8 +414,7 @@ private[sources] final class GraftJdbcMicroBatchStream(schema: StructType,
   override def createReaderFactory(): PartitionReaderFactory =
     new JdbcReaderFactory
 
-  override def deserializeOffset(json: String): Offset =
-    JdbcSourceOffset.fromJson(json)
+  override def deserializeOffset(json: String): Offset = window.parse(json)
 
   override def commit(end: Offset): Unit = ()
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: dump formatted physical plans for the declared queries —
@@ -10,14 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.join.preferSortMergeJoin", "false") // r17: match Bench
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.foreach { case (name, fn) =>
       if (names.isEmpty || names.contains(name)) {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (r17 optimization round): per-JOB wall/task-time breakdown of
   * one declared query — `Bench` gives one number per query, this says
@@ -14,15 +13,11 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("sim_semdedup")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.join.preferSortMergeJoin", "false") // r17: match Bench
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Bench's split sizing too, so profiled jobs are the benched jobs
+    val spark = graft.Session.local(cpus)
       .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -53,7 +53,7 @@ class HttpStreamModelSpec extends SparkSpec {
         val o = opts(feed.url, lookback, pages, budget)
         var stream = new GraftHttpCursorStream(o)
         val limit = budget.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
-        var cur = stream.initialOffset().asInstanceOf[HttpCursorOffset]
+        var cur = stream.initialOffset().asInstanceOf[CursorOffset]
 
         var nextMark = 10L
         val shipped = scala.collection.mutable.Map[Long, Int]()
@@ -68,7 +68,7 @@ class HttpStreamModelSpec extends SparkSpec {
         }
 
         def pollOnce(): Boolean = {
-          val end = stream.latestOffset(cur, limit).asInstanceOf[HttpCursorOffset]
+          val end = stream.latestOffset(cur, limit).asInstanceOf[CursorOffset]
           if (end.json() == cur.json()) return false
           val fresh = marksOf(stream.planInputPartitions(cur, end))
           // crash point: replay the SAME epoch on a fresh instance (no
@@ -136,10 +136,10 @@ class HttpStreamModelSpec extends SparkSpec {
         m
       }))
       val stream = new GraftHttpCursorStream(o)
-      var cur = stream.initialOffset().asInstanceOf[HttpCursorOffset]
+      var cur = stream.initialOffset().asInstanceOf[CursorOffset]
       feed.rows.updateAndGet(_ :+ 10L :+ 50L)
       cur = stream.latestOffset(cur, ReadLimit.allAvailable())
-        .asInstanceOf[HttpCursorOffset]
+        .asInstanceOf[CursorOffset]
       assert(cur.seen == Vector(10L, 50L)) // 2 marks: under the ceiling
       // three late commits inside the window push the seen count to 5 > 3
       feed.rows.updateAndGet(_ :+ 45L :+ 46L :+ 47L)

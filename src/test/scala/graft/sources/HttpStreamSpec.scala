@@ -151,7 +151,7 @@ class HttpStreamSpec extends SparkSpec {
       // a FRESH stream instance (as after a driver restart) gets handed the
       // offsets from the log; its cache is cold
       val stream = new GraftHttpCursorStream(opts)
-      val parts = stream.planInputPartitions(HttpCursorOffset(2L), HttpCursorOffset(9L))
+      val parts = stream.planInputPartitions(CursorOffset("mark", 2L), CursorOffset("mark", 9L))
         .map(_.asInstanceOf[HttpInputPartition])
       val replayed = parts.flatMap(_.records).map(HttpStream.markOf(_, "id")).sorted
       assert(replayed.toSeq === (3L to 9L),
@@ -172,9 +172,9 @@ class HttpStreamSpec extends SparkSpec {
     // planInputPartitions' cache arm directly through the latestOffset cache
     val f = classOf[GraftHttpCursorStream].getDeclaredField("cached")
     f.setAccessible(true)
-    f.set(stream, (HttpCursorOffset(0L).json(), HttpCursorOffset(10L).json(),
+    f.set(stream, (CursorOffset("mark", 0L).json(), CursorOffset("mark", 10L).json(),
       (1L to 10L).map(i => s"""{"id":$i}""").toArray))
-    val parts = stream.planInputPartitions(HttpCursorOffset(0L), HttpCursorOffset(10L))
+    val parts = stream.planInputPartitions(CursorOffset("mark", 0L), CursorOffset("mark", 10L))
       .map(_.asInstanceOf[HttpInputPartition])
     assert(parts.length === 4)
     assert(parts.map(_.records.length).sum === 10)
@@ -364,7 +364,7 @@ class HttpStreamSpec extends SparkSpec {
         override protected def retrySleep: Long => Unit = _ => ()
       }
       val e = intercept[Http.StatusException] {
-        stream.latestOffset(HttpCursorOffset(0L), ReadLimit.allAvailable())
+        stream.latestOffset(CursorOffset("mark", 0L), ReadLimit.allAvailable())
       }
       assert(e.status === 404)
       assert(hits.get() === 1,
@@ -504,7 +504,7 @@ class HttpStreamSpec extends SparkSpec {
       // default trust refuses the self-signed server at the handshake —
       // that is configuration, not weather: fail on the FIRST attempt
       intercept[javax.net.ssl.SSLHandshakeException] {
-        stream.latestOffset(HttpCursorOffset(0L), ReadLimit.allAvailable())
+        stream.latestOffset(CursorOffset("mark", 0L), ReadLimit.allAvailable())
       }
       assert(sleeps.get() === 0,
         s"handshake refusal burned ${sleeps.get()} backoff sleeps")
@@ -513,18 +513,41 @@ class HttpStreamSpec extends SparkSpec {
 
   test("cursor offsets round-trip their json, including the lookback seen " +
     "list; the pre-r15 bare-mark form still parses (checkpoint compat)") {
-    assert(HttpCursorOffset.fromJson("""{"mark":42}""") === HttpCursorOffset(42L))
-    val withSeen = HttpCursorOffset(30L, Vector(20L, 25L, 30L))
-    assert(HttpCursorOffset.fromJson(withSeen.json()) === withSeen)
+    assert(CursorOffset.fromJson("mark", """{"mark":42}""") === CursorOffset("mark", 42L))
+    val withSeen = CursorOffset("mark", 30L, Vector(20L, 25L, 30L))
+    assert(CursorOffset.fromJson("mark", withSeen.json()) === withSeen)
     assert(withSeen.json() === """{"mark":30,"seen":[20,25,30]}""")
     // lookback-off offsets keep emitting the old shape byte-for-byte
-    assert(HttpCursorOffset(7L).json() === """{"mark":7}""")
-    intercept[IllegalArgumentException](HttpCursorOffset.fromJson("""{"v":1}"""))
-    assert(JdbcSourceOffset.fromJson("""{"hwm":9}""") === JdbcSourceOffset(9L))
-    val j = JdbcSourceOffset(9L, Vector(8L, 9L))
-    assert(JdbcSourceOffset.fromJson(j.json()) === j)
-    assert(JdbcSourceOffset(3L).json() === """{"hwm":3}""")
-    intercept[IllegalArgumentException](JdbcSourceOffset.fromJson("nope"))
+    assert(CursorOffset("mark", 7L).json() === """{"mark":7}""")
+    intercept[IllegalArgumentException](CursorOffset.fromJson("mark", """{"v":1}"""))
+    assert(CursorOffset.fromJson("hwm", """{"hwm":9}""") === CursorOffset("hwm", 9L))
+    val j = CursorOffset("hwm", 9L, Vector(8L, 9L))
+    assert(CursorOffset.fromJson("hwm", j.json()) === j)
+    assert(CursorOffset("hwm", 3L).json() === """{"hwm":3}""")
+    intercept[IllegalArgumentException](CursorOffset.fromJson("hwm", "nope"))
+    // checkpoint bytes: every committed shape parses and re-emits
+    // byte-identically, so an existing offset log restarts unchanged
+    val lo = Long.MinValue / 2
+    val httpBytes = Seq("""{"mark":0}""", """{"mark":-17}""", s"""{"mark":$lo}""",
+      s"""{"mark":${Long.MaxValue}}""", """{"mark":30,"seen":[20,25,30]}""",
+      """{"mark":-3,"seen":[-9,-4,-3]}""", """{"mark":5,"seen":[5]}""")
+    httpBytes.foreach(s => assert(CursorOffset.fromJson("mark", s).json() === s, s))
+    val jdbcBytes = Seq("""{"hwm":0}""", """{"hwm":-17}""", s"""{"hwm":$lo}""",
+      s"""{"hwm":${Long.MaxValue}}""", """{"hwm":9,"seen":[8,9]}""",
+      """{"hwm":-3,"seen":[-9,-4,-3]}""")
+    jdbcBytes.foreach(s => assert(CursorOffset.fromJson("hwm", s).json() === s, s))
+    // a non-numeric seen element, a missing or non-numeric mark, and the
+    // other source's key are all corrupt checkpoints, never coerced
+    val httpBad = Seq("""{"mark":5,"seen":[1,"2"]}""", """{"mark":5,"seen":[null]}""",
+      """{"seen":[1]}""", """{"mark":"5"}""", """{"mark":null}""", """{"mark":true}""",
+      """{"hwm":9}""", """{"hwm":9,"seen":[8,9]}""", "[5]", "")
+    httpBad.foreach(s =>
+      intercept[IllegalArgumentException](CursorOffset.fromJson("mark", s)))
+    val jdbcBad = Seq("""{"hwm":5,"seen":[1,"2"]}""", """{"hwm":5,"seen":[{}]}""",
+      """{"seen":[1]}""", """{"hwm":"5"}""", """{"hwm":null}""",
+      """{"mark":9}""", """{"mark":30,"seen":[20,25,30]}""", "[5]", "")
+    jdbcBad.foreach(s =>
+      intercept[IllegalArgumentException](CursorOffset.fromJson("hwm", s)))
   }
 
   test("misconfiguration fails at load: non-positive pagesPerPoll, unknown " +
@@ -538,6 +561,9 @@ class HttpStreamSpec extends SparkSpec {
     intercept[IllegalArgumentException](load(Map("format" -> "json")))
     intercept[IllegalArgumentException](load(Map("startingCursor" -> "newest")))
     intercept[IllegalArgumentException](load(Map("maxRecordsPerPoll" -> "-5")))
+    // a start so low that `mark - lookback` would wrap positive
+    intercept[IllegalArgumentException](load(Map("lookback" -> "10",
+      "startingCursor" -> (Long.MinValue + 5).toString)))
   }
 
   test("transient 5xx heals inside a poll via the retry budget; the row " +
@@ -562,9 +588,9 @@ class HttpStreamSpec extends SparkSpec {
       val stream = new GraftHttpCursorStream(opts) {
         override protected def retrySleep: Long => Unit = _ => ()
       }
-      val end = stream.latestOffset(HttpCursorOffset(Long.MinValue / 2),
+      val end = stream.latestOffset(CursorOffset("mark", Long.MinValue / 2),
         ReadLimit.allAvailable())
-      assert(end.asInstanceOf[HttpCursorOffset].mark === 2L)
+      assert(end.asInstanceOf[CursorOffset].mark === 2L)
     } finally server.stop(0)
   }
 

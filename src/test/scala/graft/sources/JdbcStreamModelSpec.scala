@@ -68,7 +68,7 @@ class JdbcStreamModelSpec extends SparkSpec {
       var stream = new GraftJdbcMicroBatchStream(schema, opts)
       val limit = budget.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
       try {
-        var cur = stream.initialOffset().asInstanceOf[JdbcSourceOffset]
+        var cur = stream.initialOffset().asInstanceOf[CursorOffset]
         var nextWm = 10L
         var nextId = 1L
         val shipped = scala.collection.mutable.Map[Long, Int]() // by row id
@@ -84,15 +84,15 @@ class JdbcStreamModelSpec extends SparkSpec {
           // rows on fresh marks (ties inserted before their mark ships
           // ride along and DO count)
           val markShippedAlready =
-            wm <= cur.hwm && (cur.seenSet.contains(wm) || wm <= cur.hwm - lookback)
-          if (wm > cur.hwm - lookback && !(markShippedAlready && seenWm.contains(wm)))
+            wm <= cur.mark && (cur.seenSet.contains(wm) || wm <= cur.mark - lookback)
+          if (wm > cur.mark - lookback && !(markShippedAlready && seenWm.contains(wm)))
             mustShip += id
-          else if (wm <= cur.hwm - lookback) mustNot += id
+          else if (wm <= cur.mark - lookback) mustNot += id
           seenWm += wm
         }
 
         def pollOnce(): Boolean = {
-          val end = stream.latestOffset(cur, limit).asInstanceOf[JdbcSourceOffset]
+          val end = stream.latestOffset(cur, limit).asInstanceOf[CursorOffset]
           if (end.json() == cur.json()) return false
           val fresh = rowsOf(stream.planInputPartitions(cur, end))
           if (rnd.nextInt(3) == 0) {
@@ -120,15 +120,15 @@ class JdbcStreamModelSpec extends SparkSpec {
               // several at once stresses the row-charged admission cut;
               // only once the hwm is a real mark (the empty-table
               // sentinel's window is clamped off by design)
-              if (cur.hwm >= 10) {
-                val lo = cur.hwm - lookback + 1
+              if (cur.mark >= 10) {
+                val lo = cur.mark - lookback + 1
                 (0 until 1 + rnd.nextInt(3)).foreach { _ =>
-                  val m = lo + rnd.nextInt((cur.hwm - lo + 1).toInt)
+                  val m = lo + rnd.nextInt((cur.mark - lo + 1).toInt)
                   if (!seenWm.contains(m)) insert(m)
                 }
               }
             case 4 => // late commit BEYOND the window
-              val m = cur.hwm - lookback - 1 - rnd.nextInt(5)
+              val m = cur.mark - lookback - 1 - rnd.nextInt(5)
               if (m > 0 && !seenWm.contains(m)) insert(m)
           }
           if (rnd.nextBoolean()) pollOnce()
@@ -165,9 +165,9 @@ class JdbcStreamModelSpec extends SparkSpec {
     val stream = new GraftJdbcMicroBatchStream(schema, opts)
     try {
       exec(s"INSERT INTO $table VALUES (1, 10)", s"INSERT INTO $table VALUES (2, 50)")
-      var cur = stream.initialOffset().asInstanceOf[JdbcSourceOffset]
+      var cur = stream.initialOffset().asInstanceOf[CursorOffset]
       cur = stream.latestOffset(cur, ReadLimit.allAvailable())
-        .asInstanceOf[JdbcSourceOffset]
+        .asInstanceOf[CursorOffset]
       assert(cur.seen == Vector(10L, 50L)) // 2 marks: under the ceiling
       // three late commits inside the window push the seen count to 5 > 3
       exec(s"INSERT INTO $table VALUES (3, 45)",

@@ -336,16 +336,16 @@ class JdbcStreamSpec extends SparkSpec {
     val stream = new GraftJdbcMicroBatchStream(schema, opts.copy(table = "poll6"))
     try {
       val parts = stream.planInputPartitions(
-        JdbcSourceOffset(0L), JdbcSourceOffset(100L))
+        CursorOffset("hwm", 0L), CursorOffset("hwm", 100L))
         .map(_.asInstanceOf[JdbcInputPartition])
       assert(parts.length === 4)
       assert(parts.head.lo === 0L && parts.last.hi === 100L)
       assert(parts.sliding(2).forall(w => w(0).hi == w(1).lo))
       // a 2-row epoch never plans more slices than marks
       assert(stream.planInputPartitions(
-        JdbcSourceOffset(0L), JdbcSourceOffset(2L)).length === 2)
+        CursorOffset("hwm", 0L), CursorOffset("hwm", 2L)).length === 2)
       assert(stream.planInputPartitions(
-        JdbcSourceOffset(5L), JdbcSourceOffset(5L)).isEmpty)
+        CursorOffset("hwm", 5L), CursorOffset("hwm", 5L)).isEmpty)
     } finally stream.stop()
   }
 

@@ -1,14 +1,16 @@
 #!/usr/bin/env bash
-# r18: fresh-JVM A/B of the r17 join posture vs the r16 posture, measured
-# EXACTLY as the driver measures (graft.Bench subset mode: cold JVM,
-# fixture warm-up, median-of-3 per query) — the r17 verdict found the
-# same-JVM AbJoin interleave contradicted by the driver's ground truth,
-# so each arm here is its own JVM, arms interleaved A B A B A B to spread
-# box drift evenly across both.
-#   arm A: r17 posture (preferSortMergeJoin=false, AQE SHJ threshold 128m)
-#   arm B: r16 posture (preferSortMergeJoin=true,  AQE SHJ threshold 0)
+# Fresh-JVM A/B of the join posture in graft.Session against the
+# sort-merge posture, measured EXACTLY as graft.Bench measures (subset
+# mode: cold JVM, fixture warm-up, median-of-3 per query). Each arm is its
+# own JVM because a same-JVM interleaved A/B did not reproduce under this
+# method; arms run interleaved A B A B A B to spread box drift evenly.
+# Measured at sf0.1 over three rounds: A/B geomean 0.99-1.02, i.e. the
+# posture is net-neutral here and kept for its cluster-scale reason (see
+# graft.Session.local).
+#   arm A: shipped posture (preferSortMergeJoin=false, AQE SHJ threshold 128m)
+#   arm B: sort-merge posture (preferSortMergeJoin=true, AQE SHJ threshold 0)
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 QUERIES="t7_hash_throughput q24_window_suite q25_correlated q26_waiting_orders \
 q31_min_cost_supp q32_qualified_suppliers q33_important_parts q40_local_volume \
 q43_late_orders ev_cooccurrence q29_nation_volume q45_returned_items \
