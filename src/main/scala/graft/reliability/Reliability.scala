@@ -20,23 +20,26 @@ final class CircuitBreaker(errorThreshold: Int, windowMillis: Long,
                            clock: () => Long = () => System.currentTimeMillis()) extends Serializable {
   // plain fields guarded by `synchronized` — one driver-side decision per
   // micro-batch, never contended enough to warrant lock-free structure
-  private var errorCount = 0
+  private var errorCount = 0L
   private var windowStart = 0L
   private var openedAt = -1L
 
   /** Record `n` errors; trips the breaker if the threshold is crossed
-    * within the rolling window. Returns the new open/closed state. */
-  def recordErrors(n: Int): Boolean = synchronized {
+    * within the rolling window. Returns the new open/closed state. The
+    * window's count saturates at `Long.MaxValue`: a sink's error count is
+    * a row count, and a wrapped sum would read as below the threshold. */
+  def recordErrors(n: Long): Boolean = synchronized {
+    require(n >= 0, s"negative error count $n")
     val now = clock()
-    if (now - windowStart > windowMillis) { windowStart = now; errorCount = 0 }
-    errorCount += n
+    if (now - windowStart > windowMillis) { windowStart = now; errorCount = 0L }
+    errorCount = if (n > Long.MaxValue - errorCount) Long.MaxValue else errorCount + n
     if (errorCount >= errorThreshold && openedAt < 0) openedAt = now
     isOpen
   }
 
   /** True while tripped; auto-resets after the window elapses. */
   def isOpen: Boolean = synchronized {
-    if (openedAt >= 0 && clock() - openedAt >= windowMillis) { openedAt = -1L; errorCount = 0 }
+    if (openedAt >= 0 && clock() - openedAt >= windowMillis) { openedAt = -1L; errorCount = 0L }
     openedAt >= 0
   }
 

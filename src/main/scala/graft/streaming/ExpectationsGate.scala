@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.lit
 
 import graft.operators.Expectations
 
@@ -14,8 +14,14 @@ import graft.operators.Expectations
   * fully parallel and nothing is decided per record).
   *
   * The audit is one conditional-aggregation pass for all row-local rules
-  * (plus a key groupBy per Unique rule), and the batch is persisted once so
-  * audit + the routed write never recompute the upstream. The report sink
+  * (plus a key groupBy per Unique rule). The batch commits through
+  * [[BatchCommit]]: it is persisted once, the audit runs on the
+  * uncompacted batch, so the upstream materializes in all of its
+  * partitions (coalescing first would fold them into fewer, serial
+  * tasks), and the routed writer then receives the batch coalesced to the
+  * session's `spark.sql.shuffle.partitions`. Coalescing only regroups
+  * cached partitions, so the routed writer gets the same rows and the
+  * audit the same counts as without it, in fewer write tasks. The report sink
   * receives (report + batch_id) every batch, pass or fail — at 100 TB the
   * report stream IS the data-quality time series the pipeline alarms on. */
 final class ExpectationsGate(
@@ -31,21 +37,17 @@ final class ExpectationsGate(
   require(rules.map(_.id).distinct.size == rules.size, "duplicate rule ids")
 
   override def apply(batch: DataFrame, batchId: Long): Unit = {
-    batch.persist()
-    try {
-      val report = Expectations.audit(batch, rules)
-        .withColumn("batch_id", lit(batchId))
-      // the report is rule-count-sized: collect once, reuse for the
-      // routing decision AND the report sink (auditing twice would run
-      // the rule scan twice)
-      val rows = report.collect()
-      val spark = batch.sparkSession
-      val materialized = spark.createDataFrame(
-        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), report.schema)
-      writeReport(materialized, batchId)
-      val clean = rows.forall(_.getAs[Boolean]("pass"))
-      if (clean) writeMain(batch, batchId)
-      else writeQuarantine(batch, batchId)
-    } finally batch.unpersist()
+    // the report is rule-count-sized: collect once, reuse for the routing
+    // decision AND the report sink (auditing twice would run the rule
+    // scan twice)
+    BatchCommit(batch) { b =>
+      val report = Expectations.audit(b, rules).withColumn("batch_id", lit(batchId))
+      (report.collect(), report.schema)
+    } { case ((rows, schema), compact) =>
+      writeReport(batch.sparkSession.createDataFrame(
+        new java.util.ArrayList(java.util.Arrays.asList(rows: _*)), schema), batchId)
+      if (rows.forall(_.getAs[Boolean]("pass"))) writeMain(compact(batch), batchId)
+      else writeQuarantine(compact(batch), batchId)
+    }
   }
 }

@@ -9,9 +9,15 @@ import graft.reliability.{Blackout, CircuitBreaker, TokenBucket}
   * `/root/reference/pkg/internal/wire/routing.go:27-47`).
   *
   * Decisions are made once per micro-batch on the driver — never per record
-  * — so the executors stay fully parallel. The error predicate splits the
-  * batch into main/error datasets with one pass each (both writes are
-  * Spark jobs; no collect).
+  * — so the executors stay fully parallel. The batch commits through
+  * [[BatchCommit]]: it is persisted once, the error count that feeds the
+  * breaker runs on the uncompacted batch, so the upstream materializes in
+  * all of its partitions (coalescing first would fold them into fewer,
+  * serial tasks), and the main and error writers then receive their halves
+  * coalesced to the session's `spark.sql.shuffle.partitions`. Coalescing
+  * only regroups cached partitions, so each writer gets the same rows and
+  * the breaker the same count as without it, in fewer write tasks. A
+  * diverted batch goes to its writer as it arrived, unmaterialized.
   */
 final class GuardedBatchSink[T](
     breaker: CircuitBreaker,
@@ -31,17 +37,14 @@ final class GuardedBatchSink[T](
       writeBackup.getOrElse(writeError)(batch, batchId)
       return
     }
-    // persist once: the split + count + two writes would otherwise
-    // recompute the micro-batch's upstream three times
-    batch.persist()
-    try {
-      val errs = batch.filter(isError(_))
-      val good = batch.filter(!isError(_))
-      val nErr = errs.count()
-      if (nErr > 0) breaker.recordErrors(nErr.toInt)
-      writeMain(good, batchId)
-      if (nErr > 0) writeError(errs, batchId)
-    } finally batch.unpersist()
+    // a local predicate: `isError(_)` would capture this sink, shipping
+    // the breaker and every writer to each filter task
+    val err = isError
+    BatchCommit(batch)(_.filter(err).count()) { (nErr, compact) =>
+      if (nErr > 0) breaker.recordErrors(nErr)
+      writeMain(compact(batch.filter((t: T) => !err(t))), batchId)
+      if (nErr > 0) writeError(compact(batch.filter(err)), batchId)
+    }
   }
 }
 

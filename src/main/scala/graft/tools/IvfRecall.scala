@@ -54,13 +54,10 @@ object IvfRecall {
     val graphSample = args.lift(1).map(_.toInt).getOrElse(200)
     val probeSample = args.lift(2).map(_.toInt).getOrElse(64)
     val dupPpm = args.lift(3).map(_.toLong).getOrElse(DefaultDupPpm)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+    val spark = graft.Session.local(cpus)
       .config("spark.sql.files.maxPartitionBytes", "1m")
       .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, dir, graphSample, probeSample, dupPpm)

@@ -26,11 +26,7 @@ object SpoolRate {
 
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(8000)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, n)
     finally spark.stop()

@@ -29,6 +29,26 @@ class ReliabilitySpec extends AnyFunSuite {
     assert(cb.allow)
   }
 
+  test("circuit breaker counts a batch of more than Int.MaxValue errors") {
+    val cb = new CircuitBreaker(errorThreshold = 10, windowMillis = 1000, clock = () => 0L)
+    assert(!cb.recordErrors(0L))
+    assert(cb.recordErrors(3000000000L))
+    assert(!cb.allow)
+  }
+
+  test("circuit breaker window count saturates instead of wrapping (two Int.MaxValue batches)") {
+    val cb = new CircuitBreaker(errorThreshold = Int.MaxValue, windowMillis = 1000, clock = () => 0L)
+    assert(!cb.recordErrors(1)) // below threshold
+    cb.recordErrors(Int.MaxValue)
+    cb.recordErrors(Int.MaxValue)
+    assert(!cb.allow)
+    val top = new CircuitBreaker(errorThreshold = 10, windowMillis = 1000, clock = () => 0L)
+    top.recordErrors(1)
+    assert(top.recordErrors(Long.MaxValue)) // 1 + Long.MaxValue saturates
+    val neg = intercept[IllegalArgumentException](top.recordErrors(-1L))
+    assert(neg.getMessage.contains("negative error count"))
+  }
+
   test("token bucket: capacity then refusal then refill (rate_limit.go:49-75)") {
     val clock = new FakeClock()
     val tb = new TokenBucket(capacity = 3, refillEveryMillis = 100, clock = () => clock.now)

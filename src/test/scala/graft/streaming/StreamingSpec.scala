@@ -279,6 +279,19 @@ class StreamingSpec extends SparkSpec {
     assert(main.size == 3)
   }
 
+  test("guarded sink writers may close over driver-only handles (filters do not ship the sink)") {
+    final class DriverHandle { val rows = collection.mutable.ArrayBuffer[Ev]() } // not Serializable
+    val handle = new DriverHandle
+    val dlq = collection.mutable.ArrayBuffer[Ev]()
+    val sink = GuardedBatchSink[Ev](new CircuitBreaker(errorThreshold = 100, windowMillis = 1000),
+      (ds, _) => handle.rows ++= ds.collect(),
+      (ds, _) => dlq ++= ds.collect(),
+      isError = _.event_type == "error")
+    sink(spark.createDataset(Seq(ev(1, 0), ev(2, 0, typ = "error"), ev(3, 0))), 0L)
+    assert(handle.rows.map(_.event_id).sorted == Seq(1L, 3L))
+    assert(dlq.map(_.event_id) == Seq(2L))
+  }
+
   test("blackout window diverts whole batches to the backup sink (F2/F3)") {
     var now = 0L
     val cb = new CircuitBreaker(errorThreshold = 100, windowMillis = 1000, clock = () => now)
