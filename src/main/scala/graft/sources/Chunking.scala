@@ -65,20 +65,4 @@ object Chunking {
       }
     }
   }
-
-  /** The receiver-side inverse of [[chunks]], shared by every relay
-    * ingest (socket, WebSocket, NATS): split one unwrapped NDJSON body
-    * back into records and append them to the source buffer. One lock per
-    * BODY (not per record) because MemoryStream's row encoder is not
-    * thread-safe across the per-connection/per-message callback threads
-    * (see TlsNdjsonJack.serve) — keeping that rule in one place is the
-    * point of this helper. */
-  def feedNdjson(stream: org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String],
-                 counter: java.util.concurrent.atomic.AtomicLong)
-                (body: Array[Byte]): Unit = {
-    val lines = new String(body, UTF_8).split("\n").iterator.filter(_.nonEmpty)
-    stream.synchronized {
-      lines.foreach { l => stream.addData(l); counter.incrementAndGet() }
-    }
-  }
 }

@@ -3,12 +3,11 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, IOException}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** HTTP/2 wire layer for the gRPC relay edge — prior-knowledge framing
@@ -547,7 +546,8 @@ object GrpcRelay {
   * as the socket/WS/NATS edges; this class owns only the HTTP/2
   * transport: preface, SETTINGS, flow-control credits, HEADERS routing,
   * per-stream gRPC message reassembly, trailers. Streams multiplex —
-  * a stock gRPC client may interleave several on one connection. */
+  * a stock gRPC client may interleave several on one connection.
+  * Records land in an [[Ingress]] buffer (memory mode). */
 final class GrpcRelayReceiver(spark: SparkSession, port: Int,
                               key: Option[Array[Byte]] = None,
                               maxMessageBytes: Int = SealedRelay.DefaultMaxFrameBytes,
@@ -563,10 +563,7 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
   require(mtls.isEmpty || tls.isDefined,
     "mTLS policy requires a TLS server config")
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
+  private val ingress = new Ingress(spark)
   // TLS arm = the reference receiving relay's default posture
   // (`receivingrelay/tls.go`, `auth_options.go:14-24`): terminate TLS
   // with ALPN h2, require + verify a client certificate when `mtls` is
@@ -575,30 +572,14 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
     case Some(cfg) => Tls.serverSocket(cfg, port, mtls)
     case None => new ServerSocket(port)
   }
-  private val running = new AtomicBoolean(true)
-  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
-  private val received = new AtomicLong(0)
   private val badFrames = new AtomicLong(0)
   private val rejectedPeers = new AtomicLong(0)
   private val admittedPeers = new AtomicLong(0)
 
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running.get() && !server.isClosed) {
-      try {
-        val sock = server.accept()
-        conns.add(sock)
-        val t = new Thread(() => serve(sock), s"graft-grpcrelay-conn-${sock.getPort}")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable => if (running.get() && !server.isClosed) Thread.sleep(100)
-      }
-    }
-  }, "graft-grpcrelay-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val accepts = new AcceptLoop(server, "graft-grpcrelay")(serve)
+  accepts.start()
 
   /** Per-stream request state. */
   private final class StreamState(val id: Int) {
@@ -700,7 +681,7 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
       }
       def newSession(s: StreamState): RelayProto.EnvelopeSession =
         new RelayProto.EnvelopeSession(key, maxInflatedBytes, ackMode,
-          Chunking.feedNdjson(stream, received),
+          ingress.feed,
           a => try sendMessage(s, RelayProto.encodeAck(a))
           catch { case _: IOException => () })
 
@@ -863,7 +844,7 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
         }
       }
 
-      while (more && running.get()) {
+      while (more && accepts.isRunning) {
         pumpOnce()
         processPending()
       }
@@ -874,29 +855,20 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
         // leaves the socket closed by JSSE itself, so the frame counter's
         // !isClosed arm would swallow real rejections here.
         if (!admitted) {
-          if (running.get()) rejectedPeers.incrementAndGet()
-        } else if (running.get() && !sock.isClosed) badFrames.incrementAndGet()
-    } finally {
-      conns.remove(sock)
-      try sock.close() catch { case _: Throwable => () }
+          if (accepts.isRunning) rejectedPeers.incrementAndGet()
+        } else if (accepts.isRunning && !sock.isClosed) badFrames.incrementAndGet()
     }
   }
 
   /** Raw ingress stream (one string per received record). */
-  def raw: Dataset[String] = stream.toDS()
+  def raw: Dataset[String] = ingress.raw
 
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def badFrameCount: Long = badFrames.get()
   def admittedCount: Long = admittedPeers.get()
   def rejectedCount: Long = rejectedPeers.get()
 
-  def stop(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-    conns.forEach(s => try s.close() catch { case _: Throwable => () })
-    conns.clear()
-  }
+  def stop(): Unit = accepts.stop()
 }

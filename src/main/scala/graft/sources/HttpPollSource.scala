@@ -7,8 +7,6 @@ import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.reliability.Backoff
@@ -133,9 +131,9 @@ object Http {
 /** S3 HTTP poll source: the reference's interval-polling HTTP adapter
   * (`/root/reference/pkg/internal/adapter/httpclient/serve.go:13-67`,
   * `attemptFetchAndSubmit` retry loop) re-expressed for Spark's micro-batch
-  * model — a DRIVER-side fetch loop appends each poll's records to a
-  * [[MemoryStream]], which any Structured Streaming query consumes like any
-  * other source (watermarks, stateful ops, checkpointed sinks all apply
+  * model — a DRIVER-side fetch loop appends each poll's records to an
+  * [[Ingress]] buffer, which any Structured Streaming query consumes like
+  * any other source (watermarks, stateful ops, checkpointed sinks all apply
   * downstream).
   *
   * Driver-side by design: an HTTP poll of one endpoint is inherently a
@@ -151,11 +149,8 @@ object Http {
   * stops the poller and records the failure (`serve.go` returns the error),
   * leaving already-buffered records readable.
   *
-  * Restart contract: the source buffer is a MemoryStream, which does NOT
-  * survive driver restart — records buffered but not yet processed by the
-  * query are lost with the JVM, and recovery is re-poll-from-endpoint,
-  * not checkpoint replay. The checkpoint-recoverable edge is the file
-  * stream (FileStreamSpec's kill/restart test asserts its exactly-once).
+  * Restart contract: [[Ingress]]'s memory mode — recovery is
+  * re-poll-from-endpoint.
   *
   * @param fetch     transport thunk, e.g. `() => Http.get(url)`; injectable
   *                  so tests can stub the endpoint.
@@ -171,33 +166,26 @@ final class HttpPollSource(
     sleep: Long => Unit = Thread.sleep) {
   require(intervalMillis > 0, "interval must be greater than zero")
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
+  private val ingress = new Ingress(spark)
   private val scheduler = new AtomicReference[ScheduledExecutorService](null)
   private val polls = new AtomicLong(0)
-  private val records = new AtomicLong(0)
   private val failed = new AtomicReference[Throwable](null)
 
   /** Raw record stream (one string per fetched record). */
-  def raw: Dataset[String] = stream.toDS()
+  def raw: Dataset[String] = ingress.raw
 
-  /** Typed stream: each record JSON-decoded to `schema` fields (blank or
-    * unparseable records dropped — see [[Sources.jsonLines]]). */
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  /** Typed stream: each record JSON-decoded to `schema` fields. */
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
   /** One synchronous fetch-with-retry; appends decoded records to the
     * stream buffer. Returns the number of records appended. Public as the
     * deterministic test/backfill hook — `start()` just calls this on the
-    * interval. */
+    * interval, and concurrent calls are safe. */
   def pollOnce(): Int = {
     val body = Backoff.retry(attempts = attempts, sleep = sleep)(fetch)
     val recs = decode(body)
-    if (recs.nonEmpty) stream.addData(recs)
+    ingress.offerAll(recs)
     polls.incrementAndGet()
-    records.addAndGet(recs.length)
     recs.length
   }
 
@@ -223,12 +211,13 @@ final class HttpPollSource(
 
   def isServing: Boolean = scheduler.get() != null
   def pollCount: Long = polls.get()
-  def recordCount: Long = records.get()
+  def recordCount: Long = ingress.receivedCount
   def failure: Option[Throwable] = Option(failed.get())
 }
 
 object HttpPollSource {
-  /** NDJSON body → records: non-empty lines. */
+  /** NDJSON body → records: non-empty lines, LF or CRLF separated — the
+    * one NDJSON splitter (the relay feed, [[Ingress.feed]], uses it too). */
   val ndjsonLines: String => Seq[String] =
     body => body.split("\\r?\\n").toSeq.filter(_.nonEmpty)
 

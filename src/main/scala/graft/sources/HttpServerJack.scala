@@ -7,7 +7,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer, HttpsConfigurator, HttpsParameters, HttpsServer}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** S9 HTTP server jack with real HTTP/1.1 framing — the reference's
@@ -40,30 +39,17 @@ import org.apache.spark.sql.types.StructType
   * Driver-ingress like the reference's single listener; control-plane
   * sized — high-volume edges stay Kafka/files (SURVEY §2.1).
   *
-  * Restart contract, selected by `spoolDir`:
-  *  - `None` (default): accepted records feed a MemoryStream, which does
-  *    NOT survive restart — replay-from-peer (the documented jack
-  *    contract; see FileStreamSpec for the recoverable edge).
-  *  - `Some(dir)`: RECOVERABLE mode — each accepted record is spooled as
-  *    one atomically-renamed NDJSON file BEFORE the 2xx response, and
-  *    [[raw]]/[[jsonStream]] read the directory through Spark's
-  *    checkpointable file source, so a restarted query resumes from its
-  *    checkpoint and processes every spooled record exactly once
-  *    (HttpServerJackSpec kills and restarts the query mid-backlog).
-  *    The peer side stays at-least-once: a crash between the durable
-  *    write and the response makes the peer retry an already-spooled
-  *    record — dedupe downstream (A7) if double-submits matter. One file
-  *    per record is the default (no batching latency; ~130-140 req/s
-  *    per writer, fsync-bound — graft.tools.SpoolRate); reclaim
-  *    processed spool files periodically with [[Spool.retire]] (the
-  *    spool lifecycle is retention, not compaction — see its scaladoc).
-  *  - `spoolSegment = Some(policy)` switches the spool to BLOCKING group
-  *    commit ([[Spool.SegmentWriter.appendSync]]): each 2xx still waits
-  *    for ITS record to be durable (the ack contract is unchanged,
-  *    unlike the WS jacks' fire-and-forget segment mode), but concurrent
-  *    requests share one hsync+rename, so throughput amortizes with
-  *    concurrency — size `poolThreads` to the expected in-flight
-  *    requests, since the batch can never exceed the pool.
+  * Restart contract: [[Ingress]]'s, selected by `spoolDir` and
+  * `spoolSegment`. Every mode answers the 2xx only once the record is
+  * durable in its buffer ([[Ingress.offerAcked]]; segment mode is
+  * BLOCKING group commit here, so concurrent requests share one
+  * hsync+rename — size `poolThreads` to the expected in-flight requests,
+  * since the batch can never exceed the pool). The peer side stays
+  * at-least-once: a crash between the durable write and the response
+  * makes the peer retry an already-spooled record — dedupe downstream
+  * (A7) if double-submits matter. HttpServerJackSpec kills and restarts
+  * the query mid-backlog; reclaim processed spool files with
+  * [[Spool.retire]].
   */
 final class HttpServerJack(
     spark: SparkSession,
@@ -89,20 +75,8 @@ final class HttpServerJack(
   // half-configured security must fail fast, not silently downgrade
   // (same rule as SealedRelay.validate's key/flag lockstep)
   require(tls.isDefined || mtls.isEmpty, "mtls requires a TlsConfig (tls = Some(...))")
-  require(spoolSegment.isEmpty || spoolDir.isDefined,
-    "spoolSegment requires a spoolDir")
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
-  private val spoolFs = spoolDir.map(d => Spool.open(spark, d))
-  // group commit: appendSync blocks each request until its batch lands,
-  // so the 2xx path counts/responds itself — the callback is a no-op
-  private val segmentWriter = for {
-    (fs, root) <- spoolFs; p <- spoolSegment
-  } yield new Spool.SegmentWriter(fs, root, p, _ => ())
-  private val received = new AtomicLong(0)
+  private val ingress = new Ingress(spark, spoolDir, spoolMaxFilesPerTrigger, spoolSegment)
   private val rejected = new AtomicLong(0)
   private val badRequests = new AtomicLong(0)
   private val softFailures = new AtomicLong(0)
@@ -215,25 +189,10 @@ final class HttpServerJack(
             respond(ex, 400, s"Error parsing request: ${e.getMessage}")
             return
         }
-      spoolFs match {
-        case Some((fs, root)) =>
-          // durable FIRST, respond after: a crash between the two makes
-          // the peer retry an already-spooled record (at-least-once on
-          // the wire); an acknowledged record survives any JVM/process
-          // crash (see Spool.writeRecord for the hsync power-loss caveat).
-          // A failed write falls to the outer catch -> 500, peer retries.
-          // appendSync preserves exactly that contract in segment mode:
-          // it returns only after THIS record's batch landed.
-          segmentWriter match {
-            case Some(w) => w.appendSync(line)
-            case None => Spool.writeRecord(fs, root, line)
-          }
-        case None =>
-          // MemoryStream's row encoder is not thread-safe across the
-          // pool's request threads (see TlsNdjsonJack.serve)
-          stream.synchronized { stream.addData(line) }
-      }
-      received.incrementAndGet()
+      // durable FIRST, respond after (see Spool.writeRecord for the
+      // hsync power-loss caveat); a failed write falls to the outer
+      // catch -> 500, and the peer retries
+      ingress.offerAcked(line)
       respond(ex, responseStatus, "", responseHeaders)
     } catch {
       case _: Throwable =>
@@ -257,18 +216,12 @@ final class HttpServerJack(
     buf.toByteArray
   }
 
-  /** Raw ingress stream (one compact JSON string per accepted request):
-    * the checkpoint-recoverable file source over the spool dir in
-    * recoverable mode, the MemoryStream otherwise. */
-  def raw: Dataset[String] = spoolDir match {
-    case Some(dir) => Spool.readStream(spark, dir, spoolMaxFilesPerTrigger)
-    case None => stream.toDS()
-  }
+  /** Raw ingress stream (one compact JSON string per accepted request). */
+  def raw: Dataset[String] = ingress.raw
 
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def rejectedCount: Long = rejected.get()
   def badRequestCount: Long = badRequests.get()
   def softFailureCount: Long = softFailures.get()
@@ -285,6 +238,7 @@ final class HttpServerJack(
     // segment ack deadline, or a quiet-period waiter gets its
     // connection cut under an ack that then arrives. shutdownNow is
     // only the hung-handler fallback after the deadline has passed.
+    val segmentWriter = ingress.segmentWriter
     val drainSeconds =
       segmentWriter.map(w => (w.ackTimeoutMs / 1000L + 5).toInt).getOrElse(5)
     server.stop(drainSeconds)
@@ -316,6 +270,6 @@ final class HttpServerJack(
     while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.SECONDS) &&
       keepWaiting) ()
     if (!pool.isTerminated) pool.shutdownNow()
-    segmentWriter.foreach(_.close()) // flush the tail; LOUD on failure
+    ingress.close() // flush the tail; LOUD on failure
   }
 }

@@ -7,7 +7,6 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDown
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** S12 NATS relay transport — the reference's NATS forward/receiving relay
@@ -389,13 +388,13 @@ object NatsRelay {
   * and every subscriber gets a copy), proto-decode each message as a
   * WrappedPayload, unwrap per its declared sealing, split the NDJSON batch
   * and feed a streaming source buffer — the reference's `onMsg` loop
-  * (`natsrelay/receiving.go:126-143`) with MemoryStream in place of the
+  * (`natsrelay/receiving.go:126-143`) with an [[Ingress]] in place of the
   * output submitters. A message that fails the GCM tag or proto decode
   * counts in [[badMessageCount]] WITHOUT dropping the subscription (NATS
   * delivery is per-message; there is no connection-poisoning frame stream
-  * like the socket edge). Restart contract: MemoryStream does not survive
-  * driver restart, and core NATS does not replay — this edge is
-  * monitoring/live-feed grade, the durable edge is the file stream. */
+  * like the socket edge). Restart contract: [[Ingress]]'s memory mode,
+  * and core NATS does not replay — this edge is monitoring/live-feed
+  * grade. */
 final class NatsReceivingRelay(spark: SparkSession, host: String, port: Int,
                                subject: String,
                                queue: Option[String] = None,
@@ -405,11 +404,7 @@ final class NatsReceivingRelay(spark: SparkSession, host: String, port: Int,
   key.foreach(k => require(Set(16, 24, 32).contains(k.length),
     s"AES key must be 16/24/32 bytes, got ${k.length}"))
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
-  private val received = new AtomicLong(0)
+  private val ingress = new Ingress(spark)
   private val badMessages = new AtomicLong(0)
 
   private val conn = new NatsConnection(host, port,
@@ -417,19 +412,18 @@ final class NatsReceivingRelay(spark: SparkSession, host: String, port: Int,
   private val sid = conn.subscribe(subject, queue) { (_, _, payload) =>
     try {
       val body = RelayProto.unwrap(RelayProto.decode(payload), key, maxInflatedBytes)
-      Chunking.feedNdjson(stream, received)(body)
+      ingress.feed(body)
     } catch {
       case _: Throwable => badMessages.incrementAndGet()
     }
   }
 
   /** Raw ingress stream (one string per received record). */
-  def raw: Dataset[String] = stream.toDS()
+  def raw: Dataset[String] = ingress.raw
 
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def badMessageCount: Long = badMessages.get()
   def lastError: Option[String] = conn.lastError
 

@@ -3,10 +3,9 @@ package graft.sources
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** Sealed relay pair — the reference forward/receiving relay's
@@ -331,16 +330,14 @@ object SealedRelay {
   * (decrypt → decompress) per frame flags, split the NDJSON batch into
   * records, and feed a streaming source buffer — the reference's
   * receiving-relay unwrap loop (`receivingrelay/receive.go:13-97`) with
-  * MemoryStream in place of the output submitters. A frame that fails
+  * an [[Ingress]] in place of the output submitters. A frame that fails
   * the GCM tag (wrong key) or the magic check drops that connection and
   * counts it; good frames from other peers are unaffected. Compose with
   * [[TlsNdjsonJack]]'s `Tls.serverSocket` for mTLS-on-the-wire — payload
   * sealing and transport auth are independent layers, as in the
-  * reference's SecurityOptions vs TLSConfig split. Restart contract: the
-  * buffer is a MemoryStream, which does NOT survive driver restart —
-  * recovery is replay-from-peer (the writer's per-batch at-least-once),
-  * not checkpoint replay; the checkpoint-recoverable edge is the file
-  * stream (FileStreamSpec's kill/restart test).
+  * reference's SecurityOptions vs TLSConfig split. Restart contract:
+  * [[Ingress]]'s memory mode — replay-from-peer (the writer's per-batch
+  * at-least-once).
   *
   * `ackMode` is the reference's ack-mode config (per-message / batch /
   * none, `receivingrelay/receive.go` ack dispatch) for PROTO-envelope
@@ -360,33 +357,14 @@ final class SealedReceivingRelay(spark: SparkSession, port: Int,
   require(Set("none", "per-frame", "batch").contains(ackMode),
     s"unknown ackMode '$ackMode' — none | per-frame | batch")
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
+  private val ingress = new Ingress(spark)
   private val server = new ServerSocket(port)
-  private val running = new AtomicBoolean(true)
-  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
-  private val received = new AtomicLong(0)
   private val badFrames = new AtomicLong(0)
 
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running.get() && !server.isClosed) {
-      try {
-        val sock = server.accept()
-        conns.add(sock)
-        val t = new Thread(() => serve(sock), s"graft-sealed-conn-${sock.getPort}")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable => if (running.get() && !server.isClosed) Thread.sleep(100)
-      }
-    }
-  }, "graft-sealed-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val accepts = new AcceptLoop(server, "graft-sealed")(serve)
+  accepts.start()
 
   private def serve(sock: Socket): Unit = {
     try {
@@ -402,13 +380,13 @@ final class SealedReceivingRelay(spark: SparkSession, port: Int,
       def sendAck(a: RelayProto.StreamAck): Unit =
         try SealedRelay.writeFrame(ackOut, SealedRelay.FlagAck, RelayProto.encodeAck(a))
         catch { case _: java.io.IOException => peerGone = true }
-      val feed: Array[Byte] => Unit = Chunking.feedNdjson(stream, received)
+      val feed: Array[Byte] => Unit = ingress.feed
       // envelope/ack semantics live in the shared session — this loop owns
       // only the socket framing and the legacy flag-framed path
       val session = new RelayProto.EnvelopeSession(key, maxInflatedBytes,
         ackMode, feed, sendAck)
       var more = true
-      while (more && running.get()) {
+      while (more && accepts.isRunning) {
         SealedRelay.readFrame(in, maxFrameBytes) match {
           case Some((flags, payload)) =>
             if ((flags & SealedRelay.FlagProto) != 0) {
@@ -427,26 +405,17 @@ final class SealedReceivingRelay(spark: SparkSession, port: Int,
       // but a socket torn down by OUR stop() is not the peer's fault and
       // must not pollute the diagnostic counter
       case _: Throwable =>
-        if (running.get() && !sock.isClosed) badFrames.incrementAndGet()
-    } finally {
-      conns.remove(sock)
-      try sock.close() catch { case _: Throwable => () }
+        if (accepts.isRunning && !sock.isClosed) badFrames.incrementAndGet()
     }
   }
 
   /** Raw ingress stream (one string per received record). */
-  def raw: Dataset[String] = stream.toDS()
+  def raw: Dataset[String] = ingress.raw
 
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def badFrameCount: Long = badFrames.get()
 
-  def stop(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-    conns.forEach(s => try s.close() catch { case _: Throwable => () })
-    conns.clear()
-  }
+  def stop(): Unit = accepts.stop()
 }

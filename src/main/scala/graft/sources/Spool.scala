@@ -5,18 +5,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** Durable-ingress spool shared by the push-transport jacks (HTTP server
-  * r7, WebSocket client/server r15).
-  *
-  * Push transports can't checkpoint a server-side cursor the way the
-  * poll-loop sources do (`graft-s3`/`graft-jdbc`/`graft-http`): once a
-  * frame is read off the socket, the transport forgets it. The honest
-  * durable form is therefore write-ahead: each accepted record lands as
-  * ONE atomically-renamed NDJSON file BEFORE the ingress path
-  * acknowledges it (HTTP 2xx) or counts it received (WS, which has no
-  * app-level ack), and consumers read the directory through Spark's
-  * checkpointable file source — a restarted query resumes from its
-  * checkpoint and processes every spooled record exactly once.
+/** Durable-ingress spool behind [[Ingress]]'s spool modes (the restart
+  * contract is stated there). Push transports can't checkpoint a
+  * server-side cursor the way the poll-loop sources do
+  * (`graft-s3`/`graft-jdbc`/`graft-http`): once a frame is read off the
+  * socket, the transport forgets it, so the durable form is write-ahead.
   *
   * One file per record is the control-plane trade (no flusher thread, no
   * batching latency — these edges are notification-sized; the
@@ -258,16 +251,10 @@ object Spool {
     * `maxRecords × flush rate`.
     *
     * The durability trade vs per-record mode depends on the append
-    * flavor:
-    *  - [[append]] (fire-and-forget, the WS jacks): a crash loses the
-    *    UNFLUSHED tail (≤ maxRecords or maxDelayMillis worth) — the
-    *    same loss class as WS frames in flight at the kill; the
-    *    transport has no app-level ack to gate on anyway.
-    *  - [[appendSync]] (blocking, the HTTP jack's group commit): the
-    *    caller returns only after ITS batch landed, so an acknowledged
-    *    record is exactly as durable as per-record mode — concurrent
-    *    requests share one hsync (classic WAL group commit) and the
-    *    per-request cost amortizes with concurrency.
+    * flavor — fire-and-forget [[append]] loses the unflushed tail on a
+    * crash, blocking [[appendSync]] is exactly as durable as per-record
+    * mode (see [[Ingress]]); concurrent appendSync callers share one
+    * hsync (classic WAL group commit).
     *
     * A failed segment write is RETRIED in place with bounded backoff
     * (`flushAttempts` total tries, `flushRetryBackoffMillis × attempt`

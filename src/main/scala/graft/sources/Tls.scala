@@ -8,13 +8,12 @@ import java.security.{KeyFactory, KeyStore, PrivateKey}
 import java.security.cert.{CertificateFactory, X509Certificate}
 import java.security.spec.PKCS8EncodedKeySpec
 import java.util.Base64
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import javax.net.ssl.{KeyManagerFactory, SNIHostName, SSLContext, SSLParameters,
   SSLServerSocket, SSLSocket, TrustManagerFactory}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** TLS / mTLS for the socket edge adapters — the transport-security half
@@ -278,49 +277,26 @@ object Tls {
   * only [[MtlsOptions]]-authorized principals — the reference's
   * mTLS-guarded receiving relay / server jack
   * (`receivingrelay/auth_options.go:14-24`, `jack/httpserver/auth`).
-  * Accepted lines land in a [[MemoryStream]] exactly like [[WsServerHub]];
-  * rejected peers are dropped at handshake/authorization and counted.
-  * Driver-ingress by design (control-plane edge; bulk edges stay
-  * Kafka/files — see [[Sources.socketNdjsonStream]]'s scope note).
-  * Restart contract: MemoryStream-buffered — does NOT survive driver
-  * restart; recovery is replay-from-peer, not checkpoint replay (the
-  * recoverable edge is the file stream, FileStreamSpec). */
+  * Accepted non-empty lines land in an [[Ingress]] buffer (memory mode —
+  * replay-from-peer); rejected peers are dropped at
+  * handshake/authorization and counted. Driver-ingress by design
+  * (control-plane edge; bulk edges stay Kafka/files — see
+  * [[Sources.socketNdjsonStream]]'s scope note). */
 final class TlsNdjsonJack(spark: SparkSession, port: Int, cfg: TlsConfig,
                           mtls: MtlsOptions = MtlsOptions()) {
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
+  private val ingress = new Ingress(spark)
   private val server = Tls.serverSocket(cfg, port, Some(mtls))
-  private val running = new AtomicBoolean(true)
-  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
-  private val received = new AtomicLong(0)
   private val rejectedPeers = new AtomicLong(0)
   private val admittedPeers = new AtomicLong(0)
 
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running.get() && !server.isClosed) {
-      try {
-        val sock = server.accept().asInstanceOf[SSLSocket]
-        conns.add(sock)
-        val t = new Thread(() => serve(sock), s"graft-tls-conn-${sock.getPort}")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        // closed during accept = shutdown (loop condition exits); any
-        // other persistent failure (e.g. FD exhaustion) must not become
-        // a 100% busy-spin — back off before retrying
-        case _: Throwable => if (running.get() && !server.isClosed) Thread.sleep(100)
-      }
-    }
-  }, "graft-tls-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val accepts = new AcceptLoop(server, "graft-tls")(serve)
+  accepts.start()
 
-  private def serve(sock: SSLSocket): Unit = {
+  private def serve(peer: Socket): Unit = {
+    val sock = peer.asInstanceOf[SSLSocket]
     var admitted = false
     try {
       sock.startHandshake() // rejects certs the CA didn't sign
@@ -329,44 +305,26 @@ final class TlsNdjsonJack(spark: SparkSession, port: Int, cfg: TlsConfig,
       admittedPeers.incrementAndGet()
       val in = new BufferedReader(new InputStreamReader(sock.getInputStream, UTF_8))
       var line = in.readLine()
-      while (line != null && running.get()) {
-        if (line.nonEmpty) {
-          // MemoryStream's row encoder is NOT thread-safe: concurrent
-          // addData from per-connection threads corrupts stored rows
-          // (observed as duplicated/overwritten values). One lock across
-          // all connections; ingestion here is control-plane sized.
-          stream.synchronized { stream.addData(line) }
-          received.incrementAndGet()
-        }
+      while (line != null && accepts.isRunning) {
+        if (line.nonEmpty) ingress.offer(line)
         line = in.readLine()
       }
     } catch {
       // handshake/authorization failure = rejected peer; an admitted
       // peer's mid-stream connection failure just drops that peer
       case _: Throwable => if (!admitted) rejectedPeers.incrementAndGet()
-    } finally {
-      conns.remove(sock)
-      try sock.close() catch { case _: Throwable => () }
     }
   }
 
   /** Raw ingress stream (one string per received line). */
-  def raw: Dataset[String] = stream.toDS()
+  def raw: Dataset[String] = ingress.raw
 
   /** Typed ingress: each line JSON-decoded to `schema` fields. */
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def admittedCount: Long = admittedPeers.get()
   def rejectedCount: Long = rejectedPeers.get()
 
-  def stop(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-    // close live peer connections too, or their reader threads (blocked
-    // in readLine) and sockets outlive the jack for the JVM's life
-    conns.forEach(s => try s.close() catch { case _: Throwable => () })
-    conns.clear()
-  }
+  def stop(): Unit = accepts.stop()
 }

@@ -8,7 +8,6 @@ import java.util.concurrent.{ConcurrentHashMap, CompletionStage, TimeUnit}
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** WebSocket edge adapters (SURVEY §2.1 S8/S10, §2.6 K6) on JDK-only
@@ -19,7 +18,7 @@ import org.apache.spark.sql.types.StructType
   *  - [[WsServerHub]] (S10 server jack + K6 broadcast): a real
   *    protocol-terminating listener — HTTP Upgrade handshake, masked
   *    client-frame decode, ping/pong, close handshake — that feeds
-  *    received text messages into a [[MemoryStream]] exactly like
+  *    received text messages into an [[Ingress]] buffer exactly like
   *    [[HttpPollSource]], and can push text frames to every connected
   *    peer (the reference's WS broadcast server,
   *    `/root/reference/pkg/internal/adapter/wsserver/serve.go`,
@@ -27,7 +26,7 @@ import org.apache.spark.sql.types.StructType
   *  - [[WsClientSource]] (S8 client): `java.net.http.HttpClient`'s
   *    built-in RFC 6455 client (an INDEPENDENT protocol implementation —
   *    its handshake/masking validating against our server is part of the
-  *    e2e test's point), buffering server-pushed messages into a
+  *    e2e test's point), buffering server-pushed messages into an [[Ingress]]
   *    MemoryStream (`/root/reference/pkg/internal/adapter/
   *    websocketclient/serve.go:14-45`).
   *
@@ -174,32 +173,16 @@ object WsFrames {
   * pushed to every connected peer). `port = 0` binds an ephemeral port
   * (see [[boundPort]]).
   *
-  * Restart contract, selected by `spoolDir` (the HTTP jack's r7
-  * treatment, shared via [[Spool]]):
-  *  - `None` (default): received messages feed a MemoryStream, which
-  *    does NOT survive driver restart — replay-from-peer.
-  *  - `Some(dir)`: RECOVERABLE mode — each completed text message must
-  *    be one JSON OBJECT (the reference jack's decode contract,
-  *    `jack/websocket/codec.go`; non-JSON drops the peer loudly), is
-  *    re-rendered compact, and is spooled as one atomically-renamed
-  *    NDJSON file BEFORE it is counted received; [[raw]]/[[jsonStream]]
-  *    read the directory through the checkpointable file source: a
-  *    restarted query resumes from its checkpoint and ships every
-  *    spooled message exactly once
-  *    (WebSocketSpec kills and restarts the query mid-backlog). WS has
-  *    no app-level ack, so the peer-side guarantee is weaker than the
-  *    HTTP jack's: a message in flight when the process dies is lost
-  *    (the peer only learns via the dropped connection) — but every
-  *    message the hub COUNTED RECEIVED before the kill survives. A
-  *    spool-write failure drops the connection (loud, so the peer
-  *    reconnects and resends) instead of buffering in memory.
-  *  - `spoolSegment = Some(policy)` additionally switches the spool to
-  *    GROUP COMMIT ([[Spool.SegmentWriter]]): many messages per
-  *    atomically-renamed segment file, counted received at the flush —
-  *    the measured per-record bound (~140 rec/s/writer,
-  *    graft.tools.SpoolRate) amortizes to thousands/s, at the cost of a
-  *    crash losing the unflushed tail (≤ policy bounds — the same loss
-  *    class as frames in flight, which WS cannot ack anyway).
+  * Restart contract: [[Ingress]]'s, selected by `spoolDir` and
+  * `spoolSegment` (segment mode is fire-and-forget here — WS has no
+  * app-level ack). In the spool modes each completed text message must
+  * be one JSON OBJECT (the reference jack's decode contract,
+  * `jack/websocket/codec.go`) and is re-rendered compact
+  * ([[Spool.jsonLine]]); non-JSON or a spool-write failure drops the
+  * peer loudly, so it reconnects and resends. A message in flight when
+  * the process dies is lost (the peer only learns via the dropped
+  * connection), but every message the hub COUNTED RECEIVED survives
+  * (WebSocketSpec kills and restarts the query mid-backlog).
   *
   * Security (the reference jack's upgrade-time stack, `jack/websocket/
   * tls.go` + `auth.go`/`auth_policy.go`): `tls` terminates TLS on the
@@ -224,20 +207,8 @@ final class WsServerHub(spark: SparkSession, port: Int,
   // half-configured security must fail fast, not silently downgrade
   // (the HttpServerJack rule)
   require(tls.isDefined || mtls.isEmpty, "mtls requires a TlsConfig (tls = Some(...))")
-  require(spoolSegment.isEmpty || spoolDir.isDefined,
-    "spoolSegment requires a spoolDir")
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
-  private val spoolFs = spoolDir.map(d => Spool.open(spark, d))
-  private val received = new AtomicLong(0)
-  // group-commit spool (see Spool.SegmentWriter): the flusher owns the
-  // received count — a record is counted only once its bytes landed
-  private val segmentWriter = for {
-    (fs, root) <- spoolFs; p <- spoolSegment
-  } yield new Spool.SegmentWriter(fs, root, p, n => { received.addAndGet(n); () })
+  private val ingress = new Ingress(spark, spoolDir, spoolMaxFilesPerTrigger, spoolSegment)
   private val server: ServerSocket = tls match {
     case Some(cfg) =>
       val s = Tls.sslContext(cfg).getServerSocketFactory
@@ -247,7 +218,7 @@ final class WsServerHub(spark: SparkSession, port: Int,
       s
     case None => new ServerSocket(port)
   }
-  private val running = new AtomicBoolean(true)
+  // upgraded peers only: the broadcast targets
   private val conns = new ConcurrentHashMap[Socket, OutputStream]()
   private val broadcastCount = new AtomicLong(0)
   private val rejected = new AtomicLong(0)
@@ -255,22 +226,8 @@ final class WsServerHub(spark: SparkSession, port: Int,
 
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running.get() && !server.isClosed) {
-      try {
-        val sock = server.accept()
-        val t = new Thread(() => serve(sock), s"graft-ws-conn-${sock.getPort}")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        // closed during accept = shutdown (loop condition exits); other
-        // persistent failures (FD exhaustion) back off instead of spinning
-        case _: Throwable => if (running.get() && !server.isClosed) Thread.sleep(100)
-      }
-    }
-  }, "graft-ws-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val accepts = new AcceptLoop(server, "graft-ws")(serve)
+  accepts.start()
 
   /** Per-connection: HTTP Upgrade handshake, then the frame loop. A text
     * message buffers continuation frames until FIN, then lands in the
@@ -333,7 +290,7 @@ final class WsServerHub(spark: SparkSession, port: Int,
       // per-fragment decoding would corrupt the straddling character
       val pending = new java.io.ByteArrayOutputStream()
       var open = true
-      while (open && running.get()) {
+      while (open && accepts.isRunning) {
         val f = WsFrames.readFrame(in)
         f.opcode match {
           case WsFrames.OpText | 0x0 =>
@@ -345,31 +302,11 @@ final class WsServerHub(spark: SparkSession, port: Int,
             pending.write(f.payload)
             if (f.fin) {
               val msg = new String(pending.toByteArray, UTF_8)
-              spoolFs match {
-                // durable FIRST, count after: a spool (or normalization)
-                // failure throws to the connection-level catch, dropping
-                // this peer loudly. Spool mode requires one JSON OBJECT
-                // per message (the reference jack's decode contract) and
-                // re-renders it compact — a pretty-printed message would
-                // otherwise split into several rows at the line-oriented
-                // file source and diverge from the MemoryStream contract
-                case Some((fs, root)) =>
-                  val line = Spool.jsonLine(msg)
-                  segmentWriter match {
-                    // segment mode: durable at the group-commit flush,
-                    // which owns the count; a poisoned writer rethrows
-                    // here and drops the peer loudly
-                    case Some(w) => w.append(line)
-                    case None =>
-                      Spool.writeRecord(fs, root, line)
-                      received.incrementAndGet()
-                  }
-                case None =>
-                  // serialize across connection threads: MemoryStream's
-                  // row encoder is not thread-safe (TlsNdjsonJack.serve)
-                  stream.synchronized { stream.addData(msg) }
-                  received.incrementAndGet()
-              }
+              // a normalization or spool failure throws to the
+              // connection-level catch, dropping this peer loudly; a
+              // pretty-printed message would otherwise split into several
+              // rows at the line-oriented file source
+              ingress.offer(if (spoolDir.isDefined) Spool.jsonLine(msg) else msg)
               pending.reset()
             }
           case WsFrames.OpPing =>
@@ -381,20 +318,14 @@ final class WsServerHub(spark: SparkSession, port: Int,
         }
       }
     } catch { case _: Throwable => () } // connection-level failure drops the peer only
-    finally { conns.remove(sock); try sock.close() catch { case _: Throwable => () } }
+    finally conns.remove(sock)
   }
 
-  /** Raw ingress stream (one string per received text message): the
-    * checkpoint-recoverable file source over the spool dir in
-    * recoverable mode, the MemoryStream otherwise. */
-  def raw: Dataset[String] = spoolDir match {
-    case Some(dir) => Spool.readStream(spark, dir, spoolMaxFilesPerTrigger)
-    case None => stream.toDS()
-  }
+  /** Raw ingress stream (one string per received text message). */
+  def raw: Dataset[String] = ingress.raw
 
   /** Typed ingress: each message JSON-decoded to `schema` fields. */
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
   /** K6 broadcast: push each record to every connected peer as one text
     * frame. Returns the number of frames written (records × live peers). A
@@ -421,7 +352,7 @@ final class WsServerHub(spark: SparkSession, port: Int,
   }
 
   def connectionCount: Int = conns.size()
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def broadcastFrames: Long = broadcastCount.get()
   def rejectedCount: Long = rejected.get()
   def softFailureCount: Long = softFailures.get()
@@ -431,17 +362,15 @@ final class WsServerHub(spark: SparkSession, port: Int,
   def registerMeters(m: graft.streaming.MeterListener,
                      prefix: String = "ws_hub"): Unit = {
     m.registerGauge(s"$prefix.connections", () => conns.size().toLong)
-    m.registerGauge(s"$prefix.received", () => received.get())
+    m.registerGauge(s"$prefix.received", () => ingress.receivedCount)
     m.registerGauge(s"$prefix.rejected", () => rejected.get())
     m.registerGauge(s"$prefix.broadcast_frames", () => broadcastCount.get())
   }
 
   def stop(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-    conns.forEach { (sock, _) => try sock.close() catch { case _: Throwable => () } }
+    accepts.stop() // closes every accepted socket, upgraded or not
     conns.clear()
-    segmentWriter.foreach(_.close()) // flush the tail
+    ingress.close()
   }
 }
 
@@ -451,16 +380,11 @@ final class WsServerHub(spark: SparkSession, port: Int,
   * mandatory client-side masking exercise [[WsServerHub]]'s decode path
   * from an independent implementation in the e2e test.
   *
-  * Restart contract, selected by `spoolDir` (shared [[Spool]] path; see
-  * [[WsServerHub]]'s note for the full contract):
-  *  - `None` (default): MemoryStream-buffered — not
-  *    checkpoint-recoverable; recovery is reconnect-and-resubscribe.
-  *  - `Some(dir)`: each completed message is durably spooled before it
-  *    is counted received; consumers resume exactly-once from the file
-  *    source checkpoint. A spool failure aborts the websocket (loud —
-  *    [[closeReason]] carries the error) rather than buffering in
-  *    memory. `spoolSegment` switches to group commit (see
-  *    [[WsServerHub]]'s note — same trade).
+  * Restart contract: [[Ingress]]'s, with the same decode rule as
+  * [[WsServerHub]] in the spool modes (memory mode recovers by
+  * reconnect-and-resubscribe). A spool failure aborts the websocket
+  * (loud — [[closeReason]] carries the error) rather than buffering in
+  * memory.
   *
   * `tls` routes a `wss://` dial through the existing [[TlsConfig]]
   * loader (CA trust + optional client certificate for mTLS — the
@@ -473,23 +397,10 @@ final class WsClientSource(spark: SparkSession, url: String,
                            headers: Map[String, String] = Map.empty,
                            spoolSegment: Option[Spool.SegmentPolicy] = None) {
 
-  require(spoolSegment.isEmpty || spoolDir.isDefined,
-    "spoolSegment requires a spoolDir")
-
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
-  private val spoolFs = spoolDir.map(d => Spool.open(spark, d))
-  private val received = new AtomicLong(0)
-  // group-commit spool (see Spool.SegmentWriter): the flusher owns the
-  // received count — a record is counted only once its bytes landed
-  private val segmentWriter = for {
-    (fs, root) <- spoolFs; p <- spoolSegment
-  } yield new Spool.SegmentWriter(fs, root, p, n => { received.addAndGet(n); () })
+  private val ingress = new Ingress(spark, spoolDir, spoolMaxFilesPerTrigger, spoolSegment)
   private val closed = new AtomicReference[String](null)
   private val ws = new AtomicReference[java.net.http.WebSocket](null)
-  private val userStopped = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val userStopped = new AtomicBoolean(false)
   private val reconnects = new AtomicLong(0)
   // every observed drop bumps this; the supervisor re-dials while its
   // handled count lags. A counter, not the reason STRING: two drops
@@ -505,34 +416,19 @@ final class WsClientSource(spark: SparkSession, url: String,
       pending.append(data)
       if (last) {
         val msg = pending.result()
-        spoolFs match {
-          case Some((fs, root)) =>
-            // durable FIRST, count after; a spool (or normalization —
-            // see WsServerHub's note) failure must be loud, not a
-            // silent in-memory fallback — abort the socket so the peer
-            // sees the drop and [[closeReason]] carries the cause. In
-            // segment mode the count moves to the group-commit flush
-            // and a poisoned writer rethrows here.
-            try {
-              val line = Spool.jsonLine(msg)
-              segmentWriter match {
-                case Some(wtr) => wtr.append(line)
-                case None =>
-                  Spool.writeRecord(fs, root, line)
-                  received.incrementAndGet()
-              }
-            } catch {
-              case e: Exception =>
-                closed.set(s"spool failure: ${e.getMessage}")
-                // abort() suppresses further listener invocations, so
-                // the drop must be signalled here
-                drops.incrementAndGet()
-                try w.abort() catch { case _: Throwable => () }
-                return null
-            }
-          case None =>
-            stream.addData(msg)
-            received.incrementAndGet()
+        // a spool (or normalization — see WsServerHub's note) failure
+        // must be loud, not a silent in-memory fallback — abort the
+        // socket so the peer sees the drop and [[closeReason]] carries
+        // the cause
+        try ingress.offer(if (spoolDir.isDefined) Spool.jsonLine(msg) else msg)
+        catch {
+          case e: Exception =>
+            closed.set(s"spool failure: ${e.getMessage}")
+            // abort() suppresses further listener invocations, so
+            // the drop must be signalled here
+            drops.incrementAndGet()
+            try w.abort() catch { case _: Throwable => () }
+            return null
         }
         pending.clear()
       }
@@ -585,12 +481,8 @@ final class WsClientSource(spark: SparkSession, url: String,
     ws.set(built)
   }
 
-  def raw: Dataset[String] = spoolDir match {
-    case Some(dir) => Spool.readStream(spark, dir, spoolMaxFilesPerTrigger)
-    case None => stream.toDS()
-  }
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def raw: Dataset[String] = ingress.raw
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
   /** Send one text message (the client half is bidirectional in the
     * reference adapter too). */
@@ -600,7 +492,7 @@ final class WsClientSource(spark: SparkSession, url: String,
     w.sendText(text, true).join()
   }
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def closeReason: Option[String] = Option(closed.get())
   def reconnectCount: Long = reconnects.get()
   def dropCount: Long = drops.get()
@@ -614,7 +506,7 @@ final class WsClientSource(spark: SparkSession, url: String,
                      prefix: String = "ws_client"): Unit = {
     m.registerGauge(s"$prefix.reconnects", () => reconnects.get())
     m.registerGauge(s"$prefix.drops", () => drops.get())
-    m.registerGauge(s"$prefix.received", () => received.get())
+    m.registerGauge(s"$prefix.received", () => ingress.receivedCount)
   }
 
   /** Circuit-breaker-gated reconnect supervision — the reference
@@ -689,6 +581,6 @@ final class WsClientSource(spark: SparkSession, url: String,
         .orTimeout(2, TimeUnit.SECONDS).join()
       catch { case _: Throwable => () }
     }
-    segmentWriter.foreach(_.close()) // flush the tail
+    ingress.close()
   }
 }

@@ -4,10 +4,9 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.StructType
 
 /** S12 WebSocket relay transport — the reference's websocketrelay
@@ -173,7 +172,7 @@ object WsRelay {
 
 /** S12 WebSocket receiving relay: accept Upgrade'd connections, treat each
   * binary message as one RelayEnvelope, unwrap per its declared sealing
-  * and feed the streaming source buffer; acks ride back as binary
+  * and feed an [[Ingress]] buffer (memory mode); acks ride back as binary
   * messages per `ackMode`. The envelope/ack brain is
   * [[RelayProto.EnvelopeSession]], shared with the socket edge; this
   * class owns only the RFC 6455 transport: handshake, fragmentation
@@ -195,33 +194,14 @@ final class WsRelayReceiver(spark: SparkSession, port: Int,
   require(Set("none", "per-frame", "batch").contains(ackMode),
     s"unknown ackMode '$ackMode' — none | per-frame | batch")
 
-  import spark.implicits._
-  private implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private val stream = MemoryStream[String]
+  private val ingress = new Ingress(spark)
   private val server = new ServerSocket(port)
-  private val running = new AtomicBoolean(true)
-  private val conns = java.util.concurrent.ConcurrentHashMap.newKeySet[Socket]()
-  private val received = new AtomicLong(0)
   private val badFrames = new AtomicLong(0)
 
   def boundPort: Int = server.getLocalPort
 
-  private val acceptor = new Thread(() => {
-    while (running.get() && !server.isClosed) {
-      try {
-        val sock = server.accept()
-        conns.add(sock)
-        val t = new Thread(() => serve(sock), s"graft-wsrelay-conn-${sock.getPort}")
-        t.setDaemon(true)
-        t.start()
-      } catch {
-        case _: Throwable => if (running.get() && !server.isClosed) Thread.sleep(100)
-      }
-    }
-  }, "graft-wsrelay-accept")
-  acceptor.setDaemon(true)
-  acceptor.start()
+  private val accepts = new AcceptLoop(server, "graft-wsrelay")(serve)
+  accepts.start()
 
   private def serve(sock: Socket): Unit = {
     try {
@@ -244,12 +224,12 @@ final class WsRelayReceiver(spark: SparkSession, port: Int,
           out.flush()
         } catch { case _: java.io.IOException => peerGone = true }
       val session = new RelayProto.EnvelopeSession(key, maxInflatedBytes,
-        ackMode, Chunking.feedNdjson(stream, received), sendAck)
+        ackMode, ingress.feed, sendAck)
 
       val pending = new java.io.ByteArrayOutputStream()
       var inMessage = false
       var more = true
-      while (more && running.get()) {
+      while (more && accepts.isRunning) {
         // frame cap = message cap: a single frame's DECLARED length is
         // bounded before allocation (WsFrames.readFrame), and continuation
         // accumulation is bounded below
@@ -284,26 +264,17 @@ final class WsRelayReceiver(spark: SparkSession, port: Int,
       }
     } catch {
       case _: Throwable =>
-        if (running.get() && !sock.isClosed) badFrames.incrementAndGet()
-    } finally {
-      conns.remove(sock)
-      try sock.close() catch { case _: Throwable => () }
+        if (accepts.isRunning && !sock.isClosed) badFrames.incrementAndGet()
     }
   }
 
   /** Raw ingress stream (one string per received record). */
-  def raw: Dataset[String] = stream.toDS()
+  def raw: Dataset[String] = ingress.raw
 
-  def jsonStream(schema: StructType): DataFrame =
-    Sources.jsonLines(raw.toDF("value"), "value", schema)
+  def jsonStream(schema: StructType): DataFrame = ingress.jsonStream(schema)
 
-  def receivedCount: Long = received.get()
+  def receivedCount: Long = ingress.receivedCount
   def badFrameCount: Long = badFrames.get()
 
-  def stop(): Unit = {
-    running.set(false)
-    try server.close() catch { case _: Throwable => () }
-    conns.forEach(s => try s.close() catch { case _: Throwable => () })
-    conns.clear()
-  }
+  def stop(): Unit = accepts.stop()
 }

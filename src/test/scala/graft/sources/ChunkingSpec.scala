@@ -2,11 +2,12 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 
 /** The shared relay chunk packer: boundary arithmetic, separator rules,
-  * the oversized-record fail-fast, and lossless reassembly. */
-class ChunkingSpec extends AnyFunSuite {
+  * the oversized-record fail-fast, and lossless reassembly — including
+  * through the receiver-side feed ([[Ingress.feed]]). */
+class ChunkingSpec extends SparkSpec {
 
   private def pack(lines: Seq[String], cap: Int): Seq[Array[Byte]] =
     Chunking.chunks(lines.iterator, cap).toSeq
@@ -42,6 +43,31 @@ class ChunkingSpec extends AnyFunSuite {
     assert(pack(Seq.empty, 1024).isEmpty)
     intercept[IllegalArgumentException](Chunking.chunks(Iterator.empty, 0))
     intercept[IllegalArgumentException](Chunking.chunks(Iterator.empty, (48 << 20) + 1))
+  }
+
+  test("Ingress.feed inverts chunks: the same records come back; blank " +
+    "lines are dropped; a CRLF body yields the same rows as its LF body") {
+    import spark.implicits._
+    def fed(bodies: Seq[Array[Byte]]): Seq[String] = {
+      val in = new Ingress(spark)
+      bodies.foreach(in.feed)
+      val name = s"chunk_feed_${System.nanoTime()}"
+      val q = in.raw.writeStream.format("memory").queryName(name).start()
+      try {
+        q.processAllAvailable()
+        val got = spark.table(name).as[String].collect().toSeq
+        assert(in.receivedCount == got.length)
+        got.sorted
+      } finally q.stop()
+    }
+    val lines = (0 until 300).map(i => s"""{"id":$i,"v":"${"x" * (i % 29)}"}""")
+    val lf = pack(lines, 512)
+    assert(lf.length > 1)
+    assert(fed(lf) == lines.sorted)
+    val blanks = Seq(("\n\n" + lines.take(3).mkString("\n\n") + "\n").getBytes(UTF_8))
+    assert(fed(blanks) == lines.take(3).sorted)
+    val crlf = lf.map(b => new String(b, UTF_8).replace("\n", "\r\n").getBytes(UTF_8))
+    assert(fed(crlf) == fed(lf))
   }
 
   test("multi-byte UTF-8 records count in bytes, not chars") {

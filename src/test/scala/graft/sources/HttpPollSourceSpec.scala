@@ -95,6 +95,44 @@ class HttpPollSourceSpec extends SparkSpec {
     }
   }
 
+  test("concurrent pollOnce calls buffer exactly the fetched records") {
+    // pollOnce is public (tests, backfill) while start()'s scheduler runs
+    // the same code: every append must take the buffer's one lock
+    val pages = new AtomicInteger(0)
+    val perPage = 40
+    val fetched = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val fetch = () => {
+      val p = pages.getAndIncrement()
+      val recs = (0 until perPage).map(i => ((p * perPage + i).toLong, s"p$p-$i"))
+      recs.foreach(fetched.add)
+      recs.map { case (id, name) => s"""{"id":$id,"name":"$name"}""" }.mkString("\n")
+    }
+    val src = new HttpPollSource(spark, fetch, intervalMillis = 50, sleep = _ => ())
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val workers = (0 until 8).map { _ =>
+      val t = new Thread(() =>
+        try { go.await(); (0 until 25).foreach(_ => src.pollOnce()) }
+        catch { case e: Throwable => errors.add(e) })
+      t.start(); t
+    }
+    go.countDown()
+    workers.foreach(_.join())
+    assert(errors.isEmpty, s"pollOnce threw: ${errors.peek()}")
+    val q = src.jsonStream(schema).writeStream
+      .format("memory").queryName("http_poll_concurrent").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val rows = spark.table("http_poll_concurrent").collect()
+        .map(r => (r.getAs[Long]("id"), r.getAs[String]("name"))).sorted.toSeq
+      import scala.jdk.CollectionConverters._
+      val expected = fetched.asScala.toSeq.sorted
+      assert(expected.length == 8 * 25 * perPage)
+      assert(rows == expected)
+      assert(src.recordCount == expected.length)
+    } finally q.stop()
+  }
+
   test("json-array bodies decode one record per element") {
     val recs = HttpPollSource.jsonArrayElements("""[{"id":1},{"id":2},{"id":3}]""")
     assert(recs.length == 3)

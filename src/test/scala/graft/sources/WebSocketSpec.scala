@@ -107,6 +107,34 @@ class WebSocketSpec extends SparkSpec {
     } finally hub.stop()
   }
 
+  test("stop() closes peers that connected but never finished the upgrade (plain and TLS)") {
+    import scala.jdk.CollectionConverters._
+    val dir = "src/test/resources/tls"
+    val tlsCfg = TlsConfig(s"$dir/server.pem", s"$dir/server-key.pem", s"$dir/ca.pem")
+    for (tls <- Seq(None, Some(tlsCfg))) {
+      val hub = new WsServerHub(spark, 0, tls = tls)
+      val sock = new java.net.Socket("127.0.0.1", hub.boundPort)
+      try {
+        // silent peer: connects, sends nothing. The hub names each
+        // connection thread after the peer's port.
+        val connThread = s"graft-ws-conn-${sock.getLocalPort}"
+        eventually(Thread.getAllStackTraces.keySet.asScala.exists(_.getName == connThread),
+          s"hub never accepted the silent peer (tls=${tls.isDefined})")
+        hub.stop()
+        sock.setSoTimeout(5000)
+        // a TLS listener may write a closing alert first: drain to EOF
+        val outcome =
+          try { while (sock.getInputStream.read() != -1) (); "eof" }
+          catch {
+            case _: java.net.SocketTimeoutException => "timeout"
+            case _: java.io.IOException => "reset"
+          }
+        assert(outcome == "eof" || outcome == "reset",
+          s"silent peer still open after stop() (tls=${tls.isDefined}): $outcome")
+      } finally { sock.close(); hub.stop() }
+    }
+  }
+
   test("e2e: JDK client pushes into the jack; hub broadcast reaches the client source (S8+S10+K6)") {
     val hub = new WsServerHub(spark, 0)
     val client = new WsClientSource(spark, s"ws://127.0.0.1:${hub.boundPort}/feed")
