@@ -81,7 +81,7 @@ object Bench {
     val baseline: Map[String, Double] = {
       val files = Option(benchDir.listFiles()).getOrElse(Array.empty)
         .filter(f => (f.getName.startsWith("BENCH_r") || f.getName == "bench_full.json"
-          // r18: the sf1 tier artifact feeds sf1 baselines; the same-sf
+          // the sf1 tier artifact feeds sf1 baselines; the same-sf
           // guard below keeps its entries out of the sf0.1 gate
           || f.getName == "bench_sf1.json")
           && f.getName.endsWith(".json"))
@@ -162,7 +162,7 @@ object Bench {
     // whose per-query map is trimmed to the SLOWEST queries that fit the
     // window — the ones a regression gate actually looks at.
     // subset runs (dev spot-checks) must not clobber the committed
-    // full-run artifact. r18: SPARK_GRAFT_BENCH_OUT names an ALTERNATIVE
+    // full-run artifact. SPARK_GRAFT_BENCH_OUT names an ALTERNATIVE
     // artifact for a deliberate subset tier (the sf1 heavy-family bench,
     // bench_sf1.json) — same methodology, its own file, never touching
     // bench_full.json.

@@ -776,7 +776,7 @@ object TextAnalytics {
         explode(FastHash.lowerBigramsCol(lower(col("text")))).as("bg"))
       // two consumers (the bigram count + the scoring join): materialize
       // the tokenized pairs once instead of re-running the text kernel.
-      // r18: EAGER — with the lazy form, AQE launches the three leaf
+      // EAGER — with the lazy form, AQE launches the three leaf
       // exchange-stage jobs concurrently and all of them race the
       // uncached tokenization behind per-partition block locks (three
       // ~5.7 s jobs at sf1, each mostly lock wait); one eager
@@ -787,15 +787,14 @@ object TextAnalytics {
     // tokens contain no spaces, so the context is recoverable from the
     // bigram key without touching the corpus again — and the context
     // count c1(w1) is exactly Σ c2 over bigrams with that prefix, so it
-    // rolls up from the VOCAB-sized c2 table (r17: the previous
-    // `bgs.groupBy("w1")` was a second full aggregation pass over the
-    // corpus-scale pair table computing a sum c2 already contains).
-    // r18: c2 is MATERIALIZED (vocab-grain, cheap) — statically the c1
-    // branch re-derived its aggregation from the corpus-scale pair
-    // checkpoint (a second full partial-agg pass whenever AQE's
-    // canonical exchange reuse does not fire, which the sf1 profile
-    // showed as a third ~1.5 s exchange job); both lm readers now scan
-    // the reduced table
+    // rolls up from the VOCAB-sized c2 table (a `bgs.groupBy("w1")` would
+    // be a second full aggregation pass over the corpus-scale pair table
+    // computing a sum c2 already contains). c2 is MATERIALIZED
+    // (vocab-grain, cheap): unmaterialized, the c1 branch re-derives its
+    // aggregation from the corpus-scale pair checkpoint (a second full
+    // partial-agg pass whenever AQE's canonical exchange reuse does not
+    // fire, which the sf1 profile shows as a third ~1.5 s exchange job);
+    // both lm readers scan the reduced table
     val c2 = bgs.groupBy("bg").agg(count(lit(1)).as("c2")).localCheckpoint(true)
     val withW1 = c2.withColumn("w1", split(col("bg"), " ").getItem(0))
     val c1 = withW1.groupBy("w1").agg(sum("c2").as("c1"))

@@ -681,14 +681,13 @@ object Dedup {
     // Sets as sorted distinct 64-bit hashes; pair intersection by linear
     // merge (FastHash kernel). The sampled sets are broadcast as two
     // parallel arrays (id-sorted) and the O(n²) triangle runs as a
-    // strided mapPartitions loop — r17: the previous crossJoin+UDF form
-    // materialized all n(n-1)/2 candidate rows through codegen and paid
-    // two hash-map lookups + tuple boxing per pair just to apply the size
-    // prune; the loop form touches plain arrays by index and only ever
-    // EMITS surviving pairs (guide §1.2 "per-task work" — measured
-    // dd_ngram_jaccard 0.45 → ~0.2 s at sf0.1, same value set, and the
-    // same constant-factor cut on the sf1 verifier feeding dd_cluster /
-    // dd_keep_best). The sample is small by construction (that's what
+    // strided mapPartitions loop — a crossJoin+UDF form materializes all
+    // n(n-1)/2 candidate rows through codegen and pays two hash-map
+    // lookups + tuple boxing per pair just to apply the size prune; the
+    // loop touches plain arrays by index and only ever EMITS surviving
+    // pairs (guide §1.2 "per-task work" — dd_ngram_jaccard 0.45 → ~0.2 s
+    // at sf0.1, same value set, and the same constant-factor cut on the
+    // sf1 verifier feeding dd_cluster / dd_keep_best). The sample is small by construction (that's what
     // makes the quadratic verifier usable); the scalable near-dup path is
     // minhashPairs.
     val spark = docs.sparkSession
@@ -952,10 +951,10 @@ object Dedup {
       pairs.select(col("a_id").as("u"), col("b_id").as("v"))
         .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
         .repartition(col("v")))
-    // r17: the initial checksum rides the label-materialization job as an
-    // observed metric — the previous separate `labels.agg(...).head()` was
-    // one more full pass over the node set (and one more Spark job) per
-    // call, purely to read a sum the checkpoint job already computes
+    // the initial checksum rides the label-materialization job as an
+    // observed metric — a separate `labels.agg(...).head()` would be one
+    // more full pass over the node set (and one more Spark job) per call,
+    // purely to read a sum the checkpoint job already computes
     val obs0 = org.apache.spark.sql.Observation()
     sc.setJobDescription("cc: materialize labels")
     var labels = materialize(
@@ -965,9 +964,9 @@ object Dedup {
     var iter = 0
     var checksum = obs0.get("s").asInstanceOf[Long]
     while (!converged && iter < maxIter) {
-      // ONE materialization per round (r4 ran two: a pull job then a jump
-      // job whose un-checkpointed self-join recomputed the pull subtree
-      // twice). Both label-improvement sources derive from the
+      // ONE materialization per round (a pull job then a jump job would
+      // recompute the pull subtree twice through the un-checkpointed
+      // self-join). Both label-improvement sources derive from the
       // MATERIALIZED previous round and fold into a single least():
       //   nmin — min label over graph neighbors (the pull; its fixed point
       //          is the convergence certificate: labels only decrease, so
@@ -977,16 +976,15 @@ object Dedup {
       //          simultaneous rather than post-pull, which can cost an
       //          extra cheap round but saves a materialization every
       //          round — measured net-positive at sf0.1).
-      // Two acceleration variants were measured at sf1 (r6) and REJECTED:
-      // a jump-of-jump (lbl³ in the same least()) cut zero rounds — dup
+      // Three acceleration variants are REJECTED. Measured at sf1: a
+      // jump-of-jump (lbl³ in the same least()) cut zero rounds — dup
       // graphs are near-cliques, so propagation, not pointer depth, binds
       // — and a fused double pull cut rounds 5→3 but its second edges⋈m1
       // join recomputes the un-checkpointed first hop, nearly doubling
-      // per-round cost (8.9 → 9.1 s net). A THIRD variant was attempted
-      // and REJECTED in r18: folding pull + jump + self through one
-      // union + partial-min (fewer stages, parallel joins, value-
-      // identical per round) — Spark's Union.rewriteConstraints crashes
-      // (key not found) at the localCheckpoint's own
+      // per-round cost (8.9 → 9.1 s net). The third, folding pull + jump +
+      // self through one union + partial-min (fewer stages, parallel
+      // joins, value-identical per round), crashes Spark's
+      // Union.rewriteConstraints (key not found) at the localCheckpoint's own
       // LogicalRDD.rewriteStatsAndConstraints walk whenever the
       // optimizer collapses the branch aliases back to shared attribute
       // ids and the node lineage carries filter constraints (reproduced

@@ -184,7 +184,7 @@ object TrainingData {
     * count shuffle and top-k is TakeOrdered — the same scale shape as
     * the unigram query at 2× the exploded rows. */
   def txtBigrams(spark: SparkSession, dir: String): DataFrame =
-    // r18: one kernel pass builds the pairs — the filter/transform/slice
+    // one kernel pass builds the pairs — the filter/transform/slice
     // HOF chain is CodegenFallback (interpreted per token); same bigram
     // strings (property-locked), same explode-of-empty for < 2 tokens
     Tables.documents(spark, dir)
@@ -233,9 +233,9 @@ object TrainingData {
     centroidSums(spark, dir)
 
   /** The centroid-sum kernel [[simCentroids]] and the other consumers
-    * ([[simAssign]] etc.) share. r17: the declared query no longer adds a
-    * presentation sort on top (the driver compare is a sorted-multiset
-    * compare — see OPTIMIZATION_r17.md), so the two are one frame now. */
+    * ([[simAssign]] etc.) share. The declared query adds no presentation
+    * sort on top (the driver compare is a sorted-multiset compare — see
+    * OPTIMIZATION_r17.md), so the two are one frame. */
   private def centroidSums(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "v")))
@@ -884,7 +884,7 @@ object TrainingData {
 
   /** Content diff between corpus versions: per (source, status) counts
     * of added / removed / changed / unchanged docs — the promotion gate
-    * report for a corpus rebuild. r18: both fixture snapshots are
+    * report for a corpus rebuild. Both fixture snapshots are
     * filtered/edited views of ONE base table, so the diff runs as the
     * SAME-BASE fusion ([[graft.operators.Versioning
     * .snapshotDiffSameBase]]) — one corpus scan, no join (the general
@@ -906,7 +906,7 @@ object TrainingData {
     * ppm over three integer-bucketed signals (doc length, alpha-token
     * count, blocklist hits). All-integer pipeline → oracle hash-exact. */
   def dsDrift(spark: SparkSession, dir: String): DataFrame = {
-    // r18: the snapshots are views of one base → same-base fusion (one
+    // the snapshots are views of one base → same-base fusion (one
     // scan, no bucket join; see dsSnapshotDiff). Signals are per SIDE
     // (name, old expr, new expr): the new snapshot EDITS text (" v2" on
     // doc_id % 11), so words16/badhits over the new side must see the
@@ -1005,7 +1005,7 @@ object TrainingData {
     * snapshots of the embeddings table — did a class's representation
     * move across the rebuild. */
   def simDrift(spark: SparkSession, dir: String): DataFrame =
-    // r18: same-base fusion (one posexplode pass, no (label, pos) join —
+    // same-base fusion (one posexplode pass, no (label, pos) join —
     // see dsSnapshotDiff; the general two-table embeddingDrift stays for
     // physically distinct snapshots)
     graft.operators.Versioning.embeddingDriftSameBase(
@@ -1294,7 +1294,7 @@ object TrainingData {
     * `size()` sums), not a rescan of the token stream. */
   def txtCollocations(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    // r18: explode-then-filter (all codegen) replaces the interpreted
+    // explode-then-filter (all codegen) rather than the interpreted
     // filter-HOF-then-explode — identical token multiset
     val uni = docs.select(explode(graft.functions.TextAnalytics.words(col("text")))
         .as("word"))
@@ -1304,7 +1304,7 @@ object TrainingData {
     // word exchange (ReusedExchange), so the corpus is NOT rescanned for
     // a number the vocabulary table already holds
     val total = uni.agg(sum("c").as("n_total"))
-    // r18: pair construction via the one-pass kernel (the HOF chain is
+    // pair construction via the one-pass kernel (the HOF chain is
     // CodegenFallback — see lmScoreBigram); same bigram strings
     val pairs = docs
       .select(explode(graft.functions.FastHash.lowerBigramsCol(
@@ -1684,8 +1684,8 @@ object TrainingData {
   def ddCrossSourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Maintenance}
     val g = org.apache.spark.sql.graft.ThetaGlue
-    // r18: the fused shingle→sketch kernel (Maintenance.thetaShingleRollup)
-    // replaces explode(wordShinglesKernel) → thetaRollup — same item
+    // the fused shingle→sketch kernel (Maintenance.thetaShingleRollup)
+    // rather than explode(wordShinglesKernel) → thetaRollup — same item
     // space, same sketch bytes (differential-locked in MaintenanceSpec),
     // no per-shingle String/row materialization (guide §1.2)
     // cap BEFORE materializing: limit(cap+1) bounds what the driver ever

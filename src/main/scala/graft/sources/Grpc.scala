@@ -309,24 +309,14 @@ object GrpcRelay {
   val StreamPath = "/electrician.RelayService/StreamReceive"
   val UnaryPath = "/electrician.RelayService/Receive"
 
-  /** Client connection preamble: preface + SETTINGS, then handle the
-    * server's SETTINGS (ack it). Returns once both directions settled
-    * enough to open a stream (the server's SETTINGS may lawfully arrive
-    * later; [[pump]] handles it whenever it does). */
-  private def clientPreamble(in: DataInputStream, out: DataOutputStream): Unit = {
-    out.write(Http2.Preface)
-    Http2.writeFrame(out, Http2.TSettings, 0, 0, Array.emptyByteArray)
-    out.flush()
-  }
-
   /** One request stream's client-side state: [[pump]] processes one
     * incoming frame (stream DATA lands in `data`, response headers then
     * trailers in their fields, `streamEnded` flips on END_STREAM), and
     * the senders/readers below respect the peer's flow control. */
-  private final class ClientConn(sock: Socket, in: DataInputStream,
-                                 out: DataOutputStream,
-                                 streamId: Int, maxMessageBytes: Int,
+  private final class ClientConn(sock: Socket, streamId: Int, maxMessageBytes: Int,
                                  ackTimeoutMs: Int, creditTimeoutMs: Int) {
+    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
     val windows = new Http2.SendWindows
     val codec = new Http2.HeaderCodec
     val data = new GrpcWire.MessageBuffer(maxMessageBytes)
@@ -335,6 +325,7 @@ object GrpcRelay {
     var streamEnded = false
     private val headerBlock = new java.io.ByteArrayOutputStream()
     private var headersInFlight = false
+    private var peerSettings = false
 
     /** Read + handle one frame. */
     def pump(): Unit = {
@@ -349,6 +340,7 @@ object GrpcRelay {
             Http2.writeFrame(out, Http2.TSettings, Http2.FAck, 0,
               Array.emptyByteArray)
             out.flush()
+            peerSettings = true
           }
         case Http2.TPing =>
           if (!f.has(Http2.FAck)) {
@@ -387,6 +379,23 @@ object GrpcRelay {
             if (f.payload.length >= 4) f.payload(3) & 0xff else -1})")
         case _ => () // PRIORITY, other streams: skip
       }
+    }
+
+    /** Connection preface + our SETTINGS, then wait for the server's
+      * preface SETTINGS (its first frame, RFC 7540 §3.5) before opening
+      * the stream with `requestHeaders`. DATA sent earlier is sized to the
+      * default 64 KiB window; a peer advertising a smaller one then holds
+      * our stream window below zero, and a netty server that consumed
+      * those bytes before our ack never re-credits them — the writer
+      * would stall in its credit wait. */
+    def open(requestHeaders: Seq[(String, String)]): Unit = {
+      out.write(Http2.Preface)
+      Http2.writeFrame(out, Http2.TSettings, 0, 0, Array.emptyByteArray)
+      out.flush()
+      while (!peerSettings) pump()
+      Http2.writeFrame(out, Http2.THeaders, Http2.FEndHeaders, streamId,
+        codec.encode(streamId, requestHeaders))
+      out.flush()
     }
 
     /** Send gRPC message bytes as DATA frames, respecting the peer's
@@ -474,67 +483,34 @@ object GrpcRelay {
                      ackTimeoutMs: Int = 30000,
                      tls: Option[TlsConfig] = None,
                      creditTimeoutMs: Int = 600000): Unit = {
-    graft.functions.Codecs.compress(compression, Array.emptyByteArray)
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
-    require(Set("none", "per-frame", "batch").contains(ackMode),
-      s"unknown ackMode '$ackMode' — none | per-frame | batch")
-    Chunking.requireBound(maxChunkBytes)
-    df.toJSON.foreachPartition { (it: Iterator[String]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.get().partitionId()
-        // the TLS socket is built executor-side from the serializable
-        // config, exactly like writeSocketNdjsonTls
-        val sock: Socket = tls match {
-          case Some(cfg) => Tls.clientSocket(cfg, host, port, alpn = Seq("h2"))
-          case None => new Socket(host, port)
-        }
-        try {
-          sock.setTcpNoDelay(true)
-          sock.setSoTimeout(ackTimeoutMs)
-          val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-          val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-          clientPreamble(in, out)
-          val conn = new ClientConn(sock, in, out, streamId = 1,
-            maxMessageBytes = maxChunkBytes + 4096,
-            ackTimeoutMs = ackTimeoutMs, creditTimeoutMs = creditTimeoutMs)
-          Http2.writeFrame(out, Http2.THeaders, Http2.FEndHeaders, 1,
-            conn.codec.encode(1, Seq(
-              ":method" -> "POST",
-              ":scheme" -> (if (tls.isDefined) "https" else "http"),
-              ":path" -> StreamPath, ":authority" -> s"$host:$port",
-              "content-type" -> "application/grpc",
-              "te" -> "trailers")))
-          out.flush()
-          var seq = 0L
-          Chunking.chunks(it, maxChunkBytes).foreach { body =>
-            conn.sendData(GrpcWire.message(RelayProto.encodeEnvelope(
-              RelayProto.EnvelopePayload(RelayProto.wrap(body,
-                id = s"p$pid-$seq", seq = seq,
-                tsEpochMs = System.currentTimeMillis(),
-                algo = compression, key = key)))), endStream = false)
-            if (ackMode == "per-frame") {
-              val ack = RelayProto.decodeAck(conn.readMessage())
-              require(ack.success && ack.seq == seq,
-                s"message $seq rejected by receiver (ack seq=${ack.seq}): ${ack.message}")
-            }
-            seq += 1
-          }
-          conn.sendData(GrpcWire.message(RelayProto.encodeEnvelope(
-            RelayProto.EnvelopeClose("end-of-partition"))), endStream = false)
-          conn.sendData(Array.emptyByteArray, endStream = true)
-          if (ackMode == "batch") {
-            val ack = RelayProto.decodeAck(conn.readMessage())
-            require(ack.success && ack.okCount == seq,
-              s"batch rejected: ok=${ack.okCount}/$seq err=${ack.errCount} ${ack.message}")
-          }
-          conn.awaitTrailers()
-          // polite shutdown (RFC 7540 §6.8) so the receiver's read loop
-          // distinguishes a finished peer from a dropped one
-          Http2.writeFrame(out, Http2.TGoAway, 0, 0, new Array[Byte](8))
-          out.flush()
-        } finally sock.close()
-      }
+    RelayWriter.requireSeal(compression, key, maxChunkBytes)
+    RelayProto.requireAckMode(ackMode)
+    // the TLS socket is built executor-side from the serializable config
+    val connect = tls.fold(RelayWriter.socket(host, port))(
+      RelayWriter.tlsSocket(_, host, port, alpn = Seq("h2")))
+    RelayWriter.foreachConnection(df, connect) { (sock, it) =>
+      sock.setTcpNoDelay(true)
+      sock.setSoTimeout(ackTimeoutMs)
+      val conn = new ClientConn(sock, streamId = 1,
+        maxMessageBytes = maxChunkBytes + 4096,
+        ackTimeoutMs = ackTimeoutMs, creditTimeoutMs = creditTimeoutMs)
+      conn.open(Seq(
+        ":method" -> "POST",
+        ":scheme" -> (if (tls.isDefined) "https" else "http"),
+        ":path" -> StreamPath, ":authority" -> s"$host:$port",
+        "content-type" -> "application/grpc",
+        "te" -> "trailers"))
+      new RelayProto.EnvelopeSender(ackMode,
+        send = e => conn.sendData(GrpcWire.message(RelayProto.encodeEnvelope(e)),
+          endStream = false),
+        readAck = () => RelayProto.decodeAck(conn.readMessage()),
+        halfClose = () => conn.sendData(Array.emptyByteArray, endStream = true))
+        .sendAll(RelayWriter.sealedChunks(it, maxChunkBytes, compression, key))
+      conn.awaitTrailers()
+      // polite shutdown (RFC 7540 §6.8) so the receiver's read loop
+      // distinguishes a finished peer from a dropped one
+      Http2.writeFrame(conn.out, Http2.TGoAway, 0, 0, new Array[Byte](8))
+      conn.out.flush()
     }
   }
 }
@@ -558,8 +534,8 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
   require(maxMessageBytes > 0, s"maxMessageBytes must be positive: $maxMessageBytes")
   require(maxInflatedBytes >= maxMessageBytes,
     s"maxInflatedBytes ($maxInflatedBytes) must be at least maxMessageBytes ($maxMessageBytes)")
-  require(Set("none", "per-frame", "batch").contains(ackMode),
-    s"unknown ackMode '$ackMode' — none | per-frame | batch")
+  RelayProto.requireAckMode(ackMode)
+  RelayProto.requireKey(key)
   require(mtls.isEmpty || tls.isDefined,
     "mTLS policy requires a TLS server config")
 

@@ -25,28 +25,15 @@ object KafkaRelay {
                  compression: Int = graft.functions.Codecs.CompressNone,
                  key: Option[Array[Byte]] = None,
                  maxChunkBytes: Int = 1 << 19): Unit = {
-    graft.functions.Codecs.compress(compression, Array.emptyByteArray)
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
-    Chunking.requireBound(maxChunkBytes)
+    RelayWriter.requireSeal(compression, key, maxChunkBytes)
     val spark = df.sparkSession
     import spark.implicits._
-    val algo = compression
-    val sealKey = key
-    val chunkCap = maxChunkBytes
     // seal into payload records, then delegate DELIVERY to Kafka.write's
     // idempotent path — the exactly-once retry contract (pid + sequences,
     // reconnect-and-resend-same-sequence) lives in ONE place, not two;
     // null keys round-robin across the topic's partitions there
     val payloads = df.toJSON.mapPartitions { it =>
-      val taskPid = org.apache.spark.TaskContext.get().partitionId()
-      var seq = 0L
-      Chunking.chunks(it, chunkCap).map { body =>
-        val wrapped = RelayProto.wrap(body, id = s"p$taskPid-$seq", seq = seq,
-          tsEpochMs = System.currentTimeMillis(), algo = algo, key = sealKey)
-        seq += 1
-        RelayProto.encode(wrapped)
-      }
+      RelayWriter.sealedChunks(it, maxChunkBytes, compression, key).map(RelayProto.encode)
     }.toDF("value")
       .withColumn("key", org.apache.spark.sql.functions.lit(null).cast("binary"))
     Kafka.write(payloads, bootstrap, topic,
@@ -64,8 +51,7 @@ object KafkaRelay {
   def readKafkaSealed(spark: SparkSession, bootstrap: (String, Int),
                       topic: String, key: Option[Array[Byte]] = None,
                       maxInflatedBytes: Int = SealedRelay.DefaultMaxInflatedBytes): DataFrame = {
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
+    RelayProto.requireKey(key)
     val raw = Kafka.read(spark, bootstrap, topic)
     import spark.implicits._
     raw.select("value", "topic", "partition", "offset")

@@ -346,39 +346,23 @@ final class NatsConnection(host: String, port: Int,
 object NatsRelay {
 
   /** NATS forward relay (K5 over S12-NATS): per partition, one connection;
-    * rows pack into ≤`maxChunkBytes` NDJSON bodies ([[Chunking.chunks]]),
-    * each sealed into a [[RelayProto.WrappedPayload]] (compression + AES
-    * declared in its metadata, exactly the socket proto writer's envelope)
-    * and published to `subject`. The partition ends with a [[NatsConnection
-    * .flush]] barrier — the NATS equivalent of the socket writer's batch
-    * ack: the server has accepted every publish, and any `-ERR` (payload
-    * cap, bad subject) fails the task instead of vanishing. Executor-side
-    * like every relay writer; the driver never sees a record. */
+    * each [[RelayWriter.sealedChunks]] payload (the socket proto writer's
+    * envelope) is published to `subject`. The partition ends with a
+    * [[NatsConnection.flush]] barrier — the NATS equivalent of the socket
+    * writer's batch ack: the server has accepted every publish, and any
+    * `-ERR` (payload cap, bad subject) fails the task instead of
+    * vanishing. */
   def writeNats(df: DataFrame, host: String, port: Int, subject: String,
                 compression: Int = graft.functions.Codecs.CompressNone,
                 key: Option[Array[Byte]] = None,
                 maxChunkBytes: Int = 1 << 19,
                 flushTimeoutMs: Long = 30000): Unit = {
     NatsProto.validateSubject(subject)
-    graft.functions.Codecs.compress(compression, Array.emptyByteArray)
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
-    Chunking.requireBound(maxChunkBytes)
-    df.toJSON.foreachPartition { (it: Iterator[String]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.get().partitionId()
-        val conn = new NatsConnection(host, port, name = s"graft-writer-p$pid")
-        try {
-          var seq = 0L
-          Chunking.chunks(it, maxChunkBytes).foreach { body =>
-            val wrapped = RelayProto.wrap(body, id = s"p$pid-$seq", seq = seq,
-              tsEpochMs = System.currentTimeMillis(), algo = compression, key = key)
-            conn.publish(subject, RelayProto.encode(wrapped))
-            seq += 1
-          }
-          conn.flush(flushTimeoutMs)
-        } finally conn.close()
-      }
+    RelayWriter.requireSeal(compression, key, maxChunkBytes)
+    RelayWriter.foreachConnection(df, RelayWriter.nats(host, port)) { (conn, it) =>
+      RelayWriter.sealedChunks(it, maxChunkBytes, compression, key)
+        .foreach(wp => conn.publish(subject, RelayProto.encode(wp)))
+      conn.flush(flushTimeoutMs)
     }
   }
 }
@@ -401,8 +385,7 @@ final class NatsReceivingRelay(spark: SparkSession, host: String, port: Int,
                                key: Option[Array[Byte]] = None,
                                maxInflatedBytes: Int = SealedRelay.DefaultMaxInflatedBytes) {
   NatsProto.validateSubscribeSubject(subject)
-  key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-    s"AES key must be 16/24/32 bytes, got ${k.length}"))
+  RelayProto.requireKey(key)
 
   private val ingress = new Ingress(spark)
   private val badMessages = new AtomicLong(0)

@@ -89,6 +89,60 @@ object RelayProto {
   final case class EnvelopePayload(payload: WrappedPayload) extends Envelope
   final case class EnvelopeClose(reason: String) extends Envelope
 
+  /** AES-GCM key length rule shared by every relay writer and receiver: a
+    * bad key fails at construction, not as a per-frame cipher error. */
+  def requireKey(key: Option[Array[Byte]]): Unit =
+    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
+      s"AES key must be 16/24/32 bytes, got ${k.length}"))
+
+  /** The ack modes of the `StreamReceive` contract; writer and receiver
+    * must agree the way the AES key must. */
+  def requireAckMode(ackMode: String): Unit =
+    require(Set("none", "per-frame", "batch").contains(ackMode),
+      s"unknown ackMode '$ackMode' — none | per-frame | batch")
+
+  /** Per-connection writer state for one RelayEnvelope stream — the
+    * writer twin of [[EnvelopeSession]]: every payload goes out as an
+    * `EnvelopePayload`, the stream ends with `EnvelopeClose`, and the
+    * acks are checked per `ackMode`:
+    *  - "none": fire-and-forget (per-batch at-least-once via task retry);
+    *  - "per-frame": one ack read after every payload — `success` and the
+    *    seq echo are REQUIRED or the send fails;
+    *  - "batch": one ack after the close whose ok_count must equal the
+    *    payloads sent (the reference's after-batch commit shape).
+    * `send` writes one envelope in the transport's framing, `readAck`
+    * blocks for the next acknowledgment (bounded by the transport's own
+    * timeout, so a mode mismatch fails instead of hanging), and
+    * `halfClose` runs after the close envelope, before the batch ack
+    * (gRPC ends its request stream there). */
+  final class EnvelopeSender(ackMode: String,
+                             send: Envelope => Unit,
+                             readAck: () => StreamAck,
+                             halfClose: () => Unit = () => ()) {
+    requireAckMode(ackMode)
+
+    /** Send every payload, then the close. */
+    def sendAll(payloads: Iterator[WrappedPayload]): Unit = {
+      var sent = 0L
+      payloads.foreach { wp =>
+        send(EnvelopePayload(wp))
+        if (ackMode == "per-frame") {
+          val ack = readAck()
+          require(ack.success && ack.seq == wp.seq,
+            s"message ${wp.seq} rejected by receiver (ack seq=${ack.seq}): ${ack.message}")
+        }
+        sent += 1
+      }
+      send(EnvelopeClose("end-of-partition"))
+      halfClose()
+      if (ackMode == "batch") {
+        val ack = readAck()
+        require(ack.success && ack.okCount == sent,
+          s"batch rejected: ok=${ack.okCount}/$sent err=${ack.errCount} ${ack.message}")
+      }
+    }
+  }
+
   /** Per-connection receiver state for one RelayEnvelope stream — THE ack
     * semantics (per-frame success/failure acks with seq echo, the batch
     * summary on close, the failure-ack-before-drop rule) shared by every
@@ -103,8 +157,7 @@ object RelayProto {
                               ackMode: String,
                               feed: Array[Byte] => Unit,
                               sendAck: StreamAck => Unit) {
-    require(Set("none", "per-frame", "batch").contains(ackMode),
-      s"unknown ackMode '$ackMode' — none | per-frame | batch")
+    requireAckMode(ackMode)
     private var okCount = 0L
     private var lastSeq = 0L
 

@@ -12,11 +12,8 @@ import org.apache.spark.sql.types.StructType
   * wrap/unwrap payload contract (`/root/reference/pkg/internal/
   * forwardrelay/payload.go:50-181`: serialize → optional compress →
   * optional AES-GCM, flags carried in message metadata; unwrap reverses
-  * it, `receivingrelay/payload.go:15-102`) re-expressed over the
-  * line-framed socket edge. The gRPC/proto transport stays out of engine
-  * scope (SURVEY §2.1 S11/S12 — exchange ≡ Spark shuffle); what IS the
-  * reference's semantic surface — the sealed payload pipeline, its
-  * key/flag validation, and executor-side distribution — is real here:
+  * it, `receivingrelay/payload.go:15-102`) re-expressed over the framed
+  * socket edge (the gRPC transport is [[GrpcRelay]]):
   *
   *  - Serialization is NDJSON (the engine's record codec) instead of gob.
   *  - Compression speaks the reference's FULL algorithm menu
@@ -85,8 +82,7 @@ object SealedRelay {
   def validate(encrypt: Boolean, key: Option[Array[Byte]]): Unit = {
     require(!encrypt || key.isDefined, "encryption enabled but encryption key is empty")
     require(encrypt || key.isEmpty, "encryption key provided but AES-GCM is not enabled")
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
+    RelayProto.requireKey(key)
   }
 
   /** Seal one payload: compress then encrypt, as configured. The boolean
@@ -127,19 +123,9 @@ object SealedRelay {
     graft.functions.Codecs.decompressBounded(algoOf(flags), decrypted, maxInflatedBytes)
   }
 
-  /** Per-connection writer context for [[writeSocketChunked]] callbacks:
-    * the framed output, the partition id, and a once-per-connection ack
-    * input (lazy — a BufferedInputStream may read ahead, so it must be
-    * created exactly once or later acks lose buffered bytes). */
-  final class WriterCtx private[SealedRelay] (val out: DataOutputStream,
-                                              sock: Socket, val pid: Int) {
-    lazy val ackIn: DataInputStream =
-      new DataInputStream(new BufferedInputStream(sock.getInputStream))
-  }
-
   /** Read one [[FlagAck]] frame and decode its StreamAcknowledgment. */
-  private def readAck(ctx: WriterCtx): RelayProto.StreamAck = {
-    val (flags, payload) = readFrame(ctx.ackIn).getOrElse(
+  private def readAck(in: DataInputStream): RelayProto.StreamAck = {
+    val (flags, payload) = readFrame(in).getOrElse(
       throw new java.io.IOException("connection closed while awaiting ack"))
     require(flags == FlagAck, s"expected an ack frame, got flags $flags")
     RelayProto.decodeAck(payload)
@@ -151,81 +137,30 @@ object SealedRelay {
     * 572-597`) over the socket edge: each chunk rides as an
     * `EnvelopePayload(WrappedPayload)` frame (seq-numbered per
     * connection, sealing declared in metadata), and the stream ends with
-    * an `EnvelopeClose`. Ack modes, matching the receiver's config the
-    * way the AES key must match:
-    *  - "none": fire-and-forget frames (per-batch at-least-once via task
-    *    retry, like the flag-framed writer);
-    *  - "per-frame": one StreamAcknowledgment read after every frame —
-    *    `success` and seq echo are REQUIRED or the task fails;
-    *  - "batch": one ack after EnvelopeClose whose ok_count must equal
-    *    the frames sent (the reference's after-batch commit shape).
-    * A mode mismatch (writer expects acks, receiver sends none) fails the
-    * task on `ackTimeoutMs` instead of hanging. Same chunking,
-    * distribution and validation rules as [[writeSocketSealedWith]]. */
+    * an `EnvelopeClose`. Ack modes and their checks are
+    * [[RelayProto.EnvelopeSender]]'s; a mode mismatch (writer expects
+    * acks, receiver sends none) fails the task on `ackTimeoutMs` instead
+    * of hanging. Same chunking, distribution and validation rules as
+    * [[writeSocketSealedWith]]. */
   def writeSocketProto(df: DataFrame, host: String, port: Int,
                        compression: Int,
                        key: Option[Array[Byte]] = None,
                        maxChunkBytes: Int = 4 << 20,
                        ackMode: String = "none",
                        ackTimeoutMs: Int = 30000): Unit = {
-    graft.functions.Codecs.compress(compression, Array.emptyByteArray)
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
-    require(Set("none", "per-frame", "batch").contains(ackMode),
-      s"unknown ackMode '$ackMode' — none | per-frame | batch")
-    writeSocketChunked(df, host, port, maxChunkBytes,
-      soTimeoutMs = if (ackMode == "none") 0 else ackTimeoutMs)(
-      emit = { (ctx, body, seq) =>
-        val wrapped = RelayProto.wrap(body, id = s"p${ctx.pid}-$seq",
-          seq = seq, tsEpochMs = System.currentTimeMillis(),
-          algo = compression, key = key)
-        writeFrame(ctx.out, FlagProto,
-          RelayProto.encodeEnvelope(RelayProto.EnvelopePayload(wrapped)))
-        if (ackMode == "per-frame") {
-          val ack = readAck(ctx)
-          require(ack.success && ack.seq == seq,
-            s"frame $seq rejected by receiver (ack seq=${ack.seq}): ${ack.message}")
-        }
-      },
-      onDone = { (ctx, nFrames) =>
-        writeFrame(ctx.out, FlagProto,
-          RelayProto.encodeEnvelope(RelayProto.EnvelopeClose("end-of-partition")))
-        if (ackMode == "batch") {
-          val ack = readAck(ctx)
-          require(ack.success && ack.okCount == nFrames,
-            s"batch rejected: ok=${ack.okCount}/$nFrames err=${ack.errCount} ${ack.message}")
-        }
-      })
-  }
-
-  /** THE executor-side chunked socket loop shared by every sealed writer
-    * (flag-framed and proto-envelope): per partition, one connection;
-    * records pack into `maxChunkBytes` NDJSON bodies ([[Chunking.chunks]]
-    * owns the boundary arithmetic and the oversized-record fail-fast) and
-    * each chunk goes to `emit` with its per-connection sequence number.
-    * `onDone` runs after the last chunk with the frame count
-    * (stream-close / batch acks). */
-  private def writeSocketChunked(df: DataFrame, host: String, port: Int,
-                                 maxChunkBytes: Int, soTimeoutMs: Int = 0)
-                                (emit: (WriterCtx, Array[Byte], Long) => Unit,
-                                 onDone: (WriterCtx, Long) => Unit = (_, _) => ()): Unit = {
-    Chunking.requireBound(maxChunkBytes)
-    df.toJSON.foreachPartition { (it: Iterator[String]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.get().partitionId()
-        val sock = new Socket(host, port)
-        try {
-          if (soTimeoutMs > 0) sock.setSoTimeout(soTimeoutMs)
-          val ctx = new WriterCtx(
-            new DataOutputStream(new BufferedOutputStream(sock.getOutputStream)), sock, pid)
-          var seq = 0L
-          Chunking.chunks(it, maxChunkBytes).foreach { body =>
-            emit(ctx, body, seq)
-            seq += 1
-          }
-          onDone(ctx, seq)
-        } finally sock.close()
-      }
+    RelayWriter.requireSeal(compression, key, maxChunkBytes)
+    RelayProto.requireAckMode(ackMode)
+    RelayWriter.foreachConnection(df, RelayWriter.socket(host, port)) { (sock, it) =>
+      // fire-and-forget never reads, so it never times out
+      if (ackMode != "none" && ackTimeoutMs > 0) sock.setSoTimeout(ackTimeoutMs)
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      // lazy: a BufferedInputStream may read ahead, so it must be created
+      // exactly once per connection or later acks lose buffered bytes
+      lazy val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      new RelayProto.EnvelopeSender(ackMode,
+        send = e => writeFrame(out, FlagProto, RelayProto.encodeEnvelope(e)),
+        readAck = () => readAck(in))
+        .sendAll(RelayWriter.sealedChunks(it, maxChunkBytes, compression, key))
     }
   }
 
@@ -275,28 +210,15 @@ object SealedRelay {
     Some((flags, payload))
   }
 
-  /** K5/S11 sealed forward relay: each partition seals its rows as
-    * NDJSON batch frames over its own connection — executor-side like
-    * [[Sources.writeSocketNdjson]], never through the driver. Batches
-    * are CHUNKED at `maxChunkBytes` of raw body per frame: frames are
-    * independent unwrap units, so chunking bounds writer memory (a
-    * whole-partition frame held ~4 concurrent copies of the partition —
-    * string, bytes, gzip, ciphertext — and anything past the receiver's
-    * frame cap, 64 MiB by default, would be dropped wholesale), while the per-frame
-    * cipher/deflate setup still amortizes over megabytes. Encryption is
-    * keyed by `key`'s presence — one parameter, no flag to keep in
-    * lockstep ([[validate]]'s two-field rule applies to surfaces that
-    * genuinely carry both fields; here only the key length can fail).
-    *
-    * `maxChunkBytes` bounds the PRE-seal body; gzip on incompressible
-    * data and the AES-GCM envelope add small overhead, and the RECEIVER
-    * independently caps wire frames ([[DefaultMaxFrameBytes]] 64 MiB by
-    * default, configurable). The writer's bound is capped at 48 MiB so a
-    * legal writer config can never emit a frame a DEFAULT receiver drops
-    * (the far side discards over-cap frames with their connection, which
-    * the writer cannot see); a single record larger than the chunk bound
-    * throws rather than being framed whole for the same reason —
-    * silent loss is worse than a failed task. */
+  /** K5/S11 sealed forward relay: each partition seals its rows as GRS1
+    * flag frames over its own connection ([[RelayWriter.foreachConnection]]),
+    * one frame per ≤`maxChunkBytes` NDJSON chunk — [[Chunking]] states why
+    * chunks are bounded and how the bound sits under the receiver's frame
+    * cap — while the per-frame cipher/deflate setup still amortizes over
+    * megabytes. Encryption is keyed by `key`'s presence — one parameter,
+    * no flag to keep in lockstep ([[validate]]'s two-field rule applies to
+    * surfaces that genuinely carry both fields; here only the key length
+    * can fail). */
   def writeSocketSealed(df: DataFrame, host: String, port: Int,
                         gzipped: Boolean = true,
                         key: Option[Array[Byte]] = None,
@@ -308,21 +230,20 @@ object SealedRelay {
 
   /** [[writeSocketSealed]] with an explicit compression algorithm
     * ([[graft.functions.Codecs]] proto-enum ids:
-    * deflate/snappy/zstd/lz4/brotli). The algorithm must round-trip
-    * locally before any task runs — `compress(algo, empty)` validates the
-    * id and classpath on the driver (unknown ids fail here, not per-task
-    * on executors). */
+    * deflate/snappy/zstd/lz4/brotli), checked on the driver by
+    * [[RelayWriter.requireSeal]]. */
   def writeSocketSealedWith(df: DataFrame, host: String, port: Int,
                             compression: Int,
                             key: Option[Array[Byte]] = None,
                             maxChunkBytes: Int = 4 << 20): Unit = {
-    graft.functions.Codecs.compress(compression, Array.emptyByteArray)
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
-    writeSocketChunked(df, host, port, maxChunkBytes)(emit = { (ctx, body, _) =>
-      val (flags, payload) = seal(body, compression, key)
-      writeFrame(ctx.out, flags, payload)
-    })
+    RelayWriter.requireSeal(compression, key, maxChunkBytes)
+    RelayWriter.foreachConnection(df, RelayWriter.socket(host, port)) { (sock, it) =>
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      Chunking.chunks(it, maxChunkBytes).foreach { body =>
+        val (flags, payload) = seal(body, compression, key)
+        writeFrame(out, flags, payload)
+      }
+    }
   }
 }
 
@@ -354,8 +275,8 @@ final class SealedReceivingRelay(spark: SparkSession, port: Int,
   require(maxFrameBytes > 0, s"maxFrameBytes must be positive: $maxFrameBytes")
   require(maxInflatedBytes >= maxFrameBytes,
     s"maxInflatedBytes ($maxInflatedBytes) must be at least maxFrameBytes ($maxFrameBytes)")
-  require(Set("none", "per-frame", "batch").contains(ackMode),
-    s"unknown ackMode '$ackMode' — none | per-frame | batch")
+  RelayProto.requireAckMode(ackMode)
+  RelayProto.requireKey(key)
 
   private val ingress = new Ingress(spark)
   private val server = new ServerSocket(port)

@@ -257,19 +257,11 @@ object Tls {
   }
 
   /** TLS forward relay (K5 secured): [[Sources.writeSocketNdjson]] over
-    * mTLS. Executor-side like the plain variant — each partition builds
-    * its SSLContext from the (serializable) config and streams its rows
-    * over its own authenticated connection. */
+    * mTLS; each partition builds its SSLContext from the serializable
+    * config on the executor. */
   def writeSocketNdjsonTls(df: DataFrame, host: String, port: Int, cfg: TlsConfig): Unit =
-    df.toJSON.foreachPartition { (it: Iterator[String]) =>
-      if (it.hasNext) {
-        val sock = clientSocket(cfg, host, port)
-        val out = new java.io.BufferedWriter(
-          new java.io.OutputStreamWriter(sock.getOutputStream, UTF_8))
-        try { it.foreach { line => out.write(line); out.write('\n') }; out.flush() }
-        finally { out.close(); sock.close() }
-      }
-    }
+    RelayWriter.foreachConnection(df, RelayWriter.tlsSocket(cfg, host, port))(
+      RelayWriter.ndjsonLines)
 }
 
 /** S9 server jack, mTLS variant: a protocol-terminating NDJSON listener

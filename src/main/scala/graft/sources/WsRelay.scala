@@ -99,73 +99,43 @@ object WsRelay {
   }
 
   /** K5 forward relay over WebSocket: per partition, one Upgrade'd
-    * connection; rows pack into ≤`maxChunkBytes` NDJSON bodies
-    * ([[Chunking.chunks]]), seal into WrappedPayload envelopes and ride as
-    * masked binary messages, `EnvelopeClose` last. Ack modes mirror
-    * [[SealedRelay.writeSocketProto]] exactly: "none" fire-and-forget,
-    * "per-frame" requires a success ack with seq echo after every
-    * message, "batch" requires the summary ack's ok_count to equal the
-    * messages sent. A mode mismatch fails on `ackTimeoutMs`, not a hang. */
+    * connection; [[RelayWriter.sealedChunks]] envelopes ride as masked
+    * binary messages, `EnvelopeClose` last, and the ack modes are
+    * [[RelayProto.EnvelopeSender]]'s, exactly as on the socket edge. A
+    * mode mismatch fails on `ackTimeoutMs`, not a hang. */
   def writeWsProto(df: DataFrame, host: String, port: Int, path: String = "/relay",
                    compression: Int = graft.functions.Codecs.CompressNone,
                    key: Option[Array[Byte]] = None,
                    maxChunkBytes: Int = 4 << 20,
                    ackMode: String = "none",
                    ackTimeoutMs: Int = 30000): Unit = {
-    graft.functions.Codecs.compress(compression, Array.emptyByteArray)
-    key.foreach(k => require(Set(16, 24, 32).contains(k.length),
-      s"AES key must be 16/24/32 bytes, got ${k.length}"))
-    require(Set("none", "per-frame", "batch").contains(ackMode),
-      s"unknown ackMode '$ackMode' — none | per-frame | batch")
-    Chunking.requireBound(maxChunkBytes)
+    RelayWriter.requireSeal(compression, key, maxChunkBytes)
+    RelayProto.requireAckMode(ackMode)
     require(path.startsWith("/"), s"path must start with '/': $path")
-    df.toJSON.foreachPartition { (it: Iterator[String]) =>
-      if (it.hasNext) {
-        val pid = org.apache.spark.TaskContext.get().partitionId()
-        val sock = new Socket(host, port)
-        try {
-          // the handshake read is bounded in EVERY mode — a peer that
-          // accepts TCP but never answers the Upgrade must fail the task,
-          // not hang it; fire-and-forget then clears the timeout (it never
-          // reads again)
-          sock.setSoTimeout(ackTimeoutMs)
-          clientHandshake(sock, s"$host:$port", path)
-          if (ackMode == "none") sock.setSoTimeout(0)
-          val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-          val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-          def sendEnvelope(e: RelayProto.Envelope): Unit = {
-            out.write(WsFrames.encode(WsFrames.OpBinary,
-              RelayProto.encodeEnvelope(e), maskKey = Some(freshMask())))
-            out.flush()
-          }
-          def readAck(): RelayProto.StreamAck =
-            RelayProto.decodeAck(readBinaryMessage(in, out, masked = true)
-              .getOrElse(throw new java.io.IOException(
-                "connection closed while awaiting ack")))
-          var seq = 0L
-          Chunking.chunks(it, maxChunkBytes).foreach { body =>
-            sendEnvelope(RelayProto.EnvelopePayload(RelayProto.wrap(body,
-              id = s"p$pid-$seq", seq = seq,
-              tsEpochMs = System.currentTimeMillis(),
-              algo = compression, key = key)))
-            if (ackMode == "per-frame") {
-              val ack = readAck()
-              require(ack.success && ack.seq == seq,
-                s"message $seq rejected by receiver (ack seq=${ack.seq}): ${ack.message}")
-            }
-            seq += 1
-          }
-          sendEnvelope(RelayProto.EnvelopeClose("end-of-partition"))
-          if (ackMode == "batch") {
-            val ack = readAck()
-            require(ack.success && ack.okCount == seq,
-              s"batch rejected: ok=${ack.okCount}/$seq err=${ack.errCount} ${ack.message}")
-          }
-          out.write(WsFrames.encode(WsFrames.OpClose, Array.emptyByteArray,
-            maskKey = Some(freshMask())))
+    RelayWriter.foreachConnection(df, RelayWriter.socket(host, port)) { (sock, it) =>
+      // the handshake read is bounded in EVERY mode — a peer that
+      // accepts TCP but never answers the Upgrade must fail the task,
+      // not hang it; fire-and-forget then clears the timeout (it never
+      // reads again)
+      sock.setSoTimeout(ackTimeoutMs)
+      clientHandshake(sock, s"$host:$port", path)
+      if (ackMode == "none") sock.setSoTimeout(0)
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      new RelayProto.EnvelopeSender(ackMode,
+        send = { e =>
+          out.write(WsFrames.encode(WsFrames.OpBinary,
+            RelayProto.encodeEnvelope(e), maskKey = Some(freshMask())))
           out.flush()
-        } finally sock.close()
-      }
+        },
+        readAck = () =>
+          RelayProto.decodeAck(readBinaryMessage(in, out, masked = true)
+            .getOrElse(throw new java.io.IOException(
+              "connection closed while awaiting ack"))))
+        .sendAll(RelayWriter.sealedChunks(it, maxChunkBytes, compression, key))
+      out.write(WsFrames.encode(WsFrames.OpClose, Array.emptyByteArray,
+        maskKey = Some(freshMask())))
+      out.flush()
     }
   }
 }
@@ -191,8 +161,8 @@ final class WsRelayReceiver(spark: SparkSession, port: Int,
   require(maxMessageBytes > 0, s"maxMessageBytes must be positive: $maxMessageBytes")
   require(maxInflatedBytes >= maxMessageBytes,
     s"maxInflatedBytes ($maxInflatedBytes) must be at least maxMessageBytes ($maxMessageBytes)")
-  require(Set("none", "per-frame", "batch").contains(ackMode),
-    s"unknown ackMode '$ackMode' — none | per-frame | batch")
+  RelayProto.requireAckMode(ackMode)
+  RelayProto.requireKey(key)
 
   private val ingress = new Ingress(spark)
   private val server = new ServerSocket(port)

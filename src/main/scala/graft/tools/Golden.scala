@@ -128,14 +128,10 @@ object Golden {
 
   val sfDir = "/root/testdata/sf0.01"
 
-  /** Shared golden-session factory (also used by [[GoldenWave]]). */
+  /** Shared golden-session factory (also used by [[GoldenWave]]): the
+    * project posture ([[graft.Session.local]]) at 4 cores, quiet logs. */
   def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }

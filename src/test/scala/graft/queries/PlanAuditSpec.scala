@@ -173,6 +173,11 @@ class PlanAuditSpec extends SparkSpec {
     assert(udfOffenders.isEmpty, s"UDF nodes appeared in: $udfOffenders")
   }
 
+  test("every oracle entry names a declared query") {
+    val orphans = graft.SparkEntry.oracleSql.keySet -- graft.SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracle entries without a declared query: $orphans")
+  }
+
   test("ev_asof: as-of join is union + one window, never a nested-loop join") {
     val p = planOf("ev_asof_attribution")
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

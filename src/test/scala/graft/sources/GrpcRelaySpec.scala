@@ -174,6 +174,13 @@ class GrpcRelaySpec extends SparkSpec {
     } finally relay.stop()
   }
 
+  test("the receiver refuses an AES key of illegal length at construction") {
+    val e = intercept[IllegalArgumentException] {
+      new GrpcRelayReceiver(spark, 0, Some(key.take(17)))
+    }
+    assert(e.getMessage.contains("AES key must be 16/24/32 bytes, got 17"), e.getMessage)
+  }
+
   test("ack-mode mismatch times out instead of hanging") {
     val relay = new GrpcRelayReceiver(spark, 0, ackMode = "none")
     try {
@@ -568,6 +575,37 @@ class GrpcRelaySpec extends SparkSpec {
         assert(relay.badFrameCount == 0)
       } finally p.close()
     } finally relay.stop()
+  }
+
+  test("the writer applies the server's SETTINGS before its first DATA: a " +
+    "small window advertised late still bounds the first frame") {
+    // scripted h2 server whose preface SETTINGS (16-byte stream window)
+    // arrives late; it records the first DATA frame's size, then hangs up
+    val server = new java.net.ServerSocket(0)
+    val firstData = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val t = new Thread(() => {
+      val sock = server.accept()
+      try {
+        val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+        val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+        in.readFully(new Array[Byte](Http2.Preface.length))
+        Thread.sleep(300)
+        Http2.writeFrame(out, Http2.TSettings, 0, 0,
+          Http2.settingsPayload(Seq(Http2.SetInitialWindowSize -> 16L)))
+        out.flush()
+        var f = Http2.readFrame(in, 1 << 20)
+        while (f.tpe != Http2.TData) f = Http2.readFrame(in, 1 << 20)
+        firstData.put(f.payload.length)
+      } finally sock.close()
+    })
+    t.setDaemon(true); t.start()
+    try {
+      // the hang-up fails the write; only the frame size matters here
+      scala.util.Try(GrpcRelay.writeGrpcProto(df(1), "127.0.0.1",
+        server.getLocalPort, ackTimeoutMs = 5000))
+      val n = firstData.poll(10, java.util.concurrent.TimeUnit.SECONDS)
+      assert(n != null && n <= 16, s"first DATA frame of $n bytes overran the 16-byte window")
+    } finally server.close()
   }
 
   test("a receiver that dies mid-ack (truncated gRPC message + END_STREAM) " +

@@ -111,6 +111,13 @@ class SealedRelaySpec extends SparkSpec {
     intercept[IllegalArgumentException] { SealedRelay.validate(encrypt = true, Some(key.take(5))) }
   }
 
+  test("the receiving relay refuses an AES key of illegal length at construction") {
+    val e = intercept[IllegalArgumentException] {
+      new SealedReceivingRelay(spark, 0, Some(key.take(17)))
+    }
+    assert(e.getMessage.contains("AES key must be 16/24/32 bytes, got 17"), e.getMessage)
+  }
+
   test("bad magic is a protocol error") {
     val in = new DataInputStream(new ByteArrayInputStream("JUNKxxxx".getBytes(UTF_8)))
     val e = intercept[IllegalArgumentException] { SealedRelay.readFrame(in) }

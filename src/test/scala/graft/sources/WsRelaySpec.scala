@@ -74,6 +74,13 @@ class WsRelaySpec extends SparkSpec {
     } finally relay.stop()
   }
 
+  test("the receiver refuses an AES key of illegal length at construction") {
+    val e = intercept[IllegalArgumentException] {
+      new WsRelayReceiver(spark, 0, Some(key.take(17)))
+    }
+    assert(e.getMessage.contains("AES key must be 16/24/32 bytes, got 17"), e.getMessage)
+  }
+
   test("ack-mode mismatch times out instead of hanging") {
     val relay = new WsRelayReceiver(spark, 0, ackMode = "none")
     try {
