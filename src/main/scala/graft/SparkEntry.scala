@@ -57,8 +57,9 @@ object SparkEntry {
       // regression locks on the engine's own deterministic semantics;
       // independent semantic checks (candidates ⊇ exact dups, recall vs
       // brute force) live in ScalaTest, and GoldenLockSpec re-derives every
-      // golden from source each test run. sim_ann_ivf's k-means sums
-      // fixed-point longs (associative), so its index is bit-stable too.
+      // golden from source each test run. sim_ann_ivf's k-means trains on
+      // the driver over a hash-ordered sample with fixed-point long sums,
+      // so its index is bit-stable too.
       graft.tools.Golden.queries.map(n =>
         n -> s"SELECT * FROM read_parquet('/root/repo/golden/sf0.01/$n.parquet')")
     ): _*)

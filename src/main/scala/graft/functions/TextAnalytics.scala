@@ -764,13 +764,13 @@ object TextAnalytics {
     * one (doc_id, long) reduce — the same two-exchange floor as
     * [[lmScore]]. */
   def lmScoreBigram(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // r18 (guide §1.2 / §4.1): the previous HOF chain (filter lambda +
-    // transform/slice/concat) is CodegenFallback — interpreted, boxed per
-    // token, and the tokenization ran in both the size filter and the
-    // projection. One kernel pass over the engine-lowered text emits the
-    // SAME bigram strings (PropertySpec locks the equality; lower() stays
-    // the builtin so Unicode case mapping is unchanged); docs with < 2
-    // tokens leave as explode-of-empty exactly as the size filter did.
+    // One kernel, not a HOF chain (filter lambda + transform/slice/concat):
+    // that chain is CodegenFallback — interpreted, boxed per token, and
+    // its tokenization runs in both the size filter and the projection.
+    // One kernel pass over the engine-lowered text emits the SAME bigram
+    // strings (PropertySpec locks the equality; lower() stays the builtin
+    // so Unicode case mapping is unchanged); docs with < 2 tokens leave
+    // as explode-of-empty exactly as the size filter drops them.
     val bgs = docs
       .select(col("doc_id"),
         explode(FastHash.lowerBigramsCol(lower(col("text")))).as("bg"))
@@ -803,11 +803,11 @@ object TextAnalytics {
       .select(col("bg"),
         (round(log(col("c2").cast("double")) * 1048576).cast("long") -
           round(log(col("c1").cast("double")) * 1048576).cast("long")).as("qd"))
-    // r18 (guide §3.1): without the hint the planner BROADCASTS the
-    // corpus-scale pair table (the checkpointed LogicalRDD's stats read
-    // small) and streams the vocab-scale lm past it — a driver-side
-    // hash-relation build of the CORPUS side, inverted at any scale and
-    // measured as the dominant jobs at sf1. SHUFFLE_HASH on the lm side
+    // Without the hint the planner BROADCASTS the corpus-scale pair
+    // table (the checkpointed LogicalRDD's stats read small) and streams
+    // the vocab-scale lm past it — a driver-side hash-relation build of
+    // the CORPUS side, inverted at any scale and measured as the
+    // dominant jobs at sf1. SHUFFLE_HASH on the lm side
     // restores the declared shape: both sides exchange by bg, the
     // vocab-grain lm is the per-partition build — the corpus pays exactly
     // the one (doc_id, bg) key-join exchange the scaladoc promises, and

@@ -224,14 +224,14 @@ object Dedup {
   def segmentDedup(docs: DataFrame, segWords: Int = 8, minDocs: Int = 2): DataFrame = {
     require(segWords >= 1 && minDocs >= 2,
       s"need segWords >= 1 (got $segWords), minDocs >= 2 (got $minDocs)")
-    // r18 (guide §1.2/§4.1): the split-filter/transform-slice/lambda-hash
-    // chain here was CodegenFallback — interpreted per token in BOTH heavy
-    // jobs (the segHashes checkpoint and the final excision projection,
-    // ~2.1 s each of dd_segment_dedup's 5.4 s at sf1). The three kernels
+    // Kernels, not a split-filter/transform-slice/lambda-hash chain: that
+    // chain is CodegenFallback — interpreted per token in BOTH heavy jobs
+    // (the segHashes checkpoint and the final excision projection, ~2.1 s
+    // each of dd_segment_dedup's 5.4 s at sf1). The three kernels
     // (FastHash.wsSegments / distinctXxh64 / exciseSegs) compute the
     // identical values — same whitespace class, same chunking, Spark's
     // own XXH64 — locked by a DedupSimilaritySpec differential against
-    // this exact Catalyst formulation.
+    // that Catalyst formulation.
     val base = docs
       .select(col("doc_id"),
         graft.functions.FastHash.wsSegmentsCol(col("text"), segWords).as("segs"))
@@ -721,24 +721,23 @@ object Dedup {
     val nTasks = math.max(1, spark.sparkContext.defaultParallelism)
     spark.range(0, nTasks.toLong, 1, nTasks)
       .mapPartitions { it =>
-        // r18 (guide §1.2 per-task work): the merge itself early-exits.
-        // need(S) = the minimum intersection that can pass
-        // `jaccard >= thr` under the SAME double comparison the filter
-        // applies (J(x) = x/(S−x) monotone; PropertySpec differential-
-        // locks decision equality against the plain kernel). The r6 size
-        // prune is the need-check's mn < need special case: J(mn) = mn/mx,
-        // so mn < need ⟺ mn/mx < thr — boundary ratios (== threshold,
-        // A ⊆ B) still take the kernel. Dissimilar pairs (the vast
-        // majority) abort ~(1−thr)/(1+thr)·S steps into the merge instead
-        // of walking all of it. The enumeration itself is allocation-free
-        // (second r18 pass): a lengths array keeps pruned pairs from ever
-        // dereferencing the hash arrays (5k × 2.3 KB sets blow every
-        // cache level, so even the header touch was a DRAM miss per
-        // pruned pair), need(S) is memoized per task (S ≤ 2·maxLen), and
-        // survivors collect into a buffer per row instead of a per-pair
-        // Iterator chain — ~12.5M Iterator/closure allocations gone at
-        // the sf1 verifier size. Decisions and emitted tuples (and their
-        // order) are identical to the loop this replaces.
+        // The merge itself early-exits. need(S) = the minimum
+        // intersection that can pass `jaccard >= thr` under the SAME
+        // double comparison the filter applies (J(x) = x/(S−x) monotone;
+        // PropertySpec differential-locks decision equality against the
+        // plain kernel). The size prune is the need-check's mn < need
+        // special case: J(mn) = mn/mx, so mn < need ⟺ mn/mx < thr —
+        // boundary ratios (== threshold, A ⊆ B) still take the kernel.
+        // Dissimilar pairs (the vast majority) abort ~(1−thr)/(1+thr)·S
+        // steps into the merge instead of walking all of it. The
+        // enumeration itself is allocation-free: a lengths array keeps
+        // pruned pairs from ever dereferencing the hash arrays (5k × 2.3 KB
+        // sets blow every cache level, so even the header touch would be a
+        // DRAM miss per pruned pair), need(S) is memoized per task
+        // (S ≤ 2·maxLen), and survivors collect into a buffer per row
+        // instead of a per-pair Iterator chain (~12.5M Iterator/closure
+        // allocations at the sf1 verifier size). Decisions and emitted
+        // tuples (and their order) are those of the plain per-pair loop.
         val (ids, arrs) = bc.value
         val n = ids.length
         val lens = new Array[Int](n)

@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed Lloyd's k-means over an embedding column — the full-corpus
-  * counterpart of the SAMPLE-based driver k-means that seeds the IVF index
-  * ([[SimilarityIvf]]): there the model trains on ≤4096 collected rows;
-  * here every vector votes in every iteration, which is the shape that
-  * matters when the corpus is 100 TB and a 4096-row sample misses tail
-  * modes.
+  * counterpart of the sample-based driver trainer of the IVF and PQ
+  * indexes ([[SimilarityIvf.lloyd]]): there ≤4096 collected rows train the
+  * model; here every vector votes in every iteration, which is the shape
+  * that matters when the corpus is 100 TB and a 4096-row sample misses
+  * tail modes.
   *
   * Scale design, per iteration: centroids (k × dim longs — KBs) ride an
   * executor broadcast into the shared map-side argmin kernel

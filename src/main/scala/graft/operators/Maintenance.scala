@@ -467,7 +467,7 @@ object Maintenance {
     val (sa, sb) = (s"${sketchCol}_${suffixes._1}", s"${sketchCol}_${suffixes._2}")
     val left = a.withColumnRenamed(sketchCol, sa)
     val right = b.withColumnRenamed(sketchCol, sb)
-    // r18 note: under the session posture AQE rewrites this full-outer
+    // Under the session posture AQE rewrites this full-outer
     // SMJ to shuffled-hash at runtime. A 3-round fresh-JVM posture A/B
     // showed ev_rollup_distinct_theta ~10% faster with the rewrite off,
     // but a targeted hint("merge") micro-A/B (4 fresh JVMs) did NOT

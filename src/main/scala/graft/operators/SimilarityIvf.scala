@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.plans.VectorExpressions
 
@@ -8,9 +8,10 @@ import graft.plans.VectorExpressions
   * scale path for similarity search (design brief: "an IVF or LSH-bucketed
   * variant as the scale path"; this engine ships both).
   *
-  * Build: k-means coarse centroids trained distributedly — deterministic
-  * seeding (hash-ranked rows) and a fixed number of Lloyd iterations, each
-  * one aggregation pass (groupBy nearest-centroid → component-wise mean).
+  * Build: k-means coarse centroids trained on the driver ([[lloyd]], the
+  * trainer [[SimilarityPq]] shares) over one collected hash-ranked sample
+  * — deterministic seeding and a fixed number of Lloyd iterations with
+  * fixed-point sums, one Spark job per training.
   * Probe: rank cells by query-to-centroid similarity, scan only the best
   * `nprobe` cells with exact cosine.
   *
@@ -23,7 +24,7 @@ import graft.plans.VectorExpressions
 object SimilarityIvf {
 
   /** Fixed-point scale (2^20) for the centroid-update sums. */
-  private val FixedPoint = 1048576.0
+  private[operators] val FixedPoint = 1048576.0
 
   /** Train `nCells` centroids on a deterministic sample (hash-ranked) with
     * `iters` Lloyd iterations. Returns (cell, centroid array<double>). */
@@ -35,45 +36,68 @@ object SimilarityIvf {
     require(nCells <= sampleN,
       s"nCells $nCells exceeds the training sample $sampleN — raise sampleN " +
         "(≥ a few rows per centroid) or lower nCells")
+    lloyd(trainingSample(embeddings, sampleN), nCells, iters).zipWithIndex.map(_.swap)
+  }
+
+  /** The training sample: the first `sampleN` (vec_id, embedding as
+    * doubles) rows in (xxhash64(vec_id), vec_id) order, one Spark job. */
+  private[operators] def trainingSample(embeddings: DataFrame,
+      sampleN: Int): Array[(Long, Array[Double])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // deterministic sample: best `sampleN` rows by xxhash of id
-    val sample = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleN)
-      .select(transform(col("embedding"), x => x.cast("double")).as("v"))
-      .cache()
-    // seed: `nCells` hash-ranked sample rows
-    var centroids: Array[Array[Double]] = sample.limit(nCells).as[Seq[Double]]
-      .collect().map(_.toArray)
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(centroids)
-      val assigned = sample.as[Seq[Double]].map { v =>
-        (nearestCell(v.toArray, bc.value), v)
-      }.toDF("cell", "v")
-      // Component-wise mean per cell, one aggregation pass. Elements are
-      // quantized to 2^-20 fixed-point LONGS before summing: integer
-      // addition is associative, so the update is bit-identical under any
-      // partition layout or merge order — double sums would drift by ulps
-      // per run and make the trained index nondeterministic. The 2^-20
-      // quantization error is orders below what k-means assignment resolves.
-      val dim = centroids(0).length
-      val sums = assigned.groupBy("cell").agg(
-        count(lit(1)).as("n"),
-        array((0 until dim).map(d =>
-          sum((col("v").getItem(d) * FixedPoint).cast("long"))): _*).as("sums"))
-      val updated = sums.select(col("cell"), col("n"), col("sums")).as[(Int, Long, Seq[Long])]
-        .collect().map { case (cell, n, ss) =>
-          cell -> ss.map(_.toDouble / (n * FixedPoint)).toArray }.toMap
-      centroids = centroids.indices.map(i => updated.getOrElse(i, centroids(i))).toArray
-      bc.destroy()
-      it += 1
-    }
-    sample.unpersist()
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }
+    embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(sampleN)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .as[(Long, Array[Double])].collect()
   }
+
+  /** Lloyd's k-means on the driver, the ONE trainer of IVF centroids and
+    * PQ codebooks. Seeds are the first `k` rows; the first seed's length
+    * is `dim`. Sums are 2^-20 fixed-point LONGS truncated toward zero —
+    * associative, so bit-stable under any row order, with an error far
+    * below what assignment resolves; means are Σ/(n·2^20), and an empty
+    * cell keeps its centroid. A row that is null, short, or has a NaN,
+    * infinite or beyond-±2^43 component, and a Long sum overflow, are
+    * refused with an error naming the vector. */
+  private[operators] def lloyd(rows: Array[(Long, Array[Double])], k: Int,
+      iters: Int): Array[Array[Double]] = {
+    var centroids = rows.take(k).map { case (id, v) => checkVector(id, v, 0); v }
+    if (iters == 0) return centroids
+    require(rows.nonEmpty, "empty training sample — nothing to train on")
+    val dim = centroids(0).length
+    val fixed = rows.map { case (id, v) =>
+      checkVector(id, v, dim)
+      v.take(dim).map { x =>
+        val q = x * FixedPoint
+        // the ANSI double→long cast's range check, bound for bound
+        if (math.floor(q) <= Long.MaxValue.toDouble &&
+            math.ceil(q) >= Long.MinValue.toDouble) q.toLong
+        else refuse(id, s"component $x is outside the fixed-point range")
+      }
+    }
+    for (_ <- 0 until iters) {
+      val sums = Array.fill(centroids.length)(new Array[Long](dim))
+      val counts = new Array[Long](centroids.length)
+      for (r <- rows.indices) {
+        val c = nearestCell(rows(r)._2, centroids)
+        counts(c) += 1
+        try for (i <- 0 until dim) sums(c)(i) = Math.addExact(sums(c)(i), fixed(r)(i))
+        catch { case _: ArithmeticException =>
+          refuse(rows(r)._1, s"the fixed-point sum of cell $c overflows a Long") }
+      }
+      centroids = centroids.indices.map { c =>
+        if (counts(c) == 0) centroids(c) else sums(c).map(_.toDouble / (counts(c) * FixedPoint))
+      }.toArray
+    }
+    centroids
+  }
+
+  /** Refuse a null training vector or one shorter than `dim`. */
+  private[operators] def checkVector(id: Long, v: Array[Double], dim: Int): Unit =
+    if (v == null) refuse(id, "the vector is null")
+    else if (v.length < dim) refuse(id, s"${v.length} components, the model has $dim")
+
+  private def refuse(id: Long, why: String): Nothing =
+    throw new IllegalArgumentException(s"cannot train on vector vec_id=$id: $why")
 
   private[operators] def nearestCell(v: Array[Double], centroids: Array[Array[Double]]): Int = {
     var best = 0; var bestD = Double.MaxValue
@@ -217,10 +241,6 @@ object SimilarityIvf {
     }
   }
 
-  /** Probe a persisted index: resolve `_current` once, rank that version's
-    * cells by centroid distance, scan only the best `nprobe` PARTITIONS,
-    * exact cosine re-rank. `excludeIds` drops result rows (e.g. the query
-    * vector itself when it is part of the corpus) BEFORE the top-k cut. */
   /** Resolve the `_current` index version, its centroid table, and its
     * segment list — the ONE copy of the layout/error contract for every
     * probe path. */
@@ -264,6 +284,10 @@ object SimilarityIvf {
       (cell, d)
     }.sortBy { case (cell, d) => (d, cell) }.take(nprobe).map(_._1).toSeq
 
+  /** Probe a persisted index: resolve `_current` once, rank that version's
+    * cells by centroid distance, scan only the best `nprobe` PARTITIONS,
+    * exact cosine re-rank. `excludeIds` drops result rows (e.g. the query
+    * vector itself when it is part of the corpus) BEFORE the top-k cut. */
   def probeIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                  queryVec: Array[Float], k: Int, nprobe: Int,
                  excludeIds: Seq[Long] = Nil): DataFrame = {
@@ -320,12 +344,11 @@ object SimilarityIvf {
     val aDf = payload.toDF("anchor_id", "a_label", "a_v", "a_n")
     val cDf = cells.toDF("cell", "anchor_id")
     val dot = VectorExpressions.dotF _
-    // r18 (guide §2.3): nm depends only on the vector, so compute it per
-    // CORPUS ROW before the cell join multiplies each vector by the
-    // anchors probing its cell — previously the norm dot ran once per
-    // (vector, anchor) candidate pair. Same expression, same surviving
-    // rows → bit-identical output; JobProfile showed the probe job's
-    // task-time dominated by per-pair kernel work.
+    // nm depends only on the vector, so it is computed per CORPUS ROW
+    // before the cell join multiplies each vector by the anchors probing
+    // its cell, not once per (vector, anchor) candidate pair. Same
+    // expression, same surviving rows → bit-identical output; JobProfile
+    // shows the probe job's task time is per-pair kernel work.
     Similarity.rankHardNegatives(
       readVectors(spark, path, segs)
         .withColumn("nm", sqrt(dot(col("embedding"), col("embedding"))))
@@ -362,14 +385,14 @@ object SimilarityIvf {
     // zero-norm guard (the hardNegativesIvf rule): a zero vector makes
     // every touching cosine 0/0 = NaN, and NaN sorts ABOVE all doubles,
     // so one zero embedding would hijack rank 1 for its whole cell.
-    // r18 (guide §1.2, the hardNegativesIvf precedent): the norm is
-    // computed ONCE per corpus vector here and carried through both join
-    // sides — cosineF recomputed sqrt(dot(v,v)) for BOTH vectors on
-    // every candidate pair (nprobe·Σ|cell|² pairs), tripling the
-    // per-pair kernel. sim = dot/(src_nm·nm) is the same expression
-    // tree cosineF evaluated (identical sqrt inputs, identical multiply
-    // order), so every emitted double is bit-identical; the filter
-    // nm > 0 ⟺ dot > 0 (sqrt is monotone, NaN fails both).
+    // As in hardNegativesIvf, the norm is computed ONCE per corpus vector
+    // here and carried through both join sides — cosineF would recompute
+    // sqrt(dot(v,v)) for BOTH vectors on every candidate pair
+    // (nprobe·Σ|cell|² pairs), tripling the per-pair kernel.
+    // sim = dot/(src_nm·nm) is the same expression tree cosineF evaluates
+    // (identical sqrt inputs, identical multiply order), so every emitted
+    // double is bit-identical; the filter nm > 0 ⟺ dot > 0 (sqrt is
+    // monotone, NaN fails both).
     val vecs = readVectors(spark, path, segs)
       .withColumn("nm",
         sqrt(VectorExpressions.dotF(col("embedding"), col("embedding"))))
@@ -390,12 +413,11 @@ object SimilarityIvf {
       .select(col("src_id"), col("vec_id").as("dst_id"),
         (graft.plans.VectorExpressions.dotF(col("src_vec"), col("embedding")) /
           (col("src_nm") * col("nm"))).as("sim"))
-      // r18 (guide §2.4 — share one exchange): the tail paid TWO
-      // pair-scale shuffles — dropDuplicates exchanged by (src, dst),
-      // then the rank window re-exchanged by src. Partitioning once by
-      // src satisfies the dedup aggregate's clustering too (same-src
-      // rows are co-located, so same-(src,dst) rows are), so the
-      // aggregate and the window both run on this single exchange.
+      // One pair-scale exchange for the tail: dropDuplicates would
+      // exchange by (src, dst) and the rank window re-exchange by src.
+      // Partitioning once by src satisfies the dedup aggregate's
+      // clustering too (same-src rows are co-located, so same-(src,dst)
+      // rows are), so the aggregate and the window both run on it.
       // max(sim) over a duplicated (src, dst) equals dropDuplicates'
       // value exactly: duplicates are the SAME pair reached through two
       // shared cells, carrying the identical row-local sim double.
@@ -412,23 +434,13 @@ object SimilarityIvf {
   def ivfTopK(embeddings: DataFrame, queryId: Long, k: Int,
               nCells: Int = 16, nprobe: Int = 4): DataFrame = {
     val centroids = trainCentroids(embeddings, nCells)
-    val withCells = assignCells(embeddings, centroids)
-    val spark = embeddings.sparkSession
-    import spark.implicits._
     val qVec = embeddings.filter(col("vec_id") === queryId)
-      .select(col("embedding")).as[Seq[Float]].head().map(_.toDouble).toArray
-    val probeCells = centroids
-      .map { case (cell, ctr) =>
-        var d = 0.0; var j = 0
-        while (j < math.min(qVec.length, ctr.length)) { val t = qVec(j) - ctr(j); d += t * t; j += 1 }
-        (cell, d)
-      }
-      .sortBy { case (cell, d) => (d, cell) }
-      .take(nprobe).map(_._1).toSet
+      .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
+    val probeCells = nearestCells(qVec, centroids, nprobe)
     val q = embeddings.filter(col("vec_id") === queryId)
       .select(col("embedding").as("query_vec"))
-    withCells
-      .filter(col("cell").isin(probeCells.toSeq: _*))
+    assignCells(embeddings, centroids)
+      .filter(col("cell").isin(probeCells: _*))
       .filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("cell"),

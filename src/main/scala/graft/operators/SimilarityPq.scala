@@ -22,14 +22,11 @@ import org.apache.spark.sql.functions._
   * compressed form, keep the exact form for the final verify.
   *
   * Scale + determinism design:
-  *  - Training draws ONE bounded hash-ranked corpus sample (the same
-  *    sampling rule as [[SimilarityIvf.trainCentroids]]) and runs the m
-  *    per-subspace k-means DRIVER-LOCAL over it — one Spark job total,
-  *    not m corpus sorts. The arithmetic replicates the IVF trainer's
-  *    2^-20 fixed-point LONG sums exactly (truncate-toward-zero
-  *    quantization, sum-then-divide means), so codebooks are bit-stable
-  *    and independent of partition layout; that is what makes `sim_pq`
-  *    golden-eligible.
+  *  - Training runs the m per-subspace k-means on the driver over ONE
+  *    hash-ranked corpus sample, through the IVF sample and trainer
+  *    ([[SimilarityIvf.lloyd]]): one Spark job, 2^-20 fixed-point LONG
+  *    sums, codebooks bit-stable under any partition layout — that is
+  *    what makes `sim_pq` golden-eligible.
   *  - Encoding is a map-side projection (broadcast codebooks, primitive
   *    argmin loop). No shuffle. A null or wrong-dimension vector encodes
   *    to null codes and is excluded from scoring (visible, not a crash —
@@ -43,68 +40,23 @@ object SimilarityPq {
   /** Codebooks: m subspaces × ksub centroids × (dim/m) components. */
   type Codebooks = Array[Array[Array[Double]]]
 
-  /** Fixed-point scale for centroid-update sums — MUST match
-    * [[SimilarityIvf]]'s so the two trainers stay value-compatible. */
-  private val FixedPoint = 1048576.0
-
-  /** Train per-subspace codebooks on a deterministic bounded sample.
-    * One corpus job (hash-ranked top-`sampleN` collect, ~1 MB at 64
-    * dims); the per-subspace Lloyd iterations run driver-local on that
-    * sample with the IVF trainer's exact fixed-point arithmetic, so the
-    * result is identical to slicing the corpus per subspace and running
-    * the distributed trainer m times — minus m−1 corpus sorts.
+  /** Train per-subspace codebooks: one corpus job collects the
+    * hash-ranked top-`sampleN` sample (~1 MB at 64 dims), then each
+    * subspace slice trains on the driver through [[SimilarityIvf.lloyd]].
     * `dim` must divide evenly into `m` subspaces (asserted). */
   def trainCodebooks(embeddings: DataFrame, m: Int = 16, ksub: Int = 16,
                      iters: Int = 3, sampleN: Int = 4096): Codebooks = {
     require(m >= 1 && ksub >= 2, s"need m >= 1 (got $m), ksub >= 2 (got $ksub)")
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val sample: Array[Array[Float]] = embeddings
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleN)
-      .select(col("embedding")).as[Array[Float]]
-      .collect()
+    val sample = SimilarityIvf.trainingSample(embeddings, sampleN)
     require(sample.nonEmpty, "empty embeddings table — nothing to train on")
-    val dim = sample(0).length
+    val dim = Option(sample(0)._2).fold(0)(_.length)
+    sample.foreach { case (id, v) => SimilarityIvf.checkVector(id, v, dim) }
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
     (0 until m).map { j =>
-      val sliced = sample.map { v =>
-        val d = new Array[Double](sub)
-        var i = 0
-        while (i < sub) { d(i) = v(j * sub + i).toDouble; i += 1 }
-        d
-      }
-      lloydLocal(sliced, ksub, iters)
+      SimilarityIvf.lloyd(sample.map { case (id, v) =>
+        (id, v.slice(j * sub, (j + 1) * sub)) }, ksub, iters)
     }.toArray
-  }
-
-  /** Driver-local Lloyd iterations replicating the distributed trainer's
-    * value semantics bit-for-bit: seed = first `k` sample rows (hash
-    * order), per-iteration sums quantized `(x * 2^20).toLong` (truncate
-    * toward zero — the SQL double→long cast), mean = Σ/(n·2^20), empty
-    * cells keep their previous centroid. */
-  private def lloydLocal(rows: Array[Array[Double]], k: Int, iters: Int): Array[Array[Double]] = {
-    val dim = rows(0).length
-    var centroids: Array[Array[Double]] = rows.take(k).map(_.clone())
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(centroids.length)(new Array[Long](dim))
-      val counts = new Array[Long](centroids.length)
-      rows.foreach { v =>
-        val c = SimilarityIvf.nearestCell(v, centroids)
-        counts(c) += 1
-        var i = 0
-        while (i < dim) { sums(c)(i) += (v(i) * FixedPoint).toLong; i += 1 }
-      }
-      centroids = centroids.indices.map { c =>
-        if (counts(c) == 0) centroids(c)
-        else sums(c).map(_.toDouble / (counts(c) * FixedPoint))
-      }.toArray
-      it += 1
-    }
-    centroids
   }
 
   /** Encode every vector as its `m` per-subspace nearest-centroid codes —

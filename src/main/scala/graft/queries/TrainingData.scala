@@ -455,7 +455,8 @@ object TrainingData {
     * not poison the memo: later calls would die on "no index"), and
     * first-builds are serialized so a concurrent second call cannot
     * probe before `_current` is published. A fresh JVM always rebuilds,
-    * so a kernel change can never probe stale artifacts. */
+    * so a kernel change can never probe stale artifacts (GoldenLockSpec's
+    * per-run re-derivation stays honest). */
   private val idxBuilt = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val idxBuildLock = new Object
 
@@ -687,10 +688,6 @@ object TrainingData {
     Dedup.charNgramJaccardPairs(Tables.documents(spark, dir), n = 3,
         sampleMod = 10, threshold = 0.6)
 
-  /** Paths whose IVF index this JVM already built — build once, probe
-    * many (the declared index contract). Keyed per fixture dir; a fresh
-    * JVM always rebuilds, so a code change can never probe a stale index
-    * (GoldenLockSpec's per-run re-derivation stays honest). */
   /** ANN via the PERSISTED versioned IVF index: the first call in a JVM
     * builds `v<N>/` + `_current` (SimilarityIvf.buildIndex — the same
     * build/swap layout as the LSH index), every later call is probe-only:
@@ -1016,7 +1013,7 @@ object TrainingData {
   /** Distributed full-corpus k-means ([[graft.operators.KMeans]]): 8
     * clusters, 3 Lloyd iterations over every embedding — the unsupervised
     * counterpart of the label-keyed [[simCentroids]] and the full-data
-    * path the IVF index's sample-based driver k-means approximates.
+    * path the IVF/PQ indexes' sample-based driver trainer approximates.
     * Output is the deterministic training artifact: final centroid
     * components (integer ppm) + cluster populations. Golden-locked (all
     * integer math, associative sums, total tie orders). */

@@ -12,10 +12,9 @@ import org.apache.spark.sql.SparkSession
   * results of deterministic hash kernels; per-pair floats (est_jaccard,
   * cos_sim, entropy) are computed row-locally in one JVM kernel (no
   * cross-partition float accumulation, so bit-stable under any parallelism
-  * or partition layout); orderings are total. `sim_ann_ivf` qualifies
-  * since its k-means update switched to 2^-20 fixed-point LONG sums —
-  * integer addition is associative, so the trained index is bit-stable
-  * under any merge order (a double sum would not be).
+  * or partition layout); orderings are total. `sim_ann_ivf` qualifies:
+  * its k-means trains on the driver over a hash-ordered sample with 2^-20
+  * fixed-point LONG sums, so the trained index is bit-stable.
   *
   * These goldens are regression locks on the engine's own semantics —
   * independent SEMANTIC verification lives in the ScalaTest invariants
@@ -37,7 +36,7 @@ object Golden {
     // JVM; GoldenLockSpec re-derives per run and will flag an
     // environment change loudly — regenerate the golden then.
     "txt_compress_ratio",
-    // PQ/ADC: codebooks from the same fixed-point k-means as sim_ann_ivf;
+    // PQ/ADC: codebooks from sim_ann_ivf's fixed-point k-means trainer;
     // the ADC table is driver-built in fixed order and the per-row sum
     // iterates subspaces in fixed order — no distributed float reduce
     // anywhere, so the result is bit-stable under any layout

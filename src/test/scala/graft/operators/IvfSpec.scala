@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class IvfSpec extends SparkSpec {
@@ -31,6 +32,122 @@ class IvfSpec extends SparkSpec {
     val cells = SimilarityIvf.assignCells(embs, c1)
       .groupBy("cell").count().collect()
     assert(cells.length > 1) // data actually spreads over cells
+  }
+
+  /** The SQL update step the driver trainer replaced, kept as the
+    * reference: hash-ranked cached sample, then per iteration a
+    * groupBy(cell) of count and `sum((v * 2^20).cast("long"))` merged into
+    * the previous centroids. Also returns the most cells any iteration
+    * left empty. */
+  private def sqlTrain(embeddings: DataFrame, nCells: Int, iters: Int,
+                       sampleN: Int): (Array[Array[Double]], Int) = {
+    import spark.implicits._
+    val sample = embeddings
+      .select(col("vec_id"), col("embedding"))
+      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+      .limit(sampleN)
+      .select(transform(col("embedding"), x => x.cast("double")).as("v"))
+      .cache()
+    var centroids = sample.limit(nCells).as[Seq[Double]].collect().map(_.toArray)
+    var mostEmpty = 0
+    for (_ <- 0 until iters) {
+      val ctrs = centroids
+      val dim = ctrs(0).length
+      val updated = sample.as[Seq[Double]]
+        .map(v => (SimilarityIvf.nearestCell(v.toArray, ctrs), v)).toDF("cell", "v")
+        .groupBy("cell").agg(count(lit(1)).as("n"),
+          array((0 until dim).map(d => sum((col("v").getItem(d) *
+            SimilarityIvf.FixedPoint).cast("long"))): _*).as("sums"))
+        .as[(Int, Long, Seq[Long])].collect()
+        .map { case (cell, n, ss) =>
+          cell -> ss.map(_.toDouble / (n * SimilarityIvf.FixedPoint)).toArray }
+        .toMap
+      mostEmpty = math.max(mostEmpty, ctrs.length - updated.size)
+      centroids = ctrs.indices.map(i => updated.getOrElse(i, ctrs(i))).toArray
+    }
+    sample.unpersist()
+    (centroids, mostEmpty)
+  }
+
+  private def rows(vs: Seq[(Long, Array[Float])]): DataFrame = {
+    import spark.implicits._
+    vs.toDF("vec_id", "embedding").withColumn("label", lit(0))
+  }
+
+  test("driver trainer equals the SQL update step bit for bit at iters 0, 1 and 3") {
+    import spark.implicits._
+    val embs = Tables.embeddings(spark, sfDir)
+    val fixture = embs.select("vec_id", "embedding").as[(Long, Array[Float])]
+      .collect().sortBy(_._1)
+    val dim = fixture.head._2.length
+    // negated copies (truncation toward zero on negative sums) and
+    // vectors longer than the seed (only the first `dim` components count)
+    val edge = embs.unionByName(rows(
+      fixture.take(40).map { case (id, v) => (200000L + id, v.map(-_)) } ++
+      fixture.slice(40, 60).map { case (id, v) =>
+        (300000L + id, v ++ Array.fill(8)(0.25f)) }))
+    // duplicate-heavy: identical seeds leave all but one of their cells empty
+    val dups = rows(Seq.tabulate(40)(i => (400000L + i, fixture(0)._2)) ++
+      fixture.slice(1, 7))
+    val cases = Seq(("fixture", embs, 8, 4096), ("edge rows", edge, 8, 4096),
+      ("duplicates", dups, 4, 4096), ("nCells == sampleN", edge, 16, 16))
+    for ((name, df, nCells, sampleN) <- cases; iters <- Seq(0, 1, 3)) {
+      val got = SimilarityIvf.trainCentroids(df, nCells, iters, sampleN)
+      val (want, mostEmpty) = sqlTrain(df, nCells, iters, sampleN)
+      assert(got.map(_._1).toSeq == want.indices, s"$name iters=$iters")
+      if (name == "duplicates" && iters > 0)
+        assert(mostEmpty > 0, s"no cell was left empty at iters=$iters")
+      got.zip(want).foreach { case ((cell, g), w) =>
+        assert(g.sameElements(w), s"$name iters=$iters cell $cell: " +
+          s"${g.toSeq} != ${w.toSeq}")
+      }
+    }
+    // the longer rows are in the sample, and the seed is not one of them
+    val sample = SimilarityIvf.trainingSample(edge, 4096)
+    assert(sample.head._2.length == dim && sample.exists(_._2.length > dim))
+  }
+
+  test("trainCentroids runs exactly one Spark job") {
+    val embs = Tables.embeddings(spark, sfDir)
+    val sc = spark.sparkContext
+    val group = s"ivf-train-${System.nanoTime()}"
+    sc.setJobGroup(group, "trainCentroids")
+    try SimilarityIvf.trainCentroids(embs, nCells = 8, iters = 3)
+    finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.length == 1, s"jobs ${jobs.toSeq}")
+  }
+
+  /** Train on the fixture plus one vector `bad` (vec_id 900001) and
+    * return the refusal's message. */
+  private def refusal(bad: Array[Float]): String = {
+    val embs = Tables.embeddings(spark, sfDir)
+    intercept[IllegalArgumentException] {
+      SimilarityIvf.trainCentroids(embs.unionByName(rows(Seq(900001L -> bad))), 8)
+    }.getMessage
+  }
+
+  private lazy val v0 = Tables.embeddings(spark, sfDir).filter(col("vec_id") === 0)
+    .select("embedding").collect().head.getSeq[Float](0).toArray
+
+  test("trainer refuses a NaN or beyond-2^43 component and a Long sum overflow") {
+    for (x <- Seq(Float.NaN, 1e13f)) {
+      val msg = refusal(v0.updated(3, x))
+      assert(msg.contains("vec_id=900001: component") &&
+        msg.contains("outside the fixed-point range"), msg)
+    }
+    // 8e12 · 2^20 fits a Long; two of them in one cell do not
+    val e = intercept[IllegalArgumentException] {
+      SimilarityIvf.lloyd(Array(1L -> Array(8e12), 2L -> Array(8e12)), 1, 1)
+    }
+    assert(e.getMessage.contains("vec_id=2: the fixed-point sum of cell 0 " +
+      "overflows a Long"), e.getMessage)
+  }
+
+  test("trainer refuses a null or short vector, naming it") {
+    assert(refusal(null).contains("vec_id=900001: the vector is null"))
+    assert(refusal(Array.fill(8)(0.1f))
+      .contains("vec_id=900001: 8 components, the model has 64"))
   }
 
   test("IVF top-k finds planted near-duplicates (same bar as LSH path)") {

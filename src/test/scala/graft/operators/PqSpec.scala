@@ -38,6 +38,33 @@ class PqSpec extends SparkSpec {
     assert(distinctCodes > 4, s"only $distinctCodes distinct codes")
   }
 
+  /** Train codebooks on the fixture plus one vector `bad` (vec_id
+    * 900001) and return the refusal's message. */
+  private def refusal(bad: Array[Float]): String = {
+    val withBad = embs.unionByName(Seq((900001L, bad)).toDF("vec_id", "embedding")
+      .withColumn("label", lit(0)))
+    intercept[IllegalArgumentException] {
+      SimilarityPq.trainCodebooks(withBad, m = 16, ksub = 16)
+    }.getMessage
+  }
+
+  private lazy val v0 = embs.filter(col("vec_id") === 0L)
+    .select("embedding").as[Array[Float]].head()
+
+  test("PQ trainer refuses a NaN or beyond-2^43 component, naming the vector") {
+    for (x <- Seq(Float.NaN, 1e13f)) {
+      val msg = refusal(v0.updated(3, x))
+      assert(msg.contains("vec_id=900001: component") &&
+        msg.contains("outside the fixed-point range"), msg)
+    }
+  }
+
+  test("PQ trainer refuses a null or short vector, naming it") {
+    assert(refusal(null).contains("vec_id=900001: the vector is null"))
+    assert(refusal(Array.fill(8)(0.1f))
+      .contains("vec_id=900001: 8 components, the model has 64"))
+  }
+
   test("ADC shortlist captures the exact top-k (recall floor at shipped config)") {
     val top10 = exactOrder().take(10).toSet
     val short50 = SimilarityPq.adcTopK(SimilarityPq.encode(embs, books),
