@@ -27,13 +27,8 @@ object Session {
       // ds_snapshot_diff and sim_semdedup. A same-JVM interleaved A/B had
       // claimed 0.72-0.84x on six sort-merge queries; that did not
       // reproduce (q29: 0.92/1.12/1.09).
-      //
-      // Both values can be overridden from the environment so each arm
-      // of such an A/B runs in its own JVM; the defaults are the posture.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_SHJ_THRESHOLD", "128m"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 }

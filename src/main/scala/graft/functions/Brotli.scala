@@ -27,7 +27,7 @@ import java.io.IOException
   * (`tools/fuzz_brotli.py` + `graft.tools.BrotliFuzz`) that replays
   * thousands of reference-encoder outputs through this decoder.
   *
-  * The sealing twin is [[BrotliEnc]] (r13): `Codecs.compress(brotli)`
+  * The sealing twin is [[BrotliEnc]]: `Codecs.compress(brotli)`
   * emits real RFC 7932 streams that this decoder AND the reference
   * decoder (libbrotlidec, via tools/check_brotli_enc.py) open
   * byte-exact, so both directions of the reference's enum-4 arm
@@ -246,11 +246,9 @@ object Brotli {
   /** §3.4/§3.5: read one prefix-code description for `alphabetSize`. */
   private def readPrefixCode(bits: Bits, alphabetSize: Int): Prefix = {
     val hskip = bits.read(2)
-    if (trace) println(s"[code] alphabet=$alphabetSize hskip=$hskip")
     if (hskip == 1) {
       // simple form: 1-4 explicit symbols
       val nsym = bits.read(2) + 1
-      if (trace) println(s"[code] simple nsym=$nsym")
       val abits = 32 - Integer.numberOfLeadingZeros(alphabetSize - 1)
       val syms = Array.fill(nsym)(bits.read(abits))
       syms.foreach(s => if (s >= alphabetSize)
@@ -323,8 +321,6 @@ object Brotli {
       if (space2 < 0) throw new IOException("brotli: over-subscribed code")
       if (space2 > 0 && lengths.count(_ > 0) != 1)
         throw new IOException("brotli: under-subscribed code")
-      if (trace) println(s"[code] complex lens=" + lengths.zipWithIndex
-        .filter(_._1 > 0).map { case (l, s) => s"$s:$l" }.mkString(","))
       buildPrefix(lengths)
     }
   }
@@ -353,19 +349,15 @@ object Brotli {
     }
   }
 
-  private val trace = sys.env.contains("GRAFT_BROTLI_TRACE")
-
   /** §7.3 context map: RLE of zeros + inverse MTF. */
   private def readContextMap(bits: Bits, size: Int, nTrees: Int): Array[Int] = {
     val map = new Array[Int](size)
     if (nTrees == 1) return map
     val rleMax = if (bits.read(1) == 1) bits.read(4) + 1 else 0
-    if (trace) println(s"[cmap] size=$size nTrees=$nTrees rleMax=$rleMax")
     val tree = readPrefixCode(bits, nTrees + rleMax)
     var i = 0
     while (i < size) {
       val s = tree.read(bits)
-      if (trace) println(s"[cmap] i=$i sym=$s")
       if (s == 0) { map(i) = 0; i += 1 }
       else if (s <= rleMax) {
         var reps = (1 << s) + bits.read(s)
@@ -575,8 +567,6 @@ object Brotli {
     val postfixMask = (1 << npostfix) - 1
     val distAlphabet = 16 + ndirect + (48 << npostfix)
     val contextModes = Array.fill(catL.nTypes)(bits.read(2))
-    if (trace) println(s"[mb] mlen=$mlen nbl=${catL.nTypes}/${catI.nTypes}/${catD.nTypes} " +
-      s"npostfix=$npostfix ndirect=$ndirect modes=${contextModes.mkString(",")}")
     val nTreesL = readVarLenUint8(bits) + 1
     val cmapL = readContextMap(bits, catL.nTypes * 64, nTreesL)
     val nTreesD = readVarLenUint8(bits) + 1
@@ -600,7 +590,6 @@ object Brotli {
       val copyCode = CopyRangeLut(rangeIdx) + (cmd & 7)
       val insertLen = InsOffset(insCode) + bits.read(InsBits(insCode))
       var copyLen = CopyOffset(copyCode) + bits.read(CopyBits(copyCode))
-      if (trace) println(s"[cmd] pos=$produced cmd=$cmd ins=$insertLen copy=$copyLen implicit0=${distanceCode == 0}")
 
       // literals
       var j = 0
@@ -653,7 +642,6 @@ object Brotli {
       }
 
       val maxDistance = math.min(outPos().toLong, maxBackward)
-      if (trace) println(s"[dist] pos=$produced distance=$distance maxDist=$maxDistance rb=${distRb.mkString(",")}")
       if (distance > maxDistance) {
         // §8 static dictionary reference
         if (copyLen < 4 || copyLen > 24)

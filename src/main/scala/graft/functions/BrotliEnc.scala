@@ -34,7 +34,7 @@ package graft.functions
   * (bytes, reference at its vector's quality): english 84 vs 130 (q9 —
   * we BEAT it) and 64 vs 54 (q11), utf8 32 vs 36 (q11 — beat), hello
   * 25 vs 28-40 (beat), repeat 31 vs 29 (q7), random 4101 vs 4100,
-  * ndjson 573 vs 570 (q5 — 1.005x, gap closed; r13 shipped 1010). The
+  * ndjson 573 vs 570 (q5 — 1.005x; an earlier parse gave 1010). The
   * static-dictionary matcher (identity transform, 4-byte-prefix index
   * over the 13.5k Appendix A words of length >= 6) closes the english
   * text gap (a word's FIRST occurrence rides the dictionary, later
@@ -46,7 +46,7 @@ package graft.functions
   * ~34 MB/s on incompressible payloads (barren-region stride + the
   * stored fallback), ~11-13 MB/s on matchy text/NDJSON — the price of
   * the 8-way candidate sweep that halves the sealed byte count vs the
-  * r13 parse. Executors seal per partition, so the relay path scales
+  * earlier parse. Executors seal per partition, so the relay path scales
   * with cores; hash tables scale with input size (a few-KB frame pays
   * a 16 KiB table, not 4.5 MB).
   *
@@ -822,9 +822,6 @@ object BrotliEnc {
     }
     val cmap = new Array[Int](64)
     members.indices.foreach(t => members(t).foreach(cmap(_) = t))
-    if (sys.env.contains("GRAFT_BROTLI_TRACE"))
-      System.err.println(s"[ctx] clusters=${hists.length} " +
-        s"lits=${hists.map(_.sum).sum} perCluster=${hists.map(_.sum).mkString(",")}")
     (cmap, hists.toArray)
   }
 

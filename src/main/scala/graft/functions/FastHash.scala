@@ -188,10 +188,9 @@ object FastHash {
     udf((s: String) => markerHits(s, sets)).apply(text)
 
   /** The five character-class counts every per-doc token/quality signal is
-    * built from, in ONE code-point pass (r18, guide §1.2 per-task work —
-    * these were four separate java.util.regex passes per row, the
-    * dominant kernel cost of txt_quality/txt_tokens and a third of the
-    * fused txt_signals scan):
+    * built from, in ONE code-point pass (per-task work: four separate
+    * java.util.regex passes per row would be the dominant kernel cost of
+    * txt_quality/txt_tokens and a third of the fused txt_signals scan):
     *
     *   1. punct  — chars in [.!?,;:]
     *      ≡ length(regexp_replace(text, "[^.!?,;:]", ""))
@@ -334,7 +333,7 @@ object FastHash {
       b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
   }
 
-  /** Whitespace-token segments (r18, the segmentDedup kernel): tokens are
+  /** Whitespace-token segments (the segmentDedup kernel): tokens are
     * the non-empty elements of `split(text, "[ \t\n\f\r]+")`,
     * grouped into chunks of `segWords` joined by one space — exactly
     * `transform(sequence(0, ceil(size(ws)/segWords)-1),

@@ -107,7 +107,7 @@ object TextAnalytics {
     * txt_tokens, the fused signals scan) runs the pass once per row where
     * the regex formulations each cost their own java.util.regex walk —
     * the counts are value-identical by the property-locked equivalences
-    * on the kernel's scaladoc (r18, guide §1.2). */
+    * on the kernel's scaladoc. */
   private def textCounts(text: Column): Column = FastHash.textCountsCol(text)
 
   /** Count of alphabetic word runs — the denominator for token-rate

@@ -702,10 +702,10 @@ object Dedup {
         s"raise sampleMod — the scalable near-dup path is minhashPairs")
     // id-sorted snapshot: ids(i) < ids(j) for i < j, so the triangular
     // loop below enumerates exactly the a_id < b_id pair set. STRICTLY
-    // increasing is asserted (r18, advisor item): doc_id is a key in every
-    // fixture, but a duplicated id here would silently emit self-pairs —
-    // the r16 crossJoin form deduped via toMap, the array form must not
-    // regress that quietly.
+    // increasing is asserted: doc_id is a key in every fixture, but a
+    // duplicated id here would silently emit self-pairs — a crossJoin
+    // form dedupes via toMap, this array form must not regress that
+    // quietly.
     val byId = sets.sortBy(_._1)
     for (i <- 1 until byId.length)
       require(byId(i - 1)._1 < byId(i)._1,
@@ -987,7 +987,7 @@ object Dedup {
       // LogicalRDD.rewriteStatsAndConstraints walk whenever the
       // optimizer collapses the branch aliases back to shared attribute
       // ids and the node lineage carries filter constraints (reproduced
-      // on dd_cluster; OPTIMIZATION_r18.md has the stack). This
+      // on dd_cluster). This
       // single-pull + stale-jump round is the measured optimum; the
       // remaining sf1 cost is the pair GENERATION feeding
       // [[connectedComponents]], not the loop. The convergence checksum
@@ -1015,9 +1015,9 @@ object Dedup {
       "iterations — the pair graph has pathological diameter; raise maxIter")
     labels.select(col("id").as(idCol), col("lbl").as("cluster_id"))
     } finally {
-      // reset the thread-local job description on EVERY exit (r18, advisor
-      // item): a mid-loop failure previously left "cc: round N" stuck on
-      // the context, mislabeling every later job in the session
+      // reset the thread-local job description on EVERY exit: a mid-loop
+      // failure would leave "cc: round N" stuck on the context,
+      // mislabeling every later job in the session
       sc.setJobDescription(null)
       // restore the application's checkpoint dir — this function must not
       // silently repoint other jobs' reliable checkpoints. (If none was

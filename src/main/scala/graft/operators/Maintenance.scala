@@ -305,7 +305,7 @@ object Maintenance {
 
   /** Fused per-source theta sketch of word n-gram shingles — the kernel
     * form of `thetaRollup(explode(wordShinglesKernel(text, n)))` for the
-    * cross-source overlap report (r18, guide §1.2 per-task work).
+    * cross-source overlap report (one pass of per-task work).
     * Value-identical by construction: tokenization is byte-for-byte
     * [[Dedup.wordShingleSet]]'s (Unicode lowercase, `[^a-z]+` split), and
     * each shingle updates the sketch with the SAME injective item

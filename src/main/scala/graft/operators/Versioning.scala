@@ -42,7 +42,7 @@ object Versioning {
         coalesce(col("__dim_n"), col("__dim_o")).as(dimCol))
   }
 
-  /** SAME-BASE fusion of [[snapshotDiff]] (r18, guide §1.2/§2.4): when
+  /** SAME-BASE fusion of [[snapshotDiff]]: when
     * both snapshots are filtered/edited VIEWS OF ONE physical table —
     * the incremental-rebuild case: the serving version and the rebuilt
     * version share the base corpus — the row-level diff needs no join
@@ -128,7 +128,7 @@ object Versioning {
         when(col("__aligned") === 1, col("__d2")).as("shift_d2"))
   }
 
-  /** SAME-BASE fusion of [[embeddingDrift]] (r18, guide §1.2/§2.4): both
+  /** SAME-BASE fusion of [[embeddingDrift]]: both
     * snapshots as membership predicates over ONE embeddings table. The
     * per-side (label, pos) sums fold into a single aggregation carrying
     * side flags — one posexplode pass instead of two, and the (label,
@@ -221,7 +221,7 @@ object Versioning {
     driftFromHistograms(signalHistogram(oldSnap, signals),
       signalHistogram(newSnap, signals))
 
-  /** SAME-BASE fusion of [[signalDrift]] (r18, guide §1.2/§2.4): both
+  /** SAME-BASE fusion of [[signalDrift]]: both
     * snapshots as membership predicates over ONE table. The two
     * [[signalHistogram]] scans and their bucket-level full-outer join
     * fold into a single scan whose aggregate carries per-side counts —

@@ -16,11 +16,14 @@ import org.apache.spark.sql.types.StructType
   * ([[Tls]] supplies the handshake; both relay endpoints take an
   * optional [[TlsConfig]]/[[MtlsOptions]]) — the framing a stock gRPC
   * peer actually uses for the reference's primary cross-process edge
-  * (`/root/reference/proto/electrician_relay.proto:580-583`,
+  * (`proto/electrician_relay.proto:580-583`,
   * `pkg/internal/forwardrelay/stream.go`). Frames, the connection
   * preface, SETTINGS/PING/WINDOW_UPDATE handling, and flow-control
   * accounting are implemented here from the public RFC, in the same
-  * blocking-socket style as the repo's RFC 6455 and NATS transports;
+  * blocking-socket style as the repo's RFC 6455 and NATS transports.
+  * The connection rules live ONCE, in [[Connection]]: both the writer
+  * ([[GrpcRelay]]) and the receiver ([[GrpcRelayReceiver]]) drive one
+  * over their socket and keep only their own role's stream logic.
   * ONLY the HPACK header-block codec (RFC 7541 — dynamic table, huffman)
   * is delegated to netty's public `DefaultHttp2HeadersEncoder/Decoder`,
   * which ships on the Spark classpath — hand-rolling the 257-entry
@@ -192,8 +195,7 @@ object Http2 {
   /** Send-side flow-control ledger for one connection: the peer's
     * connection window plus per-stream windows, fed by its SETTINGS
     * (INITIAL_WINDOW_SIZE re-bases OPEN streams too, §6.9.2) and
-    * WINDOW_UPDATEs. `awaitWindow` is how a blocking sender respects a
-    * slow peer: process incoming frames until credit arrives. */
+    * WINDOW_UPDATEs; [[Connection.sendData]] spends it. */
   final class SendWindows {
     var conn: Long = DefaultWindow
     var initial: Long = DefaultWindow
@@ -223,6 +225,127 @@ object Http2 {
     }
     def onWindowUpdate(id: Int, inc: Long): Unit =
       if (id == 0) conn += inc else streams(id) = stream(id) + inc
+  }
+
+  /** What [[Connection.next]] hands its owner: nothing (a control frame
+    * answered in place, or a header-block fragment), a complete header
+    * block, or any other frame. */
+  private[sources] sealed trait Inbound
+  private[sources] case object Handled extends Inbound
+  private[sources] final case class HeaderBlock(stream: Int,
+      headers: Seq[(String, String)], endStream: Boolean) extends Inbound
+  private[sources] final case class Other(f: Frame) extends Inbound
+
+  /** The connection half of HTTP/2 that both relay endpoints share: over
+    * one connection's `in`/`out` it owns the HPACK codec and the send
+    * windows, answers control frames, assembles header blocks, credits
+    * received DATA and sends DATA under flow control. Stream state stays
+    * with the owner. `maxMessageBytes` caps a header block; a frame may
+    * carry 1 KiB more (padding). */
+  private[sources] final class Connection(in: DataInputStream,
+                                          val out: DataOutputStream,
+                                          maxMessageBytes: Int) {
+    val codec = new HeaderCodec
+    val windows = new SendWindows
+    /** The peer's first non-ACK SETTINGS has been applied. */
+    var peerSettings = false
+    private val block = new java.io.ByteArrayOutputStream()
+    private var blockStream = 0 // 0: no header block open
+    private var blockEnd = false
+
+    /** Read + handle one frame. SETTINGS (applied to the windows and the
+      * HPACK encoder table, RFC 7541 §4.2, then ACKed), PING and
+      * WINDOW_UPDATE for stream 0 or a stream `live` reports are answered
+      * here; credit for a finished stream is stale and ignored. A HEADERS
+      * block and its CONTINUATIONs must stay on one stream and under the
+      * cap; the decoded block is returned at END_HEADERS. */
+    def next(live: Int => Boolean): Inbound = {
+      val f = readFrame(in, maxMessageBytes + 1024)
+      f.tpe match {
+        case TSettings if !f.has(FAck) =>
+          val pairs = parseSettings(f.payload)
+          windows.onSettings(pairs)
+          pairs.collectFirst { case (SetHeaderTableSize, v) => v }
+            .foreach(codec.limitEncoderTable)
+          writeFrame(out, TSettings, FAck, 0, Array.emptyByteArray)
+          out.flush()
+          peerSettings = true
+          Handled
+        case TPing if !f.has(FAck) =>
+          writeFrame(out, TPing, FAck, 0, f.payload)
+          out.flush()
+          Handled
+        case TSettings | TPing => Handled
+        case TWindowUpdate =>
+          if (f.streamId == 0 || live(f.streamId))
+            windows.onWindowUpdate(f.streamId, windowIncrement(f))
+          Handled
+        case THeaders | TContinuation =>
+          if (f.tpe == THeaders) {
+            block.reset()
+            blockStream = f.streamId
+            blockEnd = f.has(FEndStream)
+          } else if (blockStream == 0 || blockStream != f.streamId)
+            throw new IOException("continuation stream mismatch")
+          val bytes = if (f.tpe == THeaders) stripPadding(f) else f.payload
+          if (block.size.toLong + bytes.length > maxMessageBytes)
+            throw new IOException(s"header block exceeds $maxMessageBytes bytes")
+          block.write(bytes)
+          if (!f.has(FEndHeaders)) Handled
+          else {
+            val hs = codec.decode(blockStream, block.toByteArray)
+            block.reset()
+            val done = HeaderBlock(blockStream, hs, blockEnd)
+            blockStream = 0
+            done
+          }
+        case _ => Other(f)
+      }
+    }
+
+    /** A DATA frame's body, padding stripped. Its bytes are credited back
+      * on the connection window always, and on the stream window only
+      * while the stream is `open` (RFC 7540 §5.1: nothing but PRIORITY on
+      * a CLOSED stream), so a long stream never starves (§6.9). */
+    def data(f: Frame, open: Boolean): Array[Byte] = {
+      val body = stripPadding(f)
+      if (f.payload.length > 0) {
+        writeFrame(out, TWindowUpdate, 0, 0, windowUpdatePayload(f.payload.length))
+        if (open)
+          writeFrame(out, TWindowUpdate, 0, f.streamId,
+            windowUpdatePayload(f.payload.length))
+        out.flush()
+      }
+      body
+    }
+
+    /** Send `bytes` on `stream` as DATA frames under the peer's flow
+      * control (empty `bytes` + `endStream`: a lone END_STREAM frame).
+      * While there is no credit `await` runs, pumping frames; when it
+      * returns false the send is abandoned. */
+    def sendData(stream: Int, bytes: Array[Byte], endStream: Boolean)
+                (await: () => Boolean): Unit = {
+      def avail = math.min(windows.conn, windows.stream(stream))
+      var off = 0
+      while (off < bytes.length || (endStream && bytes.length == 0 && off == 0)) {
+        // RFC 7540 §6.9: split to the AVAILABLE window — a conformant peer
+        // may hold the stream window below max-frame-size forever, so
+        // waiting for a full frame's worth of credit would livelock
+        while (bytes.length > 0 && avail <= 0) if (!await()) return
+        val n = math.min(math.min(bytes.length - off, windows.maxFrame).toLong,
+          math.max(avail, 0L)).toInt
+        writeFrame(out, TData, if (endStream && off + n >= bytes.length) FEndStream
+          else 0, stream, java.util.Arrays.copyOfRange(bytes, off, off + n))
+        windows.consume(stream, n)
+        off += n
+        // flush EVERY frame before a possible credit wait: a partial
+        // frame parked in the output buffer is credit the peer can never
+        // grant (it credits on receipt) — buffered-unflushed + blocked
+        // read = deadlock
+        out.flush()
+        if (bytes.length == 0) return // lone END_STREAM frame
+      }
+    }
   }
 }
 
@@ -309,69 +432,33 @@ object GrpcRelay {
   val StreamPath = "/electrician.RelayService/StreamReceive"
   val UnaryPath = "/electrician.RelayService/Receive"
 
-  /** One request stream's client-side state: [[pump]] processes one
-    * incoming frame (stream DATA lands in `data`, response headers then
-    * trailers in their fields, `streamEnded` flips on END_STREAM), and
-    * the senders/readers below respect the peer's flow control. */
+  /** One request stream's client-side state over an [[Http2.Connection]]:
+    * [[pump]] processes one incoming frame (stream DATA lands in `data`,
+    * response headers then trailers in their fields, `streamEnded` flips
+    * on END_STREAM; GOAWAY and RST_STREAM fail the write). */
   private final class ClientConn(sock: Socket, streamId: Int, maxMessageBytes: Int,
                                  ackTimeoutMs: Int, creditTimeoutMs: Int) {
-    private val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
-    val windows = new Http2.SendWindows
-    val codec = new Http2.HeaderCodec
+    val http = new Http2.Connection(
+      new DataInputStream(new BufferedInputStream(sock.getInputStream)),
+      new DataOutputStream(new BufferedOutputStream(sock.getOutputStream)),
+      maxMessageBytes)
     val data = new GrpcWire.MessageBuffer(maxMessageBytes)
     var headers: Seq[(String, String)] = Nil
     var trailers: Seq[(String, String)] = Nil
     var streamEnded = false
-    private val headerBlock = new java.io.ByteArrayOutputStream()
-    private var headersInFlight = false
-    private var peerSettings = false
 
     /** Read + handle one frame. */
-    def pump(): Unit = {
-      val f = Http2.readFrame(in, maxMessageBytes + 1024)
-      f.tpe match {
-        case Http2.TSettings =>
-          if (!f.has(Http2.FAck)) {
-            val pairs = Http2.parseSettings(f.payload)
-            windows.onSettings(pairs)
-            pairs.collectFirst { case (Http2.SetHeaderTableSize, v) => v }
-              .foreach(codec.limitEncoderTable)
-            Http2.writeFrame(out, Http2.TSettings, Http2.FAck, 0,
-              Array.emptyByteArray)
-            out.flush()
-            peerSettings = true
+    def pump(): Unit = http.next(_ == streamId) match {
+      case Http2.HeaderBlock(`streamId`, hs, endStream) =>
+        if (headers.isEmpty) headers = hs else trailers = hs
+        if (endStream) streamEnded = true
+      case Http2.Other(f) => f.tpe match {
+        case Http2.TData =>
+          val body = http.data(f, open = f.streamId == streamId)
+          if (f.streamId == streamId) {
+            data.feed(body)
+            if (f.has(Http2.FEndStream)) streamEnded = true
           }
-        case Http2.TPing =>
-          if (!f.has(Http2.FAck)) {
-            Http2.writeFrame(out, Http2.TPing, Http2.FAck, 0, f.payload)
-            out.flush()
-          }
-        case Http2.TWindowUpdate =>
-          windows.onWindowUpdate(f.streamId, Http2.windowIncrement(f))
-        case Http2.TData if f.streamId == streamId =>
-          val body = Http2.stripPadding(f)
-          data.feed(body)
-          // credit the consumed bytes back on both windows so a long ack
-          // stream never starves (RFC 7540 §6.9)
-          if (f.payload.length > 0) {
-            Http2.writeFrame(out, Http2.TWindowUpdate, 0, 0,
-              Http2.windowUpdatePayload(f.payload.length))
-            Http2.writeFrame(out, Http2.TWindowUpdate, 0, streamId,
-              Http2.windowUpdatePayload(f.payload.length))
-            out.flush()
-          }
-          if (f.has(Http2.FEndStream)) streamEnded = true
-        case Http2.THeaders | Http2.TContinuation if f.streamId == streamId =>
-          headerBlock.write(if (f.tpe == Http2.THeaders) Http2.stripPadding(f)
-            else f.payload)
-          headersInFlight = !f.has(Http2.FEndHeaders)
-          if (!headersInFlight) {
-            val hs = codec.decode(streamId, headerBlock.toByteArray)
-            headerBlock.reset()
-            if (headers.isEmpty) headers = hs else trailers = hs
-          }
-          if (f.has(Http2.FEndStream)) streamEnded = true
         case Http2.TGoAway =>
           throw new IOException("server sent GOAWAY mid-stream")
         case Http2.TRstStream =>
@@ -379,6 +466,7 @@ object GrpcRelay {
             if (f.payload.length >= 4) f.payload(3) & 0xff else -1})")
         case _ => () // PRIORITY, other streams: skip
       }
+      case _ => ()
     }
 
     /** Connection preface + our SETTINGS, then wait for the server's
@@ -389,52 +477,25 @@ object GrpcRelay {
       * those bytes before our ack never re-credits them — the writer
       * would stall in its credit wait. */
     def open(requestHeaders: Seq[(String, String)]): Unit = {
-      out.write(Http2.Preface)
-      Http2.writeFrame(out, Http2.TSettings, 0, 0, Array.emptyByteArray)
-      out.flush()
-      while (!peerSettings) pump()
-      Http2.writeFrame(out, Http2.THeaders, Http2.FEndHeaders, streamId,
-        codec.encode(streamId, requestHeaders))
-      out.flush()
+      http.out.write(Http2.Preface)
+      Http2.writeFrame(http.out, Http2.TSettings, 0, 0, Array.emptyByteArray)
+      http.out.flush()
+      while (!http.peerSettings) pump()
+      Http2.writeFrame(http.out, Http2.THeaders, Http2.FEndHeaders, streamId,
+        http.codec.encode(streamId, requestHeaders))
+      http.out.flush()
     }
 
-    /** Send gRPC message bytes as DATA frames, respecting the peer's
-      * flow-control windows and max frame size. */
-    def sendData(bytes: Array[Byte], endStream: Boolean): Unit = {
-      var off = 0
-      while (off < bytes.length || (endStream && bytes.length == 0 && off == 0)) {
-        // RFC 7540 §6.9: split to the AVAILABLE window — a conformant peer
-        // may hold the stream window below max-frame-size forever, so
-        // waiting for a full frame's worth of credit would livelock
-        var avail = math.min(windows.conn, windows.stream(streamId))
-        if (bytes.length > 0 && avail <= 0) {
-          // a credit wait is receiver BACKPRESSURE, not an overdue ack —
-          // it may lawfully outlast ackTimeoutMs (e.g. a receiver draining
-          // a slow sink), so it gets its own, larger timeout
-          sock.setSoTimeout(creditTimeoutMs)
-          try {
-            while (avail <= 0) {
-              pump()
-              avail = math.min(windows.conn, windows.stream(streamId))
-            }
-          } finally sock.setSoTimeout(ackTimeoutMs)
-        }
-        val want = math.min(math.min(bytes.length - off, windows.maxFrame),
-          math.max(avail, 0L).min(Int.MaxValue).toInt)
-        val last = off + want >= bytes.length
-        Http2.writeFrame(out, Http2.TData,
-          if (endStream && last) Http2.FEndStream else 0, streamId,
-          java.util.Arrays.copyOfRange(bytes, off, off + want))
-        windows.consume(streamId, want)
-        off += want
-        // flush EVERY frame before a possible credit wait: a partial
-        // frame parked in the output buffer is credit the peer can never
-        // grant (it credits on receipt) — buffered-unflushed + blocked
-        // read = deadlock
-        out.flush()
-        if (bytes.length == 0) return // lone END_STREAM frame
+    /** Send gRPC message bytes as DATA frames. A credit wait is receiver
+      * BACKPRESSURE, not an overdue ack — it may lawfully outlast
+      * ackTimeoutMs (e.g. a receiver draining a slow sink), so its reads
+      * get their own, larger timeout. */
+    def sendData(bytes: Array[Byte], endStream: Boolean): Unit =
+      http.sendData(streamId, bytes, endStream) { () =>
+        sock.setSoTimeout(creditTimeoutMs)
+        try pump() finally sock.setSoTimeout(ackTimeoutMs)
+        true
       }
-    }
 
     /** Block until one full gRPC message (an ack) is available. */
     def readMessage(): Array[Byte] = {
@@ -509,8 +570,8 @@ object GrpcRelay {
       conn.awaitTrailers()
       // polite shutdown (RFC 7540 §6.8) so the receiver's read loop
       // distinguishes a finished peer from a dropped one
-      Http2.writeFrame(conn.out, Http2.TGoAway, 0, 0, new Array[Byte](8))
-      conn.out.flush()
+      Http2.writeFrame(conn.http.out, Http2.TGoAway, 0, 0, new Array[Byte](8))
+      conn.http.out.flush()
     }
   }
 }
@@ -519,9 +580,10 @@ object GrpcRelay {
   * `RelayService.StreamReceive` (each gRPC message one RelayEnvelope,
   * acks as response messages) and the unary `RelayService.Receive`.
   * The envelope/ack brain is [[RelayProto.EnvelopeSession]] — the SAME
-  * as the socket/WS/NATS edges; this class owns only the HTTP/2
-  * transport: preface, SETTINGS, flow-control credits, HEADERS routing,
-  * per-stream gRPC message reassembly, trailers. Streams multiplex —
+  * as the socket/WS/NATS edges; the connection rules are
+  * [[Http2.Connection]]'s, and this class owns only the server role:
+  * the preface check and its SETTINGS, HEADERS routing, per-stream gRPC
+  * message reassembly, trailers. Streams multiplex —
   * a stock gRPC client may interleave several on one connection.
   * Records land in an [[Ingress]] buffer (memory mode). */
 final class GrpcRelayReceiver(spark: SparkSession, port: Int,
@@ -588,6 +650,8 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
       sock.setTcpNoDelay(true)
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
       val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      val http = new Http2.Connection(in, out, maxMessageBytes)
+      val codec = http.codec
       // prior-knowledge preface, then our SETTINGS
       val pre = new Array[Byte](Http2.Preface.length)
       in.readFully(pre)
@@ -598,17 +662,12 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
         Http2.SetInitialWindowSize -> Http2.DefaultWindow.toLong)))
       out.flush()
 
-      val codec = new Http2.HeaderCodec
-      val windows = new Http2.SendWindows
       // OPEN streams only: closed ones are pruned (a long-lived
       // multiplexed channel must not grow state per finished rpc), and
       // `maxStreamSeen` tells late DATA for a pruned stream (discard +
       // credit) apart from DATA for a stream that never existed (error)
       val streams = mutable.Map[Int, StreamState]()
       var maxStreamSeen = 0
-      val headerBlock = new java.io.ByteArrayOutputStream()
-      var headerStream = 0
-      var headerEndStream = false
       var more = true
 
       def respondHeadersOnce(s: StreamState): Unit = if (!s.responded) {
@@ -619,29 +678,16 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
         s.responded = true
       }
       // acks are flow-controlled DATA (RFC 7540 §6.9): when the peer's
-      // window is short, pump control frames — pumpOnce DEFERS all
-      // stream work (drains/ends), so waiting here cannot re-enter a send
+      // window is short, pump frames — pumpOnce DEFERS all stream work
+      // (drains/ends), so waiting here cannot re-enter a send. A reset
+      // arriving mid-ack abandons the rest (the peer stopped listening).
       def sendMessage(s: StreamState, body: Array[Byte]): Unit = {
         if (s.closed) return // RST'd stream: the peer stopped listening
         respondHeadersOnce(s)
-        val m = GrpcWire.message(body)
-        var off = 0
-        while (off < m.length) {
-          if (s.closed) return // reset arrived mid-ack: abandon the rest
-          var avail = math.min(windows.conn, windows.stream(s.id))
-          while (avail <= 0 && more && !s.closed) {
-            pumpOnce() // may mark s.closed via an RST_STREAM it reads
-            avail = math.min(windows.conn, windows.stream(s.id))
-          }
-          if (s.closed) return
-          if (!more) throw new IOException("peer went away mid-ack")
-          val n = math.min(math.min(m.length - off, windows.maxFrame).toLong,
-            avail).toInt
-          Http2.writeFrame(out, Http2.TData, 0, s.id,
-            java.util.Arrays.copyOfRange(m, off, off + n))
-          windows.consume(s.id, n)
-          off += n
-          out.flush() // before any credit wait — see ClientConn.sendData
+        http.sendData(s.id, GrpcWire.message(body), endStream = false) { () =>
+          if (more) pumpOnce() // may mark s.closed via an RST_STREAM it reads
+          if (!s.closed && !more) throw new IOException("peer went away mid-ack")
+          !s.closed
         }
       }
       def sendTrailers(s: StreamState, status: Int, message: String): Unit = {
@@ -715,8 +761,8 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
         * main loop, so a send waiting on flow-control credit can pump
         * safely without re-entrant sends. */
       def pumpOnce(): Unit = {
-        val f =
-          try Http2.readFrame(in, maxMessageBytes + 1024)
+        val inbound =
+          try http.next(streams.contains)
           catch {
             case e: EOFException =>
               // a stock peer may close the TCP connection without GOAWAY;
@@ -726,75 +772,26 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
               if (streams.isEmpty) { more = false; return }
               else throw e
           }
-        f.tpe match {
-          case Http2.TSettings =>
-            if (!f.has(Http2.FAck)) {
-              val pairs = Http2.parseSettings(f.payload)
-              windows.onSettings(pairs)
-              // HPACK contract: our encoder's dynamic table must not
-              // exceed what the peer's decoder advertised (RFC 7541 §4.2)
-              pairs.collectFirst { case (Http2.SetHeaderTableSize, v) => v }
-                .foreach(codec.limitEncoderTable)
-              Http2.writeFrame(out, Http2.TSettings, Http2.FAck, 0,
-                Array.emptyByteArray)
-              out.flush()
-            }
-          case Http2.TPing =>
-            if (!f.has(Http2.FAck)) {
-              Http2.writeFrame(out, Http2.TPing, Http2.FAck, 0, f.payload)
-              out.flush()
-            }
-          case Http2.TWindowUpdate =>
-            if (f.streamId == 0 || streams.contains(f.streamId))
-              windows.onWindowUpdate(f.streamId, Http2.windowIncrement(f))
-            // else: credit for a pruned stream — stale, ignore
-          case Http2.THeaders =>
-            headerBlock.reset()
-            headerBlock.write(Http2.stripPadding(f))
-            headerStream = f.streamId
-            headerEndStream = f.has(Http2.FEndStream)
-            if (f.has(Http2.FEndHeaders)) {
-              onHeaders(headerStream,
-                codec.decode(headerStream, headerBlock.toByteArray),
-                headerEndStream)
-              headerBlock.reset()
-            }
-          case Http2.TContinuation =>
-            require(headerStream == f.streamId, "continuation stream mismatch")
-            require(headerBlock.size.toLong + f.payload.length <= maxMessageBytes,
-              s"header block exceeds $maxMessageBytes bytes")
-            headerBlock.write(f.payload)
-            if (f.has(Http2.FEndHeaders)) {
-              onHeaders(headerStream,
-                codec.decode(headerStream, headerBlock.toByteArray),
-                headerEndStream)
-              headerBlock.reset()
-            }
-          case Http2.TData =>
-            val open = streams.get(f.streamId) match {
-              case Some(s) =>
-                if (!s.closed) { s.data.feed(Http2.stripPadding(f)); s.dirty = true }
-                if (f.has(Http2.FEndStream)) s.endPending = true
-                !s.closed
-              case None if f.streamId <= maxStreamSeen =>
-                false // late DATA for a finished/reset stream: discard
-              case None =>
+        inbound match {
+          case Http2.HeaderBlock(id, hs, endStream) => onHeaders(id, hs, endStream)
+          case Http2.Other(f) => f.tpe match {
+            case Http2.TData =>
+              val stream = streams.get(f.streamId)
+              if (stream.isEmpty && f.streamId > maxStreamSeen)
                 throw new IOException(s"DATA on unopened stream ${f.streamId}")
-            }
-            if (f.payload.length > 0) {
-              Http2.writeFrame(out, Http2.TWindowUpdate, 0, 0,
-                Http2.windowUpdatePayload(f.payload.length))
-              // RFC 7540 §5.1: no frames besides PRIORITY on a CLOSED
-              // stream — late DATA gets only the connection-level credit
-              if (open)
-                Http2.writeFrame(out, Http2.TWindowUpdate, 0, f.streamId,
-                  Http2.windowUpdatePayload(f.payload.length))
-              out.flush()
-            }
-          case Http2.TGoAway => more = false
-          case Http2.TRstStream =>
-            streams.get(f.streamId).foreach(_.closed = true)
-          case _ => () // PRIORITY etc.
+              // late DATA for a finished/reset stream: credit + discard
+              val open = stream.exists(!_.closed)
+              val body = http.data(f, open)
+              stream.foreach { s =>
+                if (open) { s.data.feed(body); s.dirty = true }
+                if (f.has(Http2.FEndStream)) s.endPending = true
+              }
+            case Http2.TGoAway => more = false
+            case Http2.TRstStream =>
+              streams.get(f.streamId).foreach(_.closed = true)
+            case _ => () // PRIORITY etc.
+          }
+          case Http2.Handled => ()
         }
       }
       /** Run flagged stream work to a FIXPOINT and prune finished
@@ -812,7 +809,7 @@ final class GrpcRelayReceiver(spark: SparkSession, port: Int,
             if (!s.closed && s.endPending) onEndStream(s)
           }
           streams.filterInPlace { (id, s) =>
-            if (s.closed) windows.drop(id) // finished rpc: forget ledger too
+            if (s.closed) http.windows.drop(id) // finished rpc: forget ledger too
             !s.closed
           }
           again = work.nonEmpty &&

@@ -142,7 +142,7 @@ final class HttpServerJack(
         // session), IllegalArgumentException (empty chain) — with the
         // reason surfaced so a refused principal is attributable.
         // An unexpected operational error propagates instead of
-        // masquerading as a refusal (r15 ADVICE, shared with the WS jack).
+        // masquerading as a refusal (the same rule as the WS jack).
         val refusal =
           try {
             Tls.authorizeSession(

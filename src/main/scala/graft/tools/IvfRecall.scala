@@ -8,8 +8,7 @@ import graft.operators.SimilarityIvf
 import graft.plans.VectorExpressions
 import graft.sources.Tables
 
-/** IVF recall curve vs brute force — the r14 verdict's open measurement:
-  * the `sim_knn_graph` scale adjudication leans on "nprobe stays the
+/** IVF recall curve vs brute force: the `sim_knn_graph` scale adjudication leans on "nprobe stays the
   * recall knob at scale", which was proven at sf0.01 but never at sf1.
   * This main measures recall against exact brute-force top-k on a
   * deterministic sampled query set, across nprobe ∈ {1, 2, 4, 8}, for
@@ -22,22 +21,21 @@ import graft.sources.Tables
   *    `sim_ann_ivf` operator — per-query recall@5 over a smaller sample,
   *    since each probe is its own partition-pruned job).
   *
-  * Fixture history: the r15 fixture was a pure 10× REPLICATION of sf0.1
-  * (gen_scale.py shifted only vec_id), so every vector had 9
-  * bit-identical duplicates that saturated raw recall@5 at 1.0 for ANY
-  * nprobe — r15 measured the curve dup-excluded (sim ≥ 1 − 1e-6). The
-  * r16 fixture perturbs replicas (deterministic ±0.05 elementwise
-  * noise, renormalized → cos ≈ 0.97 to the original): replicas are now
-  * honest NEAR-duplicates, but they still concentrate in the query's
+  * Fixture note: a pure 10× REPLICATION of sf0.1 (shifting only vec_id)
+  * gives every vector 9 bit-identical duplicates that saturate raw
+  * recall@5 at 1.0 for ANY nprobe, so such a fixture can only be
+  * measured dup-excluded (sim ≥ 1 − 1e-6). `tools/gen_scale.py` perturbs
+  * replicas (deterministic ±0.05 elementwise noise, renormalized →
+  * cos ≈ 0.97 to the original): replicas are honest NEAR-duplicates, but they still concentrate in the query's
   * own cell, so raw recall on a replication-derived fixture remains
   * EASIER than organic data — report the distinct-content number
   * (dupPpm ≈ 950000) alongside it.
   *
   * Usage: `runMain graft.tools.IvfRecall <sfDir> [graphSample] [probeSample] [dupPpm]`
   * Prints one JSON line per (path, dedup, nprobe) with the mean recall@5.
-  * Results land in SCALING.md (r15/r16). `dupPpm` sets the near-dup
+  * Results land in SCALING.md. `dupPpm` sets the near-dup
   * exclusion threshold for the dedup variant (default 999999 = exclude
-  * only near-exact pairs; the r16 perturbed fixture's replicas sit at
+  * only near-exact pairs; the perturbed fixture's replicas sit at
   * cos ≈ 0.97, so pass e.g. 950000 to measure DISTINCT-CONTENT recall
   * with the synthetic replicas excluded). */
 object IvfRecall {

@@ -2,10 +2,11 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Dev tool (r17 optimization round): per-JOB wall/task-time breakdown of
-  * one declared query — `Bench` gives one number per query, this says
-  * which of the query's Spark jobs (model-build collect, checkpoint
-  * materialization, CC-loop rounds, final noop write …) the time is in.
+/** Dev tool: per-JOB wall/task-time breakdown of one declared query —
+  * `Bench` gives one number per query, this says which of the query's
+  * Spark jobs (model-build collect, checkpoint materialization, CC-loop
+  * rounds, final noop write …) the time is in. The profiled pass lists
+  * the eight slowest jobs.
   *
   * Usage: sbt "runMain graft.tools.JobProfile <sfDir> <query> [cpus]"
   */
@@ -49,10 +50,8 @@ object JobProfile {
         import scala.jdk.CollectionConverters._
         val jobs = done.asScala.toSeq.sortBy(_._1)
         println(f"   jobs ${jobs.size}%d, job-wall sum ${jobs.map(_._2).sum / 1e3}%.3f s")
-        val topN = sys.env.get("SPARK_GRAFT_PROFILE_ALL")
-          .map(_ => Int.MaxValue).getOrElse(8)
         if (pass == "profiled")
-          jobs.sortBy(-_._2).take(topN).foreach { case (id, ms, d) =>
+          jobs.sortBy(-_._2).take(8).foreach { case (id, ms, d) =>
             println(f"  job $id%3d  ${ms / 1e3}%7.3f s  $d")
           }
       }

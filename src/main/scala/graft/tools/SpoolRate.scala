@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.sources.{HttpServerJack, Spool, WsClientSource, WsServerHub}
 
-/** WS spool rate bound — the r15 verdict's open measurement: SCALING.md
+/** WS spool rate bound: SCALING.md
   * asserts "the file-per-record rate bound is the jack's, not Spark's"
   * with no number behind it. This main measures, on the current box:
   *

@@ -608,6 +608,54 @@ class GrpcRelaySpec extends SparkSpec {
     } finally server.close()
   }
 
+  test("the writer caps a response header block: CONTINUATIONs past the " +
+    "cap fail the write and close the connection before the server is done") {
+    // scripted h2 server: after its preface SETTINGS and the client's
+    // half-close, it opens a response header block (no END_HEADERS) and
+    // keeps sending CONTINUATION frames, counting the ones it could write
+    val server = new java.net.ServerSocket(0)
+    val total = 400
+    val sent = new java.util.concurrent.LinkedBlockingQueue[Integer]()
+    val t = new Thread(() => {
+      val sock = server.accept()
+      var n = 0
+      try {
+        val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+        val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+        in.readFully(new Array[Byte](Http2.Preface.length))
+        Http2.writeFrame(out, Http2.TSettings, 0, 0, Array.emptyByteArray)
+        out.flush()
+        var f = Http2.readFrame(in, 1 << 20)
+        while (!(f.tpe == Http2.TData && f.has(Http2.FEndStream)))
+          f = Http2.readFrame(in, 1 << 20)
+        Http2.writeFrame(out, Http2.THeaders, 0, 1, new Array[Byte](1000))
+        out.flush()
+        while (n < total) {
+          Http2.writeFrame(out, Http2.TContinuation, 0, 1, new Array[Byte](1000))
+          out.flush()
+          n += 1
+          Thread.sleep(5)
+        }
+      } catch {
+        case _: java.io.IOException => () // the client hung up
+      } finally { sent.put(n); sock.close() }
+    })
+    t.setDaemon(true); t.start()
+    try {
+      // maxChunkBytes 1024: the writer's message cap, and so its header
+      // block cap, is 1024 + 4096 bytes
+      val e = intercept[org.apache.spark.SparkException] {
+        GrpcRelay.writeGrpcProto(df(1), "127.0.0.1", server.getLocalPort,
+          maxChunkBytes = 1024, ackTimeoutMs = 10000)
+      }
+      val chain = failureChain(e)
+      assert(chain.contains("header block exceeds 5120 bytes"), chain)
+      val n = sent.poll(20, java.util.concurrent.TimeUnit.SECONDS)
+      assert(n != null && n < total,
+        s"the server sent $n of $total CONTINUATION frames before the writer hung up")
+    } finally server.close()
+  }
+
   test("a receiver that dies mid-ack (truncated gRPC message + END_STREAM) " +
     "fails the writer FAST with the stream-ended error, not a socket timeout") {
     // scripted h2 server: accept the stream, answer headers + a TRUNCATED
