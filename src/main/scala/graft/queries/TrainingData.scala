@@ -234,8 +234,8 @@ object TrainingData {
 
   /** The centroid-sum kernel [[simCentroids]] and the other consumers
     * ([[simAssign]] etc.) share. The declared query adds no presentation
-    * sort on top (the driver compare is a sorted-multiset compare — see
-    * OPTIMIZATION_r17.md), so the two are one frame. */
+    * sort on top: the driver compares results as sorted multisets, so a
+    * presentation sort changes nothing and the two are one frame. */
   private def centroidSums(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos0", "v")))

@@ -997,6 +997,38 @@ object Kafka {
     } finally c.close()
   }
 
+  /** The records of split `s` in offset order, fetched one page at a time
+    * ([[fetchPage]]) as the iterator is consumed: the range reader behind
+    * [[read]] and the DSv2 reader. A fetch that makes no progress below
+    * `s.end` is an error (the range claim is stale), except under
+    * `readCommitted`, where the planned end came from the LOG end but an
+    * open transaction may hold the last stable offset below it: that tail
+    * is undecided, not missing, and the committed-only snapshot stops
+    * there. If the LSO moved past the cursor since the empty fetch (the
+    * transaction decided in between) the page is simply refetched. */
+  private[sources] def splitRecords(c: Client, s: Split, maxFetchBytes: Int,
+                                    readCommitted: Boolean): Iterator[KRecord] =
+    new Iterator[KRecord] {
+      private var off = s.start
+      private var page: Iterator[KRecord] = Iterator.empty
+      def hasNext: Boolean = {
+        while (!page.hasNext && off < s.end) {
+          val (recs, next) = fetchPage(c, s.topic, s.partition, off, s.end,
+            maxFetchBytes, readCommitted)
+          if (next == off) {
+            if (!readCommitted)
+              throw new IOException(s"no data at ${s.topic}/${s.partition}@$off < ${s.end}")
+            if (off >= c.lastStable(s.topic, s.partition)) off = s.end
+          }
+          page = recs.iterator
+          off = math.max(off, next) // the undecided-tail stop sticks
+        }
+        page.hasNext
+      }
+      def next(): KRecord =
+        if (hasNext) page.next() else throw new NoSuchElementException(s"end of $s")
+    }
+
   /** Distributed batch read of `topic` in [start, end) per partition:
     * ONE Spark task per Kafka partition, each opening its own connection
     * and fetching its range — the scan parallelism IS the topic's
@@ -1008,39 +1040,14 @@ object Kafka {
            readCommitted: Boolean = false): DataFrame = {
     val eff = if (splits != null) splits else offsetRanges(bootstrap, topic)
     val (host, port) = bootstrap
-    val rc = readCommitted
     val rows = spark.sparkContext
       .parallelize(eff, math.max(eff.size, 1))
       .flatMap { s =>
         val c = new LeaderClient((host, port))
-        try {
-          val out = Vector.newBuilder[Row]
-          var off = s.start
-          while (off < s.end) {
-            val (recs, next) = fetchPage(c, s.topic, s.partition, off,
-              s.end, maxFetchBytes, readCommitted = rc)
-            if (next == off) {
-              // read_committed: the planned end came from the LOG end, but
-              // an OPEN transaction holds the last stable offset below it —
-              // the tail is UNDECIDED, not missing; the committed-only
-              // snapshot legitimately stops here. If the LSO moved PAST the
-              // cursor since the empty fetch (the txn decided in between —
-              // a benign race), just loop and refetch; never throw under rc
-              if (rc) {
-                if (off >= c.lastStable(s.topic, s.partition)) off = s.end
-              }
-              // no progress below `end` otherwise = the range claim is stale
-              else throw new IOException(
-                s"no data at ${s.topic}/${s.partition}@$off < ${s.end}")
-            }
-            recs.foreach { r =>
-              out += Row(r.key, r.value, s.topic, s.partition, r.offset,
-                new java.sql.Timestamp(r.timestamp))
-            }
-            off = math.max(off, next) // the undecided-tail stop sticks
-          }
-          out.result()
-        } finally c.close()
+        org.apache.spark.TaskContext.get().addTaskCompletionListener[Unit](_ => c.close())
+        splitRecords(c, s, maxFetchBytes, readCommitted).map(r =>
+          Row(r.key, r.value, s.topic, s.partition, r.offset,
+            new java.sql.Timestamp(r.timestamp)))
       }
     spark.createDataFrame(rows, scanSchema)
   }

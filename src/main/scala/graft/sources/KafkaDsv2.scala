@@ -82,8 +82,7 @@ private[sources] final class GraftKafkaScan(options: CaseInsensitiveStringMap) e
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
       Kafka.offsetRanges((host, port), topic)
-        .map(s => KafkaInputPartition(host, port, topic, s.partition,
-          s.start, s.end): InputPartition)
+        .map(s => KafkaInputPartition(host, port, s): InputPartition)
         .toArray
     override def createReaderFactory(): PartitionReaderFactory =
       new KafkaReaderFactory
@@ -215,7 +214,7 @@ private[sources] final class GraftKafkaMicroBatchStream(
     val e = end.asInstanceOf[KafkaSourceOffset].parts
     partitions.flatMap { p =>
       val (a, b) = (s.getOrElse(p, 0L), e.getOrElse(p, 0L))
-      if (b > a) Some(KafkaInputPartition(host, port, topic, p, a, b): InputPartition)
+      if (b > a) Some(KafkaInputPartition(host, port, Kafka.Split(topic, p, a, b)): InputPartition)
       else None
     }.toArray
   }
@@ -242,38 +241,25 @@ private[sources] final class GraftKafkaMicroBatchStream(
 }
 
 private[sources] final case class KafkaInputPartition(
-    host: String, port: Int, topic: String, partition: Int,
-    start: Long, end: Long) extends InputPartition
+    host: String, port: Int, split: Kafka.Split) extends InputPartition
 
 private[sources] final class KafkaReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val kp = p.asInstanceOf[KafkaInputPartition]
     new PartitionReader[InternalRow] {
       private val client = new Kafka.LeaderClient((kp.host, kp.port))
-      private var off = kp.start
-      private var buf: Iterator[KRecord] = Iterator.empty
+      // rows beyond the planned end belong to the next micro-batch
+      private val records = Kafka.splitRecords(client, kp.split, 1 << 20,
+        readCommitted = false)
       private var current: KRecord = _
 
-      override def next(): Boolean = {
-        while (!buf.hasNext && off < kp.end) {
-          // shared gap-safe page (Kafka.fetchPage): advances past retention
-          // holes, clamps a below-log-start cursor to earliest; rows beyond
-          // the planned end belong to the next micro-batch
-          val (recs, next) = Kafka.fetchPage(client, kp.topic, kp.partition,
-            off, kp.end)
-          if (next == off)
-            throw new java.io.IOException(
-              s"no data at ${kp.topic}/${kp.partition}@$off < ${kp.end}")
-          off = next
-          buf = recs.iterator
-        }
-        if (buf.hasNext) { current = buf.next(); true } else false
-      }
+      override def next(): Boolean =
+        records.hasNext && { current = records.next(); true }
 
       override def get(): InternalRow =
         InternalRow(
           current.key, current.value,
-          UTF8String.fromString(kp.topic), kp.partition, current.offset,
+          UTF8String.fromString(kp.split.topic), kp.split.partition, current.offset,
           current.timestamp * 1000L) // ms → TimestampType micros
 
       override def close(): Unit = client.close()

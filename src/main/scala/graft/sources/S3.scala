@@ -180,12 +180,48 @@ object S3 {
     /** Hardened XML parse for NETWORK-peer responses: a hostile or
       * MITM'd endpoint must not get entity expansion (XXE file reads)
       * or doctype tricks out of our response parsing. */
-    private def hardenedXml(bytes: Array[Byte]): org.w3c.dom.Document = {
+    private def parseXml(bytes: Array[Byte]): org.w3c.dom.Document = {
       val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
       dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
       dbf.setExpandEntityReferences(false)
       dbf.setXIncludeAware(false)
       dbf.newDocumentBuilder().parse(new java.io.ByteArrayInputStream(bytes))
+    }
+
+    /** Text of the first `tag` element below `el`. */
+    private def childText(el: org.w3c.dom.Element, tag: String): Option[String] = {
+      val nl = el.getElementsByTagName(tag)
+      if (nl.getLength == 0) None else Some(nl.item(0).getTextContent)
+    }
+
+    /** Real S3 can answer 200 with an `<Error>` body (the late-failure
+      * quirk documented for CompleteMultipartUpload, shared by
+      * CopyObject): surface it as a 500. */
+    private def refuseErrorBody(op: String, key: String, body: Array[Byte]): Unit = {
+      val doc = parseXml(body)
+      if (doc.getElementsByTagName("Error").getLength > 0)
+        throw new S3HttpError(500, key, s"$op answered 200-with-Error: " +
+          childText(doc.getDocumentElement, "Message").getOrElse(""))
+    }
+
+    /** The object size from a 206's `Content-Range: bytes a-b/total`. */
+    private def contentRangeTotal(resp: HttpResponse[Array[Byte]], key: String): Long = {
+      val cr = resp.headers().firstValue("Content-Range").orElse("")
+      val slash = cr.lastIndexOf('/')
+      val total = if (slash < 0) "" else cr.substring(slash + 1).trim
+      if (total.isEmpty || total == "*")
+        throw new S3HttpError(502, key, s"206 without a Content-Range total: '$cr'")
+      total.toLong
+    }
+
+    /** The `x-amz-meta-*` user metadata of a response, names lower-cased
+      * and unprefixed. */
+    private def userMeta(resp: HttpResponse[Array[Byte]]): Map[String, String] = {
+      import scala.jdk.CollectionConverters._
+      resp.headers().map().asScala.collect {
+        case (k, vs) if k.toLowerCase.startsWith("x-amz-meta-") =>
+          k.toLowerCase.stripPrefix("x-amz-meta-") -> vs.get(0)
+      }.toMap
     }
 
     private def xmlEscape(s: String): String =
@@ -209,14 +245,10 @@ object S3 {
       val resp = request("GET", "", query, null, Nil)
       if (resp.statusCode() != 200)
         throw new S3HttpError(resp.statusCode(), "", new String(resp.body(), UTF_8))
-      val doc = hardenedXml(resp.body())
+      val doc = parseXml(resp.body())
       def elements(tag: String): Seq[org.w3c.dom.Element] = {
         val nl = doc.getElementsByTagName(tag)
         (0 until nl.getLength).map(nl.item(_).asInstanceOf[org.w3c.dom.Element])
-      }
-      def childText(el: org.w3c.dom.Element, tag: String): Option[String] = {
-        val nl = el.getElementsByTagName(tag)
-        if (nl.getLength == 0) None else Some(nl.item(0).getTextContent)
       }
       // Key and Size pair WITHIN each Contents element — two positional
       // tag sweeps would silently misalign on any size-less entry, and a
@@ -294,14 +326,10 @@ object S3 {
         if (resp.statusCode() != 200)
           throw new S3HttpError(resp.statusCode(), s"(batch of ${batch.length})",
             new String(resp.body(), UTF_8))
-        val doc = hardenedXml(resp.body())
-        val nl = doc.getElementsByTagName("Error")
+        val nl = parseXml(resp.body()).getElementsByTagName("Error")
         (0 until nl.getLength).foreach { i =>
           val el = nl.item(i).asInstanceOf[org.w3c.dom.Element]
-          def t(tag: String) = {
-            val c = el.getElementsByTagName(tag)
-            if (c.getLength == 0) "" else c.item(0).getTextContent
-          }
+          def t(tag: String) = childText(el, tag).getOrElse("")
           errors += ((t("Key"), t("Code"), t("Message")))
         }
       }
@@ -349,12 +377,7 @@ object S3 {
       resp.statusCode() match {
         case 200 => Left(resp.body())
         case 206 =>
-          val cr = resp.headers().firstValue("Content-Range").orElse("")
-          val slash = cr.lastIndexOf('/')
-          val totalStr = if (slash < 0) "" else cr.substring(slash + 1).trim
-          if (totalStr.isEmpty || totalStr == "*")
-            throw new S3HttpError(502, key, s"206 without a Content-Range total: '$cr'")
-          val total = totalStr.toLong
+          val total = contentRangeTotal(resp, key)
           val b = resp.body()
           if (total <= b.length) Left(b) else Right((b, total))
         case 416 => Left(Array.emptyByteArray) // empty object: range off the end
@@ -368,12 +391,7 @@ object S3 {
       if (resp.statusCode() != 200)
         throw new S3HttpError(resp.statusCode(), key, new String(resp.body(), UTF_8))
       def hdr(n: String) = resp.headers().firstValue(n).orElse("")
-      import scala.jdk.CollectionConverters._
-      val meta = resp.headers().map().asScala.collect {
-        case (k, vs) if k.toLowerCase.startsWith("x-amz-meta-") =>
-          k.toLowerCase.stripPrefix("x-amz-meta-") -> vs.get(0)
-      }.toMap
-      S3Object(resp.body(), hdr("Content-Type"), hdr("Content-Encoding"), meta)
+      S3Object(resp.body(), hdr("Content-Type"), hdr("Content-Encoding"), userMeta(resp))
     }
 
     /** PutObject with the reference's bounded retry + backoff on
@@ -436,21 +454,6 @@ object S3 {
     // CompleteMultipartUpload / AbortMultipartUpload, the standard four)
     // ------------------------------------------------------------------
 
-    /** XXE-hardened parse of a response body (network-peer XML — same
-      * discipline as the listing parse). */
-    private def parseXml(body: Array[Byte]): org.w3c.dom.Document = {
-      val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-      dbf.setFeature("http://apache.org/xml/features/disallow-doctype-decl", true)
-      dbf.setExpandEntityReferences(false)
-      dbf.setXIncludeAware(false)
-      dbf.newDocumentBuilder().parse(new java.io.ByteArrayInputStream(body))
-    }
-
-    private def firstTagText(doc: org.w3c.dom.Document, tag: String): Option[String] = {
-      val nl = doc.getElementsByTagName(tag)
-      if (nl.getLength == 0) None else Some(nl.item(0).getTextContent)
-    }
-
     /** CopyObject — `PUT /dstKey` with `x-amz-copy-source` and NO body:
       * the service copies server-side, so a rename never moves object
       * bytes through the client (the committer's multi-GB task files
@@ -464,12 +467,7 @@ object S3 {
         Seq("x-amz-copy-source" -> src))
       if (resp.statusCode() != 200)
         throw new S3HttpError(resp.statusCode(), dstKey, new String(resp.body(), UTF_8))
-      // CopyObject shares CompleteMultipartUpload's 200-with-Error quirk
-      val doc = parseXml(resp.body())
-      if (doc.getElementsByTagName("Error").getLength > 0)
-        throw new S3HttpError(500, dstKey,
-          s"CopyObject answered 200-with-Error: " +
-            firstTagText(doc, "Message").getOrElse(""))
+      refuseErrorBody("CopyObject", dstKey, resp.body())
     }
 
     /** Bounded retry on RETRYABLE failures only — 5xx and transport
@@ -515,7 +513,7 @@ object S3 {
         if (resp.statusCode() != 200)
           throw new S3HttpError(resp.statusCode(), dstKey, new String(resp.body(), UTF_8))
         // the part's ETag rides the CopyPartResult BODY, not a header
-        firstTagText(parseXml(resp.body()), "ETag").map(_.trim).getOrElse(
+        childText(parseXml(resp.body()).getDocumentElement, "ETag").map(_.trim).getOrElse(
           throw new java.io.IOException(s"UploadPartCopy $dstKey#$partNumber: no ETag"))
       }
     }
@@ -559,13 +557,7 @@ object S3 {
     def headObject(key: String): (Long, String, String, Map[String, String]) = {
       val resp = request("GET", key, Nil, null, Seq("range" -> "bytes=0-0"))
       val size = resp.statusCode() match {
-        case 206 =>
-          val cr = resp.headers().firstValue("Content-Range").orElse("")
-          val slash = cr.lastIndexOf('/')
-          val t = if (slash < 0) "" else cr.substring(slash + 1).trim
-          if (t.isEmpty || t == "*")
-            throw new S3HttpError(502, key, s"206 without a Content-Range total: '$cr'")
-          t.toLong
+        case 206 => contentRangeTotal(resp, key)
         case 200 => resp.body().length.toLong
         case 416 =>
           // EMPTY object: the 416's headers belong to the ERROR response
@@ -577,12 +569,7 @@ object S3 {
           throw new S3HttpError(other, key, new String(resp.body(), UTF_8))
       }
       def hdr(n: String) = resp.headers().firstValue(n).orElse("")
-      import scala.jdk.CollectionConverters._
-      val meta = resp.headers().map().asScala.collect {
-        case (k, vs) if k.toLowerCase.startsWith("x-amz-meta-") =>
-          k.toLowerCase.stripPrefix("x-amz-meta-") -> vs.get(0)
-      }.toMap
-      (size, hdr("Content-Type"), hdr("Content-Encoding"), meta)
+      (size, hdr("Content-Type"), hdr("Content-Encoding"), userMeta(resp))
     }
 
     /** CreateMultipartUpload (`POST /key?uploads`) → UploadId. The
@@ -597,7 +584,7 @@ object S3 {
       val resp = request("POST", key, Seq("uploads" -> ""), null, headers)
       if (resp.statusCode() != 200)
         throw new S3HttpError(resp.statusCode(), key, new String(resp.body(), UTF_8))
-      firstTagText(parseXml(resp.body()), "UploadId").getOrElse(
+      childText(parseXml(resp.body()).getDocumentElement, "UploadId").getOrElse(
         throw new java.io.IOException(s"CreateMultipartUpload $key: no UploadId"))
     }
 
@@ -630,21 +617,14 @@ object S3 {
       parts.sortBy(_._1).foreach { case (n, etag) =>
         // ETags are hex-quoted by the server; XML-escape is a no-op for
         // them but keeps hostile-input discipline if a server misbehaves
-        val safe = etag.replace("&", "&amp;").replace("<", "&lt;")
-        xml.append(s"<Part><PartNumber>$n</PartNumber><ETag>$safe</ETag></Part>")
+        xml.append(s"<Part><PartNumber>$n</PartNumber><ETag>${xmlEscape(etag)}</ETag></Part>")
       }
       xml.append("</CompleteMultipartUpload>")
       val resp = request("POST", key, Seq("uploadId" -> uploadId),
         xml.toString.getBytes(UTF_8), Seq("content-type" -> "application/xml"))
       if (resp.statusCode() != 200)
         throw new S3HttpError(resp.statusCode(), key, new String(resp.body(), UTF_8))
-      // real S3 can answer 200 with an <Error> body (the late-failure
-      // quirk documented for CompleteMultipartUpload) — check for it
-      val doc = parseXml(resp.body())
-      if (doc.getElementsByTagName("Error").getLength > 0)
-        throw new S3HttpError(500, key,
-          s"CompleteMultipartUpload answered 200-with-Error: " +
-            firstTagText(doc, "Message").getOrElse(""))
+      refuseErrorBody("CompleteMultipartUpload", key, resp.body())
     }
 
     /** AbortMultipartUpload (`DELETE /key?uploadId=`) — frees staged

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, IOException, OutputStream}
 import java.net.{ServerSocket, Socket, URI}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
@@ -14,7 +14,8 @@ import org.apache.spark.sql.types.StructType
   * primitives — no new dependencies:
   *
   *  - [[WsFrames]]: RFC 6455 frame + handshake codec (pure functions,
-  *    property-tested across the 7/16/64-bit length encodings).
+  *    property-tested across the 7/16/64-bit length encodings) and the
+  *    one message reader every endpoint here receives through.
   *  - [[WsServerHub]] (S10 server jack + K6 broadcast): a real
   *    protocol-terminating listener — HTTP Upgrade handshake, masked
   *    client-frame decode, ping/pong, close handshake — that feeds
@@ -45,6 +46,7 @@ object WsFrames {
       java.security.MessageDigest.getInstance("SHA-1")
         .digest((clientKey + WsGuid).getBytes(UTF_8)))
 
+  private[sources] val OpContinuation = 0x0
   val OpText = 0x1
   val OpBinary = 0x2
   val OpClose = 0x8
@@ -66,38 +68,54 @@ object WsFrames {
     while (c != -1 && c != '\n') {
       if (c != '\r') sb.append(c.toChar)
       if (sb.length > MaxHeaderLine)
-        throw new java.io.IOException(
-          s"handshake header line exceeds $MaxHeaderLine bytes")
+        throw new IOException(s"handshake header line exceeds $MaxHeaderLine bytes")
       c = in.read()
     }
     sb.result()
   }
+
+  /** Read an HTTP header block up to its blank line as (name, value)
+    * pairs, bounded by [[MaxHeaderLines]] (a peer streaming header lines
+    * forever must hit a loud error, not pin the reading thread). Lines
+    * without a ':' are skipped. */
+  private[sources] def readHeaders(in: DataInputStream): Vector[(String, String)] = {
+    val headers = Vector.newBuilder[(String, String)]
+    var n = 0
+    var line = readHeaderLine(in)
+    while (line.nonEmpty) {
+      n += 1
+      if (n > MaxHeaderLines)
+        throw new IOException(s"handshake exceeds $MaxHeaderLines header lines")
+      val idx = line.indexOf(':')
+      if (idx > 0) headers += line.substring(0, idx).trim -> line.substring(idx + 1).trim
+      line = readHeaderLine(in)
+    }
+    headers.result()
+  }
+
+  /** The last value of header `name` (case-insensitive), or null. */
+  private[sources] def header(headers: Seq[(String, String)], name: String): String =
+    headers.findLast(_._1.equalsIgnoreCase(name)).map(_._2).orNull
 
   /** Consume a client Upgrade request; returns its Sec-WebSocket-Key and
     * ALL request headers (the auth policy input — the reference jack
     * authorizes static headers / bearer tokens during the upgrade,
     * `jack/websocket/serve.go` + `auth_policy.go`). */
   def readUpgrade(in: DataInputStream): (String, Map[String, String]) = {
-    var key: String = null
-    var n = 0
-    val headers = Map.newBuilder[String, String]
-    var line = readHeaderLine(in)
-    while (line.nonEmpty) {
-      n += 1
-      if (n > MaxHeaderLines)
-        throw new java.io.IOException(
-          s"handshake exceeds $MaxHeaderLines header lines")
-      val idx = line.indexOf(':')
-      if (idx > 0) {
-        val name = line.substring(0, idx).trim
-        val value = line.substring(idx + 1).trim
-        headers += name -> value
-        if (name.equalsIgnoreCase("Sec-WebSocket-Key")) key = value
-      }
-      line = readHeaderLine(in)
-    }
+    val headers = readHeaders(in)
+    val key = header(headers, "Sec-WebSocket-Key")
     require(key != null, "upgrade request carries no Sec-WebSocket-Key")
-    (key, headers.result())
+    (key, headers.toMap)
+  }
+
+  /** Server half of the upgrade: answer `101` with the accept key for the
+    * client's Sec-WebSocket-Key (RFC 6455 §4.2.2) and flush. */
+  private[sources] def writeSwitchingProtocols(out: OutputStream, clientKey: String): Unit = {
+    out.write(
+      ("HTTP/1.1 101 Switching Protocols\r\n" +
+        "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
+        s"Sec-WebSocket-Accept: ${acceptKey(clientKey)}\r\n\r\n").getBytes(UTF_8))
+    out.flush()
   }
 
   /** Key-only form (codec tests, simple peers). */
@@ -166,12 +184,79 @@ object WsFrames {
     }
     Frame((b0 & 0x80) != 0, b0 & 0x0F, payload)
   }
+
+  /** A fresh client mask key (RFC 6455 §5.3). */
+  private[sources] def freshMask(): Array[Byte] = {
+    val m = new Array[Byte](4)
+    java.util.concurrent.ThreadLocalRandom.current().nextBytes(m)
+    m
+  }
+
+  /** One complete data message: the opcode of its first frame (text or
+    * binary) and the reassembled payload. */
+  private[sources] final case class Message(opcode: Int, payload: Array[Byte])
+
+  /** The receive side of one connection (RFC 6455 §5.4–5.5), one reader
+    * thread per connection. Enforces fragment order (a continuation needs
+    * an open message; a data frame may not arrive inside one) and caps
+    * each frame's declared length and each message at `maxMessageBytes`.
+    * Ping gets Pong and Close gets Close, masked when `client`, written
+    * under `out.synchronized` because a broadcast may share the stream.
+    * Unsolicited Pong is ignored; any other opcode fails the connection. */
+  private[sources] final class MessageReader(in: DataInputStream, out: OutputStream,
+                                             maxMessageBytes: Int, client: Boolean) {
+    private val pending = new java.io.ByteArrayOutputStream()
+    private var openOpcode = -1 // the fragmented message in progress, or -1
+
+    /** The next complete data message, or None once the peer sent Close
+      * (answered before returning). Throws on a protocol violation. */
+    def next(): Option[Message] = {
+      while (true) {
+        val f = readFrame(in, maxMessageBytes)
+        f.opcode match {
+          case OpText | OpBinary =>
+            if (openOpcode != -1)
+              throw new IOException(s"data frame (opcode ${f.opcode}) inside an open message")
+            // the common unfragmented case hands the frame's own buffer over
+            if (f.fin) return Some(Message(f.opcode, f.payload))
+            openOpcode = f.opcode
+            pending.write(f.payload)
+          case OpContinuation =>
+            if (openOpcode == -1)
+              throw new IOException("continuation frame with no open message")
+            if (pending.size.toLong + f.payload.length > maxMessageBytes)
+              throw new IOException(s"message exceeds $maxMessageBytes bytes")
+            pending.write(f.payload)
+            if (f.fin) {
+              val m = Message(openOpcode, pending.toByteArray)
+              pending.reset()
+              openOpcode = -1
+              return Some(m)
+            }
+          case OpPing => reply(OpPong, f.payload)
+          case OpPong => ()
+          case OpClose =>
+            reply(OpClose, f.payload)
+            return None
+          case other => throw new IOException(s"unexpected opcode $other")
+        }
+      }
+      None // unreachable
+    }
+
+    private def reply(opcode: Int, payload: Array[Byte]): Unit = out.synchronized {
+      out.write(encode(opcode, payload, maskKey = if (client) Some(freshMask()) else None))
+      out.flush()
+    }
+  }
 }
 
 /** S10 + K6: WebSocket server hub — ingress jack (received text messages
   * flow into a streaming source buffer) and broadcast sink (text frames
-  * pushed to every connected peer). `port = 0` binds an ephemeral port
-  * (see [[boundPort]]).
+  * pushed to every connected peer). Binary messages are out of the jack's
+  * contract: each is skipped whole, all its fragments included, and the
+  * connection stays open. `port = 0` binds an ephemeral port (see
+  * [[boundPort]]).
   *
   * Restart contract: [[Ingress]]'s, selected by `spoolDir` and
   * `spoolSegment` (segment mode is fire-and-forget here — WS has no
@@ -229,14 +314,14 @@ final class WsServerHub(spark: SparkSession, port: Int,
   private val accepts = new AcceptLoop(server, "graft-ws")(serve)
   accepts.start()
 
-  /** Per-connection: HTTP Upgrade handshake, then the frame loop. A text
-    * message buffers continuation frames until FIN, then lands in the
-    * source buffer. Ping is answered with pong; close is echoed and the
-    * socket dropped (RFC 6455 §5.5.1). */
+  /** Per-connection: HTTP Upgrade handshake, then the message loop
+    * ([[WsFrames.MessageReader]]: fragment reassembly, ping/pong, close
+    * echo). Each text message lands in the source buffer; binary messages
+    * are out of the jack's contract and skipped whole. */
   private def serve(sock: Socket): Unit = {
     try {
-      val in = new DataInputStream(sock.getInputStream)
-      val rawOut = new BufferedOutputStream(sock.getOutputStream)
+      val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
+      val out = new BufferedOutputStream(sock.getOutputStream)
       val (key, headers) = WsFrames.readUpgrade(in)
       // mTLS principal policy BEFORE the header policy: the handshake
       // proved CA validity, but a CA-valid-yet-unlisted principal must
@@ -264,8 +349,8 @@ final class WsServerHub(spark: SparkSession, port: Int,
         if (refusal.isDefined) {
           rejected.incrementAndGet()
           System.err.println(s"[graft-ws] mTLS principal refused: ${refusal.get}")
-          rawOut.write("HTTP/1.1 401 Unauthorized\r\n\r\n".getBytes(UTF_8))
-          rawOut.flush()
+          out.write("HTTP/1.1 401 Unauthorized\r\n\r\n".getBytes(UTF_8))
+          out.flush()
           return
         }
       }
@@ -273,48 +358,30 @@ final class WsServerHub(spark: SparkSession, port: Int,
         onSoftFail = _ => softFailures.incrementAndGet()) match {
         case Left(_) =>
           rejected.incrementAndGet()
-          rawOut.write("HTTP/1.1 401 Unauthorized\r\n\r\n".getBytes(UTF_8))
-          rawOut.flush()
+          out.write("HTTP/1.1 401 Unauthorized\r\n\r\n".getBytes(UTF_8))
+          out.flush()
           return
         case Right(()) => ()
       }
-      rawOut.write(
-        ("HTTP/1.1 101 Switching Protocols\r\n" +
-          "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
-          s"Sec-WebSocket-Accept: ${WsFrames.acceptKey(key)}\r\n\r\n").getBytes(UTF_8))
-      rawOut.flush()
-      val out = new DataOutputStream(rawOut)
+      WsFrames.writeSwitchingProtocols(out, key)
       conns.put(sock, out)
-      // accumulate BYTES and decode once at FIN: RFC 6455 §5.4 lets a
-      // fragmentation boundary split a multi-byte UTF-8 sequence, so
-      // per-fragment decoding would corrupt the straddling character
-      val pending = new java.io.ByteArrayOutputStream()
+      // one 64 MiB bound per frame and per message; text is decoded once
+      // per reassembled message, as RFC 6455 §5.4 lets a fragmentation
+      // boundary split a multi-byte UTF-8 sequence
+      val reader = new WsFrames.MessageReader(in, out,
+        WsFrames.DefaultMaxFramePayload, client = false)
       var open = true
       while (open && accepts.isRunning) {
-        val f = WsFrames.readFrame(in)
-        f.opcode match {
-          case WsFrames.OpText | 0x0 =>
-            // the per-frame cap alone doesn't bound a message: a hostile
-            // peer streaming never-FIN fragments must not grow this buffer
-            // past the same 64 MiB bound
-            require(pending.size.toLong + f.payload.length <= WsFrames.DefaultMaxFramePayload,
-              s"message exceeds ${WsFrames.DefaultMaxFramePayload} bytes")
-            pending.write(f.payload)
-            if (f.fin) {
-              val msg = new String(pending.toByteArray, UTF_8)
-              // a normalization or spool failure throws to the
-              // connection-level catch, dropping this peer loudly; a
-              // pretty-printed message would otherwise split into several
-              // rows at the line-oriented file source
-              ingress.offer(if (spoolDir.isDefined) Spool.jsonLine(msg) else msg)
-              pending.reset()
-            }
-          case WsFrames.OpPing =>
-            out.synchronized { out.write(WsFrames.encode(WsFrames.OpPong, f.payload)); out.flush() }
-          case WsFrames.OpClose =>
-            out.synchronized { out.write(WsFrames.encode(WsFrames.OpClose, f.payload)); out.flush() }
-            open = false
-          case _ => () // binary frames are out of the jack's contract; skip
+        reader.next() match {
+          case Some(WsFrames.Message(WsFrames.OpText, bytes)) =>
+            val msg = new String(bytes, UTF_8)
+            // a normalization or spool failure throws to the
+            // connection-level catch, dropping this peer loudly; a
+            // pretty-printed message would otherwise split into several
+            // rows at the line-oriented file source
+            ingress.offer(if (spoolDir.isDefined) Spool.jsonLine(msg) else msg)
+          case Some(_) => ()
+          case None => open = false
         }
       }
     } catch { case _: Throwable => () } // connection-level failure drops the peer only

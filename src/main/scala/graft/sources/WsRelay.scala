@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream}
 import java.net.{ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.Base64
@@ -43,60 +43,19 @@ object WsRelay {
     val in = new DataInputStream(sock.getInputStream)
     val status = WsFrames.readHeaderLine(in)
     require(status.startsWith("HTTP/1.1 101"), s"upgrade refused: '$status'")
-    var accept: String = null
-    var line = WsFrames.readHeaderLine(in)
-    while (line.nonEmpty) {
-      val idx = line.indexOf(':')
-      if (idx > 0 && line.substring(0, idx).trim.equalsIgnoreCase("Sec-WebSocket-Accept"))
-        accept = line.substring(idx + 1).trim
-      line = WsFrames.readHeaderLine(in)
-    }
+    val accept = WsFrames.header(WsFrames.readHeaders(in), "Sec-WebSocket-Accept")
     require(accept == WsFrames.acceptKey(wsKey),
       s"Sec-WebSocket-Accept mismatch: got '$accept'")
   }
 
-  private def freshMask(): Array[Byte] = {
-    val m = new Array[Byte](4)
-    java.util.concurrent.ThreadLocalRandom.current().nextBytes(m)
-    m
-  }
-
-  /** Read WS frames until one binary MESSAGE completes (accumulating
-    * continuations), transparently answering pings. Returns None on a
-    * clean close frame. Used by the writer to await acks — text frames on
-    * this edge are a protocol error. */
-  private def readBinaryMessage(in: DataInputStream, out: DataOutputStream,
-                                masked: Boolean,
-                                maxMessageBytes: Int = 1 << 20): Option[Array[Byte]] = {
-    val pending = new java.io.ByteArrayOutputStream()
-    var inMessage = false
-    while (true) {
-      // acks are a few hundred bytes — a tight frame AND message bound
-      // keeps a compromised receiver from ballooning the writer task
-      val f = WsFrames.readFrame(in, maxMessageBytes)
-      f.opcode match {
-        case WsFrames.OpBinary | 0x0 =>
-          require(inMessage == (f.opcode == 0x0),
-            s"fragmentation violation: opcode ${f.opcode} while inMessage=$inMessage")
-          require(pending.size.toLong + f.payload.length <= maxMessageBytes,
-            s"message exceeds $maxMessageBytes bytes")
-          inMessage = true
-          pending.write(f.payload)
-          if (f.fin) return Some(pending.toByteArray)
-        case WsFrames.OpPing =>
-          out.synchronized {
-            out.write(WsFrames.encode(WsFrames.OpPong, f.payload,
-              maskKey = if (masked) Some(freshMask()) else None))
-            out.flush()
-          }
-        case WsFrames.OpPong => () // unsolicited pong: ignore
-        case WsFrames.OpClose => return None
-        case other => throw new java.io.IOException(
-          s"unexpected opcode $other on a relay connection")
-      }
+  /** The payload of a relay message: both relay ends carry binary
+    * envelopes and acks only, so a text message fails the connection. */
+  private[sources] def binaryMessage(m: Option[WsFrames.Message]): Option[Array[Byte]] =
+    m.map {
+      case WsFrames.Message(WsFrames.OpBinary, bytes) => bytes
+      case WsFrames.Message(op, _) => throw new java.io.IOException(
+        s"opcode $op is out of the relay contract (binary messages only)")
     }
-    None // unreachable
-  }
 
   /** K5 forward relay over WebSocket: per partition, one Upgrade'd
     * connection; [[RelayWriter.sealedChunks]] envelopes ride as masked
@@ -121,20 +80,23 @@ object WsRelay {
       clientHandshake(sock, s"$host:$port", path)
       if (ackMode == "none") sock.setSoTimeout(0)
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream))
+      val out = new BufferedOutputStream(sock.getOutputStream)
+      // acks are a few hundred bytes: a tight frame and message bound
+      // keeps a compromised receiver from ballooning the writer task
+      val acks = new WsFrames.MessageReader(in, out, 1 << 20, client = true)
       new RelayProto.EnvelopeSender(ackMode,
         send = { e =>
           out.write(WsFrames.encode(WsFrames.OpBinary,
-            RelayProto.encodeEnvelope(e), maskKey = Some(freshMask())))
+            RelayProto.encodeEnvelope(e), maskKey = Some(WsFrames.freshMask())))
           out.flush()
         },
         readAck = () =>
-          RelayProto.decodeAck(readBinaryMessage(in, out, masked = true)
+          RelayProto.decodeAck(binaryMessage(acks.next())
             .getOrElse(throw new java.io.IOException(
               "connection closed while awaiting ack"))))
         .sendAll(RelayWriter.sealedChunks(it, maxChunkBytes, compression, key))
       out.write(WsFrames.encode(WsFrames.OpClose, Array.emptyByteArray,
-        maskKey = Some(freshMask())))
+        maskKey = Some(WsFrames.freshMask())))
       out.flush()
     }
   }
@@ -144,11 +106,11 @@ object WsRelay {
   * binary message as one RelayEnvelope, unwrap per its declared sealing
   * and feed an [[Ingress]] buffer (memory mode); acks ride back as binary
   * messages per `ackMode`. The envelope/ack brain is
-  * [[RelayProto.EnvelopeSession]], shared with the socket edge; this
-  * class owns only the RFC 6455 transport: handshake, fragmentation
+  * [[RelayProto.EnvelopeSession]], shared with the socket edge; the
+  * RFC 6455 transport is [[WsFrames.MessageReader]]'s: fragmentation
   * reassembly, ping/pong, close echo, and the per-message size cap (the
   * reference's maxMessageBytes guard, `receivingrelay_stream.go:81-90` —
-  * checked per FRAME here so a hostile peer cannot OOM the reassembly
+  * checked per FRAME too, so a hostile peer cannot OOM the reassembly
   * buffer with unbounded continuations either). A message that fails
   * decode/unwrap drops that connection and counts in [[badFrameCount]],
   * exactly like the socket relay; text frames are out of contract and
@@ -176,14 +138,8 @@ final class WsRelayReceiver(spark: SparkSession, port: Int,
   private def serve(sock: Socket): Unit = {
     try {
       val in = new DataInputStream(new BufferedInputStream(sock.getInputStream))
-      val rawOut = new BufferedOutputStream(sock.getOutputStream)
-      val wsKey = WsFrames.readUpgradeKey(in)
-      rawOut.write(
-        ("HTTP/1.1 101 Switching Protocols\r\n" +
-          "Upgrade: websocket\r\nConnection: Upgrade\r\n" +
-          s"Sec-WebSocket-Accept: ${WsFrames.acceptKey(wsKey)}\r\n\r\n").getBytes(UTF_8))
-      rawOut.flush()
-      val out = new DataOutputStream(rawOut)
+      val out = new BufferedOutputStream(sock.getOutputStream)
+      WsFrames.writeSwitchingProtocols(out, WsFrames.readUpgradeKey(in))
 
       var peerGone = false
       // success/close acks are best-effort (records already ingested);
@@ -196,40 +152,14 @@ final class WsRelayReceiver(spark: SparkSession, port: Int,
       val session = new RelayProto.EnvelopeSession(key, maxInflatedBytes,
         ackMode, ingress.feed, sendAck)
 
-      val pending = new java.io.ByteArrayOutputStream()
-      var inMessage = false
+      // frame cap = message cap: a frame's declared length is bounded
+      // before allocation and reassembly is bounded by the same cap
+      val reader = new WsFrames.MessageReader(in, out, maxMessageBytes, client = false)
       var more = true
       while (more && accepts.isRunning) {
-        // frame cap = message cap: a single frame's DECLARED length is
-        // bounded before allocation (WsFrames.readFrame), and continuation
-        // accumulation is bounded below
-        val f = WsFrames.readFrame(in, maxMessageBytes)
-        f.opcode match {
-          case WsFrames.OpBinary | 0x0 =>
-            require(inMessage == (f.opcode == 0x0),
-              s"fragmentation violation: opcode ${f.opcode} mid-message=$inMessage")
-            require(pending.size.toLong + f.payload.length <= maxMessageBytes,
-              s"message exceeds $maxMessageBytes bytes")
-            inMessage = true
-            pending.write(f.payload)
-            if (f.fin) {
-              more = session.onEnvelope(pending.toByteArray)
-              if (peerGone) more = false
-              pending.reset()
-              inMessage = false
-            }
-          case WsFrames.OpPing =>
-            out.synchronized {
-              out.write(WsFrames.encode(WsFrames.OpPong, f.payload)); out.flush()
-            }
-          case WsFrames.OpClose =>
-            out.synchronized {
-              out.write(WsFrames.encode(WsFrames.OpClose, f.payload)); out.flush()
-            }
-            more = false
-          case other =>
-            throw new java.io.IOException(
-              s"opcode $other is out of the relay contract (binary envelopes only)")
+        WsRelay.binaryMessage(reader.next()) match {
+          case Some(envelope) => more = session.onEnvelope(envelope) && !peerGone
+          case None => more = false
         }
       }
     } catch {

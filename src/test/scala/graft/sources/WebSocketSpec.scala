@@ -107,6 +107,85 @@ class WebSocketSpec extends SparkSpec {
     } finally hub.stop()
   }
 
+  /** A raw socket upgraded against `hub`, its 101 response consumed. */
+  private def upgradedPeer(hub: WsServerHub): (java.net.Socket, DataInputStream, DataOutputStream) = {
+    val sock = new java.net.Socket("127.0.0.1", hub.boundPort)
+    val out = new DataOutputStream(sock.getOutputStream)
+    val in = new DataInputStream(sock.getInputStream)
+    out.write(("GET / HTTP/1.1\r\nHost: x\r\nUpgrade: websocket\r\n" +
+      "Connection: Upgrade\r\nSec-WebSocket-Key: dGhlIHNhbXBsZSBub25jZQ==\r\n\r\n")
+      .getBytes(UTF_8))
+    out.flush()
+    val resp = new StringBuilder
+    while (!resp.endsWith("\r\n\r\n")) resp.append(in.read().toChar)
+    assert(resp.startsWith("HTTP/1.1 101"), resp.result())
+    (sock, in, out)
+  }
+
+  /** True once the hub closed `sock` (EOF or reset) within 10 s. */
+  private def droppedByHub(sock: java.net.Socket, in: DataInputStream): Boolean = {
+    sock.setSoTimeout(10000)
+    try { while (in.read() != -1) (); true }
+    catch {
+      case _: java.net.SocketTimeoutException => false
+      case _: java.io.IOException => true
+    }
+  }
+
+  private val peerMask = Some(Array[Byte](1, 2, 3, 4))
+
+  test("a text frame inside an open fragmented message drops the peer and delivers nothing") {
+    val hub = new WsServerHub(spark, 0)
+    try {
+      val (sock, in, out) = upgradedPeer(hub)
+      try {
+        out.write(WsFrames.encode(WsFrames.OpText, "{\"id\":1,".getBytes(UTF_8), peerMask, fin = false))
+        out.write(WsFrames.encode(WsFrames.OpText, "\"name\":\"x\"}".getBytes(UTF_8), peerMask))
+        out.flush()
+        assert(droppedByHub(sock, in), "a new text frame inside an open message was accepted")
+        assert(hub.receivedCount == 0)
+      } finally sock.close()
+    } finally hub.stop()
+  }
+
+  test("a continuation frame with no open message drops the peer and delivers nothing") {
+    val hub = new WsServerHub(spark, 0)
+    try {
+      val (sock, in, out) = upgradedPeer(hub)
+      try {
+        out.write(WsFrames.encode(0x0, "{\"id\":1}".getBytes(UTF_8), peerMask))
+        out.flush()
+        assert(droppedByHub(sock, in), "an orphan continuation frame was accepted")
+        assert(hub.receivedCount == 0)
+      } finally sock.close()
+    } finally hub.stop()
+  }
+
+  test("a fragmented binary message is skipped whole and the connection stays usable") {
+    val hub = new WsServerHub(spark, 0)
+    try {
+      val (sock, in, out) = upgradedPeer(hub)
+      try {
+        out.write(WsFrames.encode(WsFrames.OpBinary, "bin-head".getBytes(UTF_8), peerMask, fin = false))
+        out.write(WsFrames.encode(0x0, "bin-tail".getBytes(UTF_8), peerMask))
+        out.write(WsFrames.encode(WsFrames.OpText, "{\"id\":2}".getBytes(UTF_8), peerMask))
+        // the pong comes back only after every earlier frame was handled
+        out.write(WsFrames.encode(WsFrames.OpPing, "sync".getBytes(UTF_8), peerMask))
+        out.flush()
+        val pong = WsFrames.readFrame(in)
+        assert(pong.opcode == WsFrames.OpPong && new String(pong.payload, UTF_8) == "sync")
+        assert(hub.receivedCount == 1, s"received ${hub.receivedCount} messages")
+        val q = hub.raw.writeStream.format("memory").queryName("ws_bin_frag")
+          .outputMode("append").start()
+        try {
+          q.processAllAvailable()
+          assert(spark.table("ws_bin_frag").collect().map(_.getString(0)).toSeq ==
+            Seq("{\"id\":2}"))
+        } finally q.stop()
+      } finally sock.close()
+    } finally hub.stop()
+  }
+
   test("stop() closes peers that connected but never finished the upgrade (plain and TLS)") {
     import scala.jdk.CollectionConverters._
     val dir = "src/test/resources/tls"

@@ -186,6 +186,34 @@ class WsRelaySpec extends SparkSpec {
     } finally badAccept.close()
   }
 
+  test("clientHandshake bounds the response header lines: a server that " +
+    "streams header lines forever fails the handshake instead of pinning it") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val srv = new ServerSocket(0)
+    val server = new Thread(() => {
+      try {
+        val s = srv.accept()
+        try {
+          val in = new DataInputStream(new BufferedInputStream(s.getInputStream))
+          var line = WsFrames.readHeaderLine(in)
+          while (line.nonEmpty) line = WsFrames.readHeaderLine(in) // drain request
+          val out = new BufferedOutputStream(s.getOutputStream)
+          out.write("HTTP/1.1 101 Switching Protocols\r\n".getBytes(UTF_8))
+          val pad = "X-Pad: y\r\n".getBytes(UTF_8)
+          while (true) out.write(pad) // until the client hangs up
+        } finally s.close()
+      } catch { case _: Throwable => () }
+    })
+    server.setDaemon(true); server.start()
+    val sock = new Socket("127.0.0.1", srv.getLocalPort)
+    try {
+      val handshake = Future(WsRelay.clientHandshake(sock, "x", "/relay"))(ExecutionContext.global)
+      val e = intercept[java.io.IOException](Await.result(handshake, 20.seconds))
+      assert(e.getMessage.contains("header lines"), e.getMessage)
+    } finally { sock.close(); srv.close() }
+  }
+
   test("a hostile declared frame length is rejected BEFORE allocation") {
     // header claims a 2 GiB unmasked binary frame; readFrame must throw on
     // the declared length without trying to allocate it
