@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Session {
 
   /** `local[cpus]` with one shuffle partition per core, the join posture,
-    * UTC and the UI off. Callers add their own settings and call
+    * UTC, the UI off and the fork-free `file:` filesystem
+    * ([[graft.sources.LocalFs]]). Callers add their own settings and call
     * `getOrCreate()`. */
   def local(cpus: Int): SparkSession.Builder =
     SparkSession.builder()
@@ -31,4 +32,14 @@ object Session {
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(localFs)
+
+  /** The `spark.hadoop.*` pairs that select [[graft.sources.LocalFs]].
+    * build.sbt passes the same pairs as `-D` flags to every JVM it forks,
+    * so a session or Hadoop configuration built without this posture
+    * (perfbench's, `SparkHadoopUtil`'s) gets them too: Hadoop caches one
+    * `FileSystem` per scheme and user, and whichever is created first
+    * serves the whole JVM. */
+  val localFs: Map[String, String] =
+    graft.sources.LocalFs.hadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v }
 }

@@ -60,9 +60,7 @@ object KMeans {
   private def trainOn(vecs: DataFrame, k: Int, iters: Int): Model = {
     require(k > 0 && iters >= 0, "k > 0, iters >= 0")
     val spark = vecs.sparkSession
-    // deterministic seed draw: k vectors in (hash, id) order
-    val seeds = vecs.orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(k).collect()
+    val seeds = SimilarityIvf.hashRanked(vecs, k).collect()
       .map(_.getSeq[Long](1).toArray)
     require(seeds.nonEmpty, "no valid vectors to train on")
     // the model dimension is the seed dimension: a ragged corpus (mixed

@@ -40,15 +40,20 @@ object SimilarityIvf {
   }
 
   /** The training sample: the first `sampleN` (vec_id, embedding as
-    * doubles) rows in (xxhash64(vec_id), vec_id) order, one Spark job. */
+    * doubles) rows of [[hashRanked]], one Spark job. */
   private[operators] def trainingSample(embeddings: DataFrame,
       sampleN: Int): Array[(Long, Array[Double])] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    embeddings.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(sampleN)
+    hashRanked(embeddings, sampleN)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Array[Double])].collect()
   }
+
+  /** The one deterministic draw rule of the k-means trainers (IVF, PQ,
+    * [[KMeans]]): the first `n` rows in (xxhash64(vec_id), vec_id) order. */
+  private[operators] def hashRanked(vecs: DataFrame, n: Int): DataFrame =
+    vecs.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(n)
 
   /** Lloyd's k-means on the driver, the ONE trainer of IVF centroids and
     * PQ codebooks. Seeds are the first `k` rows; the first seed's length

@@ -238,8 +238,10 @@ object Spool {
 
   /** Group-commit spool writer for the WS edges — the amortized form of
     * [[writeRecord]], motivated by the measured per-record bound
-    * (graft.tools.SpoolRate: ~140 records/s/writer on a local FS — one
-    * create + hsync + rename each). Producers [[append]] completed
+    * (graft.tools.SpoolRate on a 4-core VM, local ext4: ~4,400
+    * records/s/writer, one create + hsync + rename each; it was ~160–200
+    * while Hadoop forked `chmod` for each file and its `.crc`, before
+    * [[LocalFs]]). Producers [[append]] completed
     * lines; a flusher thread drains whatever queued during the previous
     * flush into ONE atomically-renamed NDJSON segment file, then runs
     * `onDurable(count)` — so a record is still COUNTED RECEIVED only
