@@ -172,32 +172,27 @@ object Bpe {
   private val bpeCache =
     new ThreadLocal[java.util.IdentityHashMap[AnyRef, java.util.HashMap[String, java.lang.Long]]]
 
-  /** Persist a trained merge table as a versioned artifact — `v<N>/merges/`
-    * parquet (rank, lhs, rhs), published with the same rename-based
-    * `_current` pointer swap as the LSH/IVF indexes and the LM/importance
-    * models: train once per corpus refresh, encode many batches/streams
-    * against the loaded vocabulary. */
+  private final case class MergesMeta(merges: Array[Array[String]]) // (lhs, rhs) by rank
+
+  /** Persist a trained merge table as the `v<N>/meta.json` of a versioned
+    * artifact ([[graft.sources.Fs.writeVersioned]]): train once per corpus
+    * refresh, encode many batches/streams against the loaded vocabulary. */
   def saveBpe(spark: org.apache.spark.sql.SparkSession,
               model: BpeModel, path: String): Unit = {
-    import spark.implicits._
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
-      model.merges.toSeq.zipWithIndex
-        .map { case ((a, b), r) => (r, a, b) }
-        .toDF("rank", "lhs", "rhs")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/merges")
+      graft.sources.Fs.writeMeta(spark, vdir,
+        MergesMeta(model.merges.map { case (a, b) => Array(a, b) }))
     }
     ()
   }
 
-  /** Load the `_current` version of a persisted merge table (rank order
-    * restored from the rank column, not file order). */
+  /** Load the `_current` version of a persisted merge table. */
   def loadBpe(spark: org.apache.spark.sql.SparkSession, path: String): BpeModel = {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no BPE model at $path (missing _current pointer — run saveBpe first)")
-    val merges = spark.read.parquet(s"$vdir/merges")
-      .collect().sortBy(_.getInt(0))
-      .map(r => (r.getString(1), r.getString(2)))
-    BpeModel(merges)
+    val merges = graft.sources.Fs.readMeta[MergesMeta](spark, vdir, "run saveBpe").merges
+    require(merges.forall(_.length == 2), s"BPE model at $vdir has a merge that is not a pair")
+    BpeModel(merges.map(p => (p(0), p(1))))
   }
 
   /** A word as its initial symbol sequence: chars, last one marked `</w>`. */

@@ -414,11 +414,11 @@ object TextAnalytics {
     UnigramLm(ql, total)
   }
 
-  /** Persist a trained LM as a versioned model artifact — `v<N>/lm/`
-    * parquet (token, ql) plus `v<N>/meta/` (total_tokens), published with
-    * the same rename-based `_current` pointer swap as the LSH/IVF indexes
-    * (Fs.publishVersion: readers resolve a complete version, the
-    * immediately-previous one is retained). A production pipeline trains
+  private final case class LmMeta(totalTokens: Long) // v<N>/meta.json
+
+  /** Persist a trained LM as a versioned model artifact
+    * ([[graft.sources.Fs.writeVersioned]]): `v<N>/lm/` parquet (token, ql;
+    * vocabulary-sized) plus `v<N>/meta.json`. A production pipeline trains
     * once per corpus refresh and scores many batches/streams against the
     * loaded artifact. */
   def saveUnigramLm(spark: org.apache.spark.sql.SparkSession, lm: UnigramLm,
@@ -441,8 +441,7 @@ object TextAnalytics {
       spark.sparkContext
         .parallelize(scala.collection.immutable.ArraySeq.unsafeWrapArray(entries), slices)
         .toDF("tok", "ql").write.mode("overwrite").parquet(s"$vdir/lm")
-      Seq(lm.totalTokens).toDF("total_tokens")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.Fs.writeMeta(spark, vdir, LmMeta(lm.totalTokens))
     }
   }
 
@@ -458,8 +457,8 @@ object TextAnalytics {
       s"persisted LM vocabulary exceeds maxVocab=$maxVocab")
     val ql = new java.util.HashMap[String, java.lang.Long](math.max(16, rows.length * 2))
     rows.foreach(r => ql.put(r.getString(0), java.lang.Long.valueOf(r.getLong(1))))
-    val total = spark.read.parquet(s"$vdir/meta").head().getLong(0)
-    UnigramLm(ql, total)
+    UnigramLm(ql, graft.sources.Fs.readMeta[LmMeta](spark, vdir,
+      "run saveUnigramLm").totalTokens)
   }
 
   /** (nTokens, Σ quantized-log-count) per row; null text → null struct (the

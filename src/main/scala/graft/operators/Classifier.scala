@@ -43,7 +43,7 @@ object Classifier {
   /** Trained model: `wNanos(d)` = weight of bucket d in integer nanos,
     * `wNanos(dim)` = length feature, `wNanos(dim+1)` = bias. Nanos are
     * the persistence format AND the scoring format (weights round-trip
-    * bit-exactly through parquet). */
+    * bit-exactly through meta.json). */
   final case class Model(dim: Int, wNanos: Array[Long]) {
     require(wNanos.length == dim + 2, "weights must be dim+2 (length, bias)")
     def weights: Array[Double] = wNanos.map(_ / 1e9)
@@ -194,36 +194,21 @@ object Classifier {
     scored(docs.select(col("doc_id"), col("text")), model)
       .select("doc_id", "score_ppm", "predicted")
 
-  /** Persist a trained model as a versioned artifact — `v<N>/weights/`
-    * parquet (pos, w_nanos) behind the same rename-based `_current`
-    * pointer swap as the LSH/IVF/span indexes and the LM/BPE/importance/
-    * k-means models: train once, score many. */
-  def saveModel(spark: SparkSession, model: Model, path: String): Unit = {
-    import spark.implicits._
+  /** Persist a trained model as the `v<N>/meta.json` of a versioned
+    * artifact ([[graft.sources.Fs.writeVersioned]]): train once, score many. */
+  def saveModel(spark: SparkSession, model: Model, path: String): Unit =
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
-      model.wNanos.toSeq.zipWithIndex.map { case (v, pos) => (pos, v) }
-        .toDF("pos", "w_nanos")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/weights")
+      graft.sources.Fs.writeMeta(spark, vdir, model)
     }
-  }
 
   /** Load the `_current` version of a persisted model. */
   def loadModel(spark: SparkSession, path: String): Model = {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no classifier model at $path (missing _current pointer — " +
         "run saveModel first)")
-    val rows = spark.read.parquet(s"$vdir/weights").collect()
-    require(rows.nonEmpty, s"persisted classifier model at $vdir is empty")
-    // positions must cover 0..n-1 exactly (the whiten-stats contiguity
-    // rule): a missing pos would silently load a zero weight, a duplicate
-    // would silently overwrite, an out-of-range pos would throw a raw
-    // ArrayIndexOutOfBoundsException instead of a diagnostic
-    val positions = rows.map(_.getInt(0)).sorted
-    require(positions.toSeq == rows.indices,
-      s"persisted classifier model at $vdir has corrupt weight positions — " +
-        s"expected 0..${rows.length - 1} exactly, got ${positions.mkString(",")}")
-    val w = new Array[Long](rows.length)
-    rows.foreach(r => w(r.getInt(0)) = r.getLong(1))
-    Model(w.length - 2, w)
+    // Model's own check (dim + 2 weights) runs inside the decode
+    val model = graft.sources.Fs.readMeta[Model](spark, vdir, "run saveModel")
+    require(model.dim > 0, s"persisted classifier model at $vdir is empty")
+    model
   }
 }

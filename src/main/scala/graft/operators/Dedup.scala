@@ -330,10 +330,12 @@ object Dedup {
         col("r._3").as("text_kept"))
   }
 
+  private final case class SpanParams(n: Int, shards: Int) // v<N>/meta.json
+
   /** Persist the corpus's distinct span hashes as a versioned index for
     * [[probeSpanExcise]] — the incremental half of span-level dedup:
     * `v<N>/spans/` = (gh) partitioned into `shards` by pmod(gh),
-    * `v<N>/params/` = (n, shards). Span hashes are computed once at
+    * `v<N>/meta.json` = [[SpanParams]]. Span hashes are computed once at
     * build; probes never re-read the corpus text. Same atomic
     * `v<N>`/`_current` publish as every other artifact
     * (graft.sources.Fs.writeVersioned — rename-based pointer swap,
@@ -351,7 +353,6 @@ object Dedup {
   def buildSpanIndex(docs: DataFrame, path: String, n: Int = 10,
                      shards: Int = 64): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     require(n >= 1 && shards >= 1,
       s"need n >= 1 (got $n), shards >= 1 (got $shards)")
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
@@ -361,8 +362,7 @@ object Dedup {
         .distinct()
         .withColumn("shard", pmod(col("gh"), lit(shards)).cast("int"))
         .write.mode("overwrite").partitionBy("shard").parquet(s"$vdir/spans")
-      Seq((n, shards)).toDF("n", "shards")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
+      graft.sources.Fs.writeMeta(spark, vdir, SpanParams(n, shards))
     }
     ()
   }
@@ -387,7 +387,8 @@ object Dedup {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no span index at $path (missing _current pointer — " +
         "run buildSpanIndex first)")
-    val n = spark.read.parquet(s"$vdir/params").head().getAs[Int]("n")
+    val n = graft.sources.Fs.readMeta[SpanParams](spark, vdir,
+      "run buildSpanIndex").n
     val occ = batch.select(col("doc_id"),
       posexplode(graft.functions.FastHash.spanHashesPosCol(col("text"), n))
         .as(Seq("pos", "gh")))
@@ -791,9 +792,11 @@ object Dedup {
   //      dedupe arriving batches against the historical corpus without
   //      recomputing it) ----
 
+  private final case class LshParams(shingleN: Int, k: Int, bands: Int, maxBucket: Int)
+
   /** Persist a MinHash+LSH index: `v<N>/bands/` = (band, bucket, doc_id)
-    * PARTITIONED BY band, `v<N>/sigs/` = (doc_id, sig), `v<N>/params/` =
-    * the build parameters (probes read them back, so probe and index can
+    * PARTITIONED BY band, `v<N>/sigs/` = (doc_id, sig), `v<N>/meta.json` =
+    * the [[LshParams]] (probes read them back, so probe and index can
     * never disagree on the bucket space). Signatures of the historical
     * corpus are computed exactly once, at build time — every subsequent
     * [[probeLshIndex]] call reads them back instead of re-tokenizing
@@ -813,7 +816,6 @@ object Dedup {
   def buildLshIndex(docs: DataFrame, path: String, shingleN: Int = 2,
                     k: Int = 64, bands: Int = 16, maxBucket: Int = 1000): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
     // rename-based pointer swap on return; retains the immediately-previous
     // version for in-flight probes, prunes strictly older ones
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
@@ -829,8 +831,7 @@ object Dedup {
         .select("band", "bucket")
       allBands.join(hot, Seq("band", "bucket"), "left_anti")
         .write.mode("overwrite").partitionBy("band").parquet(s"$vdir/bands")
-      Seq((shingleN, k, bands, maxBucket)).toDF("shingle_n", "k", "bands", "max_bucket")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
+      graft.sources.Fs.writeMeta(spark, vdir, LshParams(shingleN, k, bands, maxBucket))
     }
     ()
   }
@@ -862,9 +863,8 @@ object Dedup {
         "run buildLshIndex first)")
     // parameters come FROM the index, so probe and index bucket spaces
     // cannot disagree (hot buckets were already dropped at build time)
-    val p = spark.read.parquet(s"$vdir/params").head()
-    val (shingleN, k, bands) =
-      (p.getAs[Int]("shingle_n"), p.getAs[Int]("k"), p.getAs[Int]("bands"))
+    val LshParams(shingleN, k, bands, _) =
+      graft.sources.Fs.readMeta[LshParams](spark, vdir, "run buildLshIndex")
     val newSigs = newDocs
       .select(col("doc_id"), minhashSignature(col("text"), shingleN, k).as("sig"))
       .filter(element_at(col("sig"), 1) =!= Long.MaxValue)

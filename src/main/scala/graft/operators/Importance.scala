@@ -185,22 +185,13 @@ object Importance {
           col("__s.nGrams")).as("avg_weight"))
   }
 
-  /** Persist a trained model as a versioned artifact — `v<N>/model/`
-    * parquet (bucket, ql) plus `v<N>/meta/` (qn, buckets), published
-    * with the same rename-based `_current` pointer swap as the LSH/IVF
-    * indexes and the unigram LM (readers resolve a complete version,
-    * the immediately-previous one is retained). */
+  /** Persist a trained model as the `v<N>/meta.json` of a versioned
+    * artifact ([[graft.sources.Fs.writeVersioned]]). */
   def saveImportanceModel(spark: org.apache.spark.sql.SparkSession,
-                          model: ImportanceModel, path: String): Unit = {
-    import spark.implicits._
+                          model: ImportanceModel, path: String): Unit =
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
-      model.ql.toSeq.zipWithIndex.map { case (q, b) => (b, q) }
-        .toDF("bucket", "ql")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/model")
-      Seq((model.qn, model.buckets)).toDF("qn", "buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.Fs.writeMeta(spark, vdir, model)
     }
-  }
 
   /** Load the `_current` version of a persisted model. */
   def loadImportanceModel(spark: org.apache.spark.sql.SparkSession,
@@ -208,13 +199,10 @@ object Importance {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no importance model at $path (missing _current pointer — " +
         "run saveImportanceModel first)")
-    val meta = spark.read.parquet(s"$vdir/meta").head()
-    val (qn, buckets) = (meta.getLong(0), meta.getInt(1))
-    require(buckets > 0 && buckets <= MaxBuckets,
-      s"persisted model has implausible bucket count $buckets")
-    val ql = new Array[Long](buckets)
-    spark.read.parquet(s"$vdir/model").collect()
-      .foreach(r => ql(r.getInt(0)) = r.getLong(1))
-    ImportanceModel(ql, qn)
+    val model = graft.sources.Fs.readMeta[ImportanceModel](spark, vdir,
+      "run saveImportanceModel")
+    require(model.buckets > 0 && model.buckets <= MaxBuckets,
+      s"persisted model at $vdir has implausible bucket count ${model.buckets}")
+    model
   }
 }

@@ -96,19 +96,12 @@ object KMeans {
     Model(centroids)
   }
 
-  /** Persist a trained model as a versioned artifact — `v<N>/centroids/`
-    * parquet (cluster, pos, c_ppm) behind the same rename-based
-    * `_current` pointer swap as the LSH/IVF/span indexes and the LM/BPE/
-    * importance models: train once (the expensive full-corpus job),
-    * assign many (stream batches, later corpora) against the published
-    * version; readers always resolve a complete model. */
+  /** Persist a trained model as the `v<N>/meta.json` of a versioned
+    * artifact ([[graft.sources.Fs.writeVersioned]]): train once (the
+    * expensive full-corpus job), assign many against the published one. */
   def saveModel(spark: SparkSession, model: Model, path: String): Unit = {
-    import spark.implicits._
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
-      model.centroids.zipWithIndex.flatMap { case (cp, c) =>
-        cp.zipWithIndex.map { case (v, pos) => (c, pos, v) }
-      }.toSeq.toDF("cluster", "pos", "c_ppm")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/centroids")
+      graft.sources.Fs.writeMeta(spark, vdir, model)
     }
   }
 
@@ -117,13 +110,11 @@ object KMeans {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no k-means model at $path (missing _current pointer — " +
         "run saveModel first)")
-    val rows = spark.read.parquet(s"$vdir/centroids").collect()
-    require(rows.nonEmpty, s"persisted k-means model at $vdir is empty")
-    val k = rows.iterator.map(_.getInt(0)).max + 1
-    val dim = rows.iterator.map(_.getInt(1)).max + 1
-    val cents = Array.fill(k)(new Array[Long](dim))
-    rows.foreach(r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2))
-    Model(cents)
+    val model = graft.sources.Fs.readMeta[Model](spark, vdir, "run saveModel")
+    val cs = model.centroids
+    require(cs.nonEmpty && cs.head.nonEmpty && cs.forall(_.length == cs.head.length),
+      s"persisted k-means model at $vdir is empty or has ragged centroids")
+    model
   }
 
   /** Assign every vector to its nearest trained centroid: map-side argmin

@@ -487,6 +487,8 @@ object Multimodal {
 
   // ---- Persisted perceptual-hash index (incremental media dedup) ----
 
+  private final case class HashIndexParams(maxHamming: Int, maxBucket: Int) // v<N>/meta.json
+
   /** Persist a banded 64-bit perceptual-hash index — the corpus side of
     * INCREMENTAL media dedup: build once per corpus refresh, then probe
     * every arriving batch/stream against it (the media analogue of the
@@ -503,7 +505,6 @@ object Multimodal {
   def buildHashIndex(hashes: DataFrame, path: String, hashCol: String,
                      maxHamming: Int = 6, maxBucket: Int = 5000): Unit = {
     val spark = hashes.sparkSession
-    import spark.implicits._
     val nBands = maxHamming + 1
     // full range check BEFORE any write: a bad bound failing inside the
     // version closure would waste the corpus write and orphan a v<N> dir
@@ -529,8 +530,7 @@ object Multimodal {
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") <= maxBucket).drop("__rn")
         .write.mode("overwrite").partitionBy("band").parquet(s"$vdir/bands")
-      Seq((maxHamming, maxBucket)).toDF("max_hamming", "max_bucket")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/params")
+      graft.sources.Fs.writeMeta(spark, vdir, HashIndexParams(maxHamming, maxBucket))
     }
     ()
   }
@@ -548,7 +548,8 @@ object Multimodal {
                      hashCol: String, maxHamming: Int = 6): DataFrame = {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no hash index at $path (missing _current pointer — run buildHashIndex first)")
-    val built = spark.read.parquet(s"$vdir/params").head().getInt(0)
+    val built = graft.sources.Fs.readMeta[HashIndexParams](spark, vdir,
+      "run buildHashIndex").maxHamming
     require(maxHamming <= built,
       s"index guarantees recall to hamming $built, requested $maxHamming — rebuild deeper")
     val nBands = built + 1

@@ -131,8 +131,8 @@ object SimilarityIvf {
     * PARTITIONED BY cell (so probes become partition-pruned scans — at
     * 100 TB a probe touches nprobe/nCells of the files, enforced by the
     * storage layout, not a runtime filter); each `v<N>/` version is
-    * METADATA ONLY — the `_centroids` side table plus `_segments`, the
-    * list of segment directories that participate. The rename-based
+    * METADATA ONLY — one `meta.json` ([[IndexMeta]]: the centroids plus
+    * the list of segment directories that participate). The rename-based
     * `_current` pointer swap publishes a version atomically, with the
     * same concurrency contract as the LSH index (Dedup.buildLshIndex): a
     * probe that resolved the pointer before a rebuild keeps reading its
@@ -164,6 +164,11 @@ object SimilarityIvf {
     seg
   }
 
+  /** `v<N>/meta.json`: cell `i`'s centroid is `centroids(i)`; `segments`
+    * is the chain, in order. */
+  private[operators] final case class IndexMeta(centroids: Array[Array[Double]],
+      segments: Array[String])
+
   /** Publish a metadata version referencing `segments` (in order), then
     * collect segments no live version references — WITHOUT this, every
     * rebuild would leak a full corpus-sized segment (the old layout
@@ -172,13 +177,9 @@ object SimilarityIvf {
   private def publishMeta(spark: org.apache.spark.sql.SparkSession,
       path: String, centroids: Array[(Int, Array[Double])],
       segments: Seq[String]): Unit = {
-    import spark.implicits._
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
-      spark.createDataset(centroids.toSeq.map { case (c, v) => (c, v.toSeq) })
-        .toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/_centroids")
-      segments.toDF("segment")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/_segments")
+      graft.sources.Fs.writeMeta(spark, vdir,
+        IndexMeta(centroids.sortBy(_._1).map(_._2), segments.toArray))
     }
     gcSegments(spark, path)
   }
@@ -188,7 +189,7 @@ object SimilarityIvf {
     * coarse quantizer is frozen between rebuilds — the standard IVF
     * trade: recall on a drifting distribution degrades until the next
     * [[buildIndex]]/[[compactIndex]] refresh), write one new segment with
-    * just the delta, and publish a version whose `_segments` is the base
+    * just the delta, and publish a version whose segment list is the base
     * chain plus the delta. Cost is proportional to the DELTA, not the
     * corpus; probes transparently scan the chain (same cell partitioning
     * in every segment). Long chains accrete per-segment file overhead —
@@ -207,7 +208,7 @@ object SimilarityIvf {
   def appendToIndex(newVectors: DataFrame, path: String): Unit = {
     val spark = newVectors.sparkSession
     if (newVectors.isEmpty) return
-    val (_, centroids, segs) = resolveIndex(spark, path)
+    val (centroids, segs) = resolveIndex(spark, path)
     val seg = writeSegment(path, assignCells(newVectors, centroids))
     publishMeta(spark, path, centroids, segs :+ seg)
   }
@@ -221,7 +222,7 @@ object SimilarityIvf {
     * complete chain). */
   def compactIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): Unit = {
-    val (_, centroids, segs) = resolveIndex(spark, path)
+    val (centroids, segs) = resolveIndex(spark, path)
     val seg = writeSegment(path, readVectors(spark, path, segs))
     publishMeta(spark, path, centroids, Seq(seg))
   }
@@ -230,15 +231,12 @@ object SimilarityIvf {
     * versions. */
   private def gcSegments(spark: org.apache.spark.sql.SparkSession,
                          path: String): Unit = {
-    import spark.implicits._
     val (fs, root) = graft.sources.Fs.of(spark, path)
     val cur = graft.sources.Fs.currentVersion(fs, root).getOrElse(return)
-    val live = Seq(cur, cur - 1).flatMap { v =>
-      val p = new org.apache.hadoop.fs.Path(root, s"v$v/_segments")
-      if (fs.exists(p))
-        spark.read.parquet(s"$path/v$v/_segments").as[String].collect()
-      else Seq.empty
-    }.toSet
+    val live = Seq(cur, cur - 1)
+      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(root, s"v$v/meta.json")))
+      .flatMap(v => graft.sources.Fs.readMeta[IndexMeta](spark, s"$path/v$v",
+        "run buildIndex").segments).toSet
     val segRoot = new org.apache.hadoop.fs.Path(root, "segments")
     if (!fs.exists(segRoot)) return
     fs.listStatus(segRoot).map(_.getPath).foreach { p =>
@@ -246,27 +244,20 @@ object SimilarityIvf {
     }
   }
 
-  /** Resolve the `_current` index version, its centroid table, and its
-    * segment list — the ONE copy of the layout/error contract for every
+  /** Resolve the `_current` index version's centroid table and segment
+    * list — the ONE copy of the layout/error contract for every
     * probe path. */
   private def resolveIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (String, Array[(Int, Array[Double])], Seq[String]) = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    sc.setJobDescription("ivf: resolve index metadata")
-    try {
-      val vdir = graft.sources.Fs.resolveCurrent(spark, path,
-        s"no IVF index at $path (missing _current pointer — " +
-          "run buildIndex first)")
-      val centroids = spark.read.parquet(s"$vdir/_centroids")
-        .as[(Int, Seq[Double])].collect().map { case (c, v) => (c, v.toArray) }
-      val (fs, _) = graft.sources.Fs.of(spark, path)
-      require(fs.exists(new org.apache.hadoop.fs.Path(s"$vdir/_segments")),
-        s"IVF index at $path predates the segment layout (version dir " +
-          s"$vdir has no _segments) — run buildIndex to refresh it")
-      val segs = spark.read.parquet(s"$vdir/_segments").as[String].collect().toSeq
-      (vdir, centroids, segs)
-    } finally sc.setJobDescription(null)
+      path: String): (Array[(Int, Array[Double])], Seq[String]) = {
+    val vdir = graft.sources.Fs.resolveCurrent(spark, path,
+      s"no IVF index at $path (missing _current pointer — " +
+        "run buildIndex first)")
+    val meta = graft.sources.Fs.readMeta[IndexMeta](spark, vdir,
+      "run buildIndex to refresh it")
+    val cs = meta.centroids
+    require(cs.nonEmpty && cs.head.nonEmpty && cs.forall(_.length == cs.head.length),
+      s"IVF index at $vdir has no centroids or ragged ones")
+    (cs.zipWithIndex.map(_.swap), meta.segments.toSeq)
   }
 
   /** Union scan of a version's segment chain — one scan per segment
@@ -297,7 +288,7 @@ object SimilarityIvf {
                  queryVec: Array[Float], k: Int, nprobe: Int,
                  excludeIds: Seq[Long] = Nil): DataFrame = {
     import spark.implicits._
-    val (_, centroids, segs) = resolveIndex(spark, path)
+    val (centroids, segs) = resolveIndex(spark, path)
     val probeCells = nearestCells(queryVec.map(_.toDouble), centroids, nprobe)
     val q = spark.createDataset(Seq(queryVec.toSeq)).toDF("query_vec")
       .select(col("query_vec").cast("array<float>").as("query_vec"))
@@ -327,7 +318,7 @@ object SimilarityIvf {
                        anchors: DataFrame, k: Int, lo: Double, hi: Double,
                        nprobe: Int = 4): DataFrame = {
     import spark.implicits._
-    val (_, centroids, segs) = resolveIndex(spark, path)
+    val (centroids, segs) = resolveIndex(spark, path)
     spark.sparkContext.setJobDescription("ivf: collect anchors")
     val aRows = try anchors.select(col("vec_id"), col("label"), col("embedding"))
       .limit(Dedup.maxVerifierSample + 1)
@@ -385,7 +376,7 @@ object SimilarityIvf {
                   k: Int, nprobe: Int = 2,
                   maxCellSize: Int = 100000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val (_, centroids, segs) = resolveIndex(spark, path)
+    val (centroids, segs) = resolveIndex(spark, path)
     val bc = spark.sparkContext.broadcast(centroids)
     // zero-norm guard (the hardNegativesIvf rule): a zero vector makes
     // every touching cosine 0/0 = NaN, and NaN sorts ABOVE all doubles,

@@ -175,8 +175,10 @@ object SimilarityPq {
     rerank(embeddings, short, queryVec, k)
   }
 
-  /** Persist a PQ index VERSION: nibble-packed codes as parquet plus a
-    * `_codebooks` side table, into a fresh `v<N>/` published by the
+  private final case class IndexMeta(codebooks: Codebooks) // v<N>/meta.json
+
+  /** Persist a PQ index VERSION: nibble-packed codes as parquet plus the
+    * codebooks in `meta.json`, into a fresh `v<N>/` published by the
     * rename-based `_current` pointer swap — the same layout and
     * concurrency contract as the LSH and IVF indexes (a probe that
     * resolved the pointer before a rebuild keeps reading its previous
@@ -185,7 +187,6 @@ object SimilarityPq {
                  ksub: Int = 16, iters: Int = 3): Unit = {
     require(ksub <= 16, s"codes are nibble-packed: ksub must be <= 16 (got $ksub)")
     val spark = embeddings.sparkSession
-    import spark.implicits._
     graft.sources.Fs.writeVersioned(spark, path) { vdir =>
       val books = trainCodebooks(embeddings, m, ksub, iters)
       val packUdf = udf((cs: Seq[Int]) =>
@@ -193,26 +194,20 @@ object SimilarityPq {
       encode(embeddings, books)
         .select(col("vec_id"), packUdf(col("codes")).as("code"))
         .write.mode("overwrite").parquet(s"$vdir/codes")
-      spark.createDataset(
-          books.zipWithIndex.flatMap { case (cb, j) =>
-            cb.zipWithIndex.map { case (ctr, c) => (j, c, ctr.toSeq) }
-          }.toSeq)
-        .toDF("subspace", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$vdir/_codebooks")
+      graft.sources.Fs.writeMeta(spark, vdir, IndexMeta(books))
     }
     ()
   }
 
-  /** Load a persisted version's codebooks (driver-side, m×ksub rows). */
+  /** Load a persisted version's codebooks (driver-side, m×ksub×sub). */
   private def loadCodebooks(spark: SparkSession, vdir: String): Codebooks = {
-    import spark.implicits._
-    val rows = spark.read.parquet(s"$vdir/_codebooks")
-      .select(col("subspace"), col("code"), col("centroid"))
-      .as[(Int, Int, Seq[Double])].collect()
-    val m = rows.map(_._1).max + 1
-    val ksub = rows.map(_._2).max + 1
-    val books: Codebooks = Array.ofDim[Array[Double]](m, ksub)
-    rows.foreach { case (j, c, ctr) => books(j)(c) = ctr.toArray }
+    val books = graft.sources.Fs.readMeta[IndexMeta](spark, vdir,
+      "run buildIndex").codebooks
+    val (ksub, sub) = (books.headOption.fold(0)(_.length),
+      books.headOption.flatMap(_.headOption).fold(0)(_.length))
+    require(sub > 0 && books.forall(b => b.length == ksub && b.forall(_.length == sub)),
+      s"PQ index at $vdir has empty or ragged codebooks")
+    require(ksub <= 16, s"PQ index at $vdir has ksub $ksub > 16 (codes are nibble-packed)")
     books
   }
 

@@ -1,7 +1,11 @@
 package graft.sources
 
+import com.fasterxml.jackson.annotation.{JsonSetter, Nulls}
+import com.fasterxml.jackson.databind.DeserializationFeature._
+import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import scala.reflect.{ClassTag, classTag}
 
 /** Session-configured Hadoop filesystem access — the one way the engine
   * touches storage paths directly (index builds, compaction, sealed-object
@@ -33,9 +37,15 @@ object Fs {
   /** Write the NEXT version of a versioned artifact root: `write` receives
     * the fresh `v<N>` directory to populate, and on return the `_current`
     * pointer swaps atomically ([[publishVersion]]). The one skeleton behind
-    * every persisted artifact (LSH/IVF/PQ indexes, unigram LM, importance
-    * model, BPE merges) — a protocol fix lands here once. Returns the
-    * published version. */
+    * every persisted artifact (LSH, span, media-hash, IVF and PQ indexes;
+    * k-means, classifier, importance, BPE and unigram-LM models; streaming
+    * rollups; the sharded training export) — a protocol fix lands here
+    * once. Returns the published version. Layout rule: corpus-sized data
+    * is a parquet table in `v<N>/`; whatever the driver holds whole
+    * (centroids, codebooks, weights, merges, parameters, segment lists,
+    * batch marks) is the one `v<N>/meta.json` ([[writeMeta]]), read with no
+    * Spark job. The export's shard `manifest` stays parquet: Spark compares
+    * it with the data (`exceptAll`). */
   def writeVersioned(spark: SparkSession, path: String)(write: String => Unit): Int = {
     val (fs, root) = of(spark, path)
     // CLAIM the version directory with an exclusive create before
@@ -62,6 +72,47 @@ object Fs {
       fs.create(new Path(root, s"v$version/_claim"), false).close()
       true
     } catch { case _: java.io.IOException => false }
+
+  // ---- the driver-held part of a version: `v<N>/meta.json` ----
+
+  // A decoded document is complete (no null, missing, unknown or trailing
+  // content; no float read as an integer), so loaders check only shape.
+  // Documents hold primitive arrays: an erased `Seq[Long]` reads small
+  // values back as boxed Ints.
+  private lazy val metaMapper = JsonMapper.builder()
+    .addModule(com.fasterxml.jackson.module.scala.DefaultScalaModule)
+    .enable(FAIL_ON_MISSING_CREATOR_PROPERTIES, FAIL_ON_NULL_CREATOR_PROPERTIES,
+      FAIL_ON_NULL_FOR_PRIMITIVES, FAIL_ON_TRAILING_TOKENS)
+    .disable(ACCEPT_FLOAT_AS_INT)
+    .defaultSetterInfo(JsonSetter.Value.construct(Nulls.FAIL, Nulls.FAIL))
+    .build()
+
+  /** Write `doc` (a case class of primitives, strings and arrays) as
+    * `vdir/meta.json`, inside [[writeVersioned]]'s `write`: the directory
+    * is claimed and `_current` publishes it, so no tmp file or rename. */
+  def writeMeta(spark: SparkSession, vdir: String, doc: AnyRef): Unit = {
+    val (fs, p) = of(spark, s"$vdir/meta.json")
+    val bytes = metaMapper.writeValueAsBytes(doc)
+    val out = fs.create(p, false)
+    try out.write(bytes) finally out.close()
+  }
+
+  /** Read `vdir/meta.json` as a `T`; a missing (older layout) or
+    * undecodable one fails naming the path and `what` (the entry point to
+    * re-run). */
+  def readMeta[T: ClassTag](spark: SparkSession, vdir: String, what: String): T = {
+    val (fs, p) = of(spark, s"$vdir/meta.json")
+    val in = try fs.open(p) catch {
+      case _: java.io.FileNotFoundException => throw new IllegalArgumentException(
+        s"$vdir has no meta.json (an artifact layout older than meta.json) — $what")
+    }
+    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    try metaMapper.readValue(bytes, classTag[T].runtimeClass.asInstanceOf[Class[T]])
+    catch {
+      case e: com.fasterxml.jackson.core.JacksonException => throw new IllegalArgumentException(
+        s"$p is not a readable artifact document (${e.getOriginalMessage}) — $what", e)
+    }
+  }
 
   /** Resolve the `_current` `v<N>` directory of a versioned artifact root;
     * fails with `missing` (name the build entry point) when absent. */

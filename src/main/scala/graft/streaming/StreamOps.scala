@@ -366,6 +366,8 @@ object StreamOps {
     }
   }
 
+  private[streaming] final case class RollupMeta(lastBatch: Long) // v<N>/meta.json
+
   /** The versioned-fold skeleton shared by the rollup maintainers: resolve
     * the current version, read its folded-through batchId, skip the
     * checkpoint replay of exactly the last batch, REJECT a batchId below
@@ -377,11 +379,11 @@ object StreamOps {
   private def foldVersionedBatch(spark: SparkSession, rollupPath: String,
       batchId: Long, artifact: String)
       (fold: Option[DataFrame] => DataFrame): Unit = {
-    import spark.implicits._
     val (fs, root) = graft.sources.Fs.of(spark, rollupPath)
     val prev = graft.sources.Fs.currentVersion(fs, root)
       .map(v => s"$rollupPath/v$v")
-    val last = prev.map(d => spark.read.parquet(s"$d/meta").head.getLong(0))
+    val last = prev.map(d => graft.sources.Fs.readMeta[RollupMeta](spark, d,
+      "start over on a fresh rollup path").lastBatch)
     if (last.contains(batchId)) return // checkpoint replay of the last batch
     require(last.forall(_ < batchId),
       s"rollup at $rollupPath already folded through batch ${last.get}, " +
@@ -390,8 +392,7 @@ object StreamOps {
     val merged = fold(prev.map(d => spark.read.parquet(s"$d/$artifact")))
     graft.sources.Fs.writeVersioned(spark, rollupPath) { vdir =>
       merged.write.mode("overwrite").parquet(s"$vdir/$artifact")
-      Seq(batchId).toDF("last_batch").coalesce(1)
-        .write.mode("overwrite").parquet(s"$vdir/meta")
+      graft.sources.Fs.writeMeta(spark, vdir, RollupMeta(batchId))
     }
     ()
   }

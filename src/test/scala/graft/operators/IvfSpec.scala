@@ -326,9 +326,9 @@ class IvfSpec extends SparkSpec {
       .collect()
     assert(post.head.getLong(0) == 0L, post.map(_.getLong(0)).mkString(","))
     // centroids are FROZEN across the append (no retrain)
-    val v1c = spark.read.parquet(s"$idx/v1/_centroids").collect().map(_.toString).sorted
-    val v2c = spark.read.parquet(s"$idx/v2/_centroids").collect().map(_.toString).sorted
-    assert(v1c.sameElements(v2c))
+    def centroidsOf(v: Int) = graft.sources.Fs.readMeta[SimilarityIvf.IndexMeta](
+      spark, s"$idx/v$v", "no index").centroids.map(_.toSeq).toSeq
+    assert(centroidsOf(1) == centroidsOf(2))
     // compaction folds to one segment with identical probe results
     SimilarityIvf.compactIndex(spark, idx)
     val compacted = SimilarityIvf.probeIndex(spark, idx, qVec, k = 5, nprobe = 8)

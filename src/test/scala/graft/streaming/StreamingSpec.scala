@@ -717,9 +717,9 @@ class StreamingSpec extends SparkSpec {
     val vBefore = graft.sources.Fs.currentVersion(fs, root).get
     val replay = spark.createDataFrame(
       Seq(("view", 1L, 600L))).toDF("event_type", "n", "cents")
-    val lastId = spark.read.parquet(
-      graft.sources.Fs.resolveCurrent(spark, path, "no rollup") + "/meta")
-      .head.getLong(0)
+    val lastId = graft.sources.Fs.readMeta[StreamOps.RollupMeta](spark,
+      graft.sources.Fs.resolveCurrent(spark, path, "no rollup"), "no rollup")
+      .lastBatch
     StreamOps.mergeRollupBatch(path, Seq("event_type"), Seq("n", "cents"))(
       replay, lastId)
     assert(graft.sources.Fs.currentVersion(fs, root).get == vBefore)
@@ -773,9 +773,9 @@ class StreamingSpec extends SparkSpec {
     // fold would be value-idempotent anyway; the skip saves the write)
     val (fs, root) = graft.sources.Fs.of(spark, path)
     val vBefore = graft.sources.Fs.currentVersion(fs, root).get
-    val lastId = spark.read.parquet(
-      graft.sources.Fs.resolveCurrent(spark, path, "no rollup") + "/meta")
-      .head.getLong(0)
+    val lastId = graft.sources.Fs.readMeta[StreamOps.RollupMeta](spark,
+      graft.sources.Fs.resolveCurrent(spark, path, "no rollup"), "no rollup")
+      .lastBatch
     val replay = spark.createDataFrame(Seq(("view", 1L)))
       .toDF("event_type", "user_id")
     StreamOps.mergeDistinctRollupBatch(path, Seq("event_type"), "user_id")(
@@ -835,9 +835,9 @@ class StreamingSpec extends SparkSpec {
     // replay AT the mark: skipped (version pointer frozen); BELOW: rejected
     val (fs, root) = graft.sources.Fs.of(spark, path)
     val vBefore = graft.sources.Fs.currentVersion(fs, root).get
-    val lastId = spark.read.parquet(
-      graft.sources.Fs.resolveCurrent(spark, path, "no rollup") + "/meta")
-      .head.getLong(0)
+    val lastId = graft.sources.Fs.readMeta[StreamOps.RollupMeta](spark,
+      graft.sources.Fs.resolveCurrent(spark, path, "no rollup"), "no rollup")
+      .lastBatch
     val replay = spark.createDataFrame(Seq(("view", 1L)))
       .toDF("event_type", "user_id")
     StreamOps.mergeHllRollupBatch(path, Seq("event_type"), "user_id")(
@@ -899,9 +899,9 @@ class StreamingSpec extends SparkSpec {
     // replay AT the mark skipped; BELOW rejected
     val (fs, root) = graft.sources.Fs.of(spark, path)
     val vBefore = graft.sources.Fs.currentVersion(fs, root).get
-    val lastId = spark.read.parquet(
-      graft.sources.Fs.resolveCurrent(spark, path, "no rollup") + "/meta")
-      .head.getLong(0)
+    val lastId = graft.sources.Fs.readMeta[StreamOps.RollupMeta](spark,
+      graft.sources.Fs.resolveCurrent(spark, path, "no rollup"), "no rollup")
+      .lastBatch
     val replay = spark.createDataFrame(Seq(("view", 1L)))
       .toDF("event_type", "user_id")
     StreamOps.mergeThetaRollupBatch(path, Seq("event_type"), "user_id")(replay, lastId)
@@ -946,9 +946,9 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
     // replay AT the mark MUST be skipped — the fold is non-idempotent, a
     // re-fold would double-count n (the contract the doc calls load-bearing)
-    val lastId = spark.read.parquet(
-      graft.sources.Fs.resolveCurrent(spark, path, "no rollup") + "/meta")
-      .head.getLong(0)
+    val lastId = graft.sources.Fs.readMeta[StreamOps.RollupMeta](spark,
+      graft.sources.Fs.resolveCurrent(spark, path, "no rollup"), "no rollup")
+      .lastBatch
     val replay = spark.createDataFrame(Seq(("view", 99.0)))
       .toDF("event_type", "value")
     StreamOps.mergeKllRollupBatch(path, Seq("event_type"), "value")(replay, lastId)
