@@ -452,7 +452,7 @@ object TextAnalytics {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no unigram LM at $path (missing _current pointer — " +
         "run saveUnigramLm first)")
-    val rows = spark.read.parquet(s"$vdir/lm").limit(maxVocab + 1).collect()
+    val rows = graft.sources.Fs.readParquet(spark, s"$vdir/lm").limit(maxVocab + 1).collect()
     require(rows.length <= maxVocab,
       s"persisted LM vocabulary exceeds maxVocab=$maxVocab")
     val ql = new java.util.HashMap[String, java.lang.Long](math.max(16, rows.length * 2))
@@ -770,18 +770,21 @@ object TextAnalytics {
     // strings (PropertySpec locks the equality; lower() stays the builtin
     // so Unicode case mapping is unchanged); docs with < 2 tokens leave
     // as explode-of-empty exactly as the size filter drops them.
-    val bgs = docs
+    val sc = docs.sparkSession.sparkContext
+    val pairs = docs
       .select(col("doc_id"),
         explode(FastHash.lowerBigramsCol(lower(col("text")))).as("bg"))
-      // two consumers (the bigram count + the scoring join): materialize
-      // the tokenized pairs once instead of re-running the text kernel.
-      // EAGER — with the lazy form, AQE launches the three leaf
-      // exchange-stage jobs concurrently and all of them race the
-      // uncached tokenization behind per-partition block locks (three
-      // ~5.7 s jobs at sf1, each mostly lock wait); one eager
-      // materialization job in front lets every downstream exchange
-      // stream from cache
-      .localCheckpoint(true)
+    // two consumers (the bigram count + the scoring join): materialize
+    // the tokenized pairs once instead of re-running the text kernel.
+    // EAGER — with the lazy form, AQE launches the three leaf
+    // exchange-stage jobs concurrently and all of them race the
+    // uncached tokenization behind per-partition block locks (three
+    // ~5.7 s jobs at sf1, each mostly lock wait); one eager
+    // materialization job in front lets every downstream exchange
+    // stream from cache
+    val bgs = graft.Session.withJobLabel(sc, "lm bigram: materialize pairs") {
+      pairs.localCheckpoint(true)
+    }
     // vocab-sized join: per-bigram quantized log-conditional. words()
     // tokens contain no spaces, so the context is recoverable from the
     // bigram key without touching the corpus again — and the context
@@ -794,7 +797,9 @@ object TextAnalytics {
     // partial-agg pass whenever AQE's canonical exchange reuse does not
     // fire, which the sf1 profile shows as a third ~1.5 s exchange job);
     // both lm readers scan the reduced table
-    val c2 = bgs.groupBy("bg").agg(count(lit(1)).as("c2")).localCheckpoint(true)
+    val c2 = graft.Session.withJobLabel(sc, "lm bigram: materialize counts") {
+      bgs.groupBy("bg").agg(count(lit(1)).as("c2")).localCheckpoint(true)
+    }
     val withW1 = c2.withColumn("w1", split(col("bg"), " ").getItem(0))
     val c1 = withW1.groupBy("w1").agg(sum("c2").as("c1"))
     val lm = withW1

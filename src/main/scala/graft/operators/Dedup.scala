@@ -395,6 +395,7 @@ object Dedup {
     // explicit schema: an index built from a corpus with no spans at all
     // (every doc shorter than n words) writes zero data files, and a
     // schema-inferred read of that would fail instead of excising nothing
+    // (and, the schema being given, Fs.readParquet would save no job)
     val idx = spark.read.schema("gh LONG, shard INT")
       .parquet(s"$vdir/spans").select("gh")
     val starts = occ.join(idx, Seq("gh"), "left_semi")
@@ -823,7 +824,7 @@ object Dedup {
         .select(col("doc_id"), minhashSignature(col("text"), shingleN, k).as("sig"))
         .filter(element_at(col("sig"), 1) =!= Long.MaxValue)
       sigs.write.mode("overwrite").parquet(s"$vdir/sigs")
-      val allBands = spark.read.parquet(s"$vdir/sigs")
+      val allBands = graft.sources.Fs.readParquet(spark, s"$vdir/sigs")
         .select(col("doc_id"), explode(lshBands(col("sig"), k, bands)).as("bb"))
         .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
       val hot = allBands.groupBy("band", "bucket")
@@ -871,12 +872,12 @@ object Dedup {
     val newBands = newSigs
       .select(col("doc_id").as("new_id"), explode(lshBands(col("sig"), k, bands)).as("bb"))
       .select(col("new_id"), col("bb.band"), col("bb.bucket"))
-    val idxBands = spark.read.parquet(s"$vdir/bands")
+    val idxBands = graft.sources.Fs.readParquet(spark, s"$vdir/bands")
       .select(col("band"), col("bucket"), col("doc_id").as("idx_id"))
     val candidates = newBands.join(idxBands, Seq("band", "bucket"))
       .select("new_id", "idx_id").distinct()
     verifyBySig(candidates, newSigs,
-      spark.read.parquet(s"$vdir/sigs"), "new_id", "idx_id", threshold)
+      graft.sources.Fs.readParquet(spark, s"$vdir/sigs"), "new_id", "idx_id", threshold)
   }
 
   /** Connected components over a near-dup pair graph — the last step of a
@@ -927,17 +928,21 @@ object Dedup {
     // the whole tree once the labels are materialized downstream
     checkpointDir.foreach(d => sc.setCheckpointDir(
       d + "/cc-" + java.util.UUID.randomUUID().toString.take(8)))
-    def materialize(df: DataFrame): DataFrame =
-      if (checkpointDir.isDefined) {
-        // persist before checkpoint: the eager materialization and the
-        // reliable DFS write are SEPARATE jobs, and an unpersisted plan
-        // would be recomputed from scratch by the write job — doubling
-        // every round of exactly the long loops this mode exists for
-        val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val out = cached.checkpoint()
-        cached.unpersist(blocking = false)
-        out
-      } else df.localCheckpoint()
+    // each materialization's jobs carry `label`; the caller's own job
+    // description is back in place once it returns or throws
+    def materialize(label: String, df: DataFrame): DataFrame =
+      graft.Session.withJobLabel(sc, label) {
+        if (checkpointDir.isDefined) {
+          // persist before checkpoint: the eager materialization and the
+          // reliable DFS write are SEPARATE jobs, and an unpersisted plan
+          // would be recomputed from scratch by the write job — doubling
+          // every round of exactly the long loops this mode exists for
+          val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val out = cached.checkpoint()
+          cached.unpersist(blocking = false)
+          out
+        } else df.localCheckpoint()
+      }
     try {
     // materialize the edge set once: it is re-joined EVERY iteration, and
     // without the checkpoint Spark would recompute the (possibly expensive)
@@ -945,8 +950,7 @@ object Dedup {
     // means only the (small) labels side shuffles on each pull —
     // localCheckpoint preserves outputPartitioning, so the exchange on the
     // edge side happens exactly once for the whole loop.
-    sc.setJobDescription("cc: materialize edges")
-    val edges = materialize(
+    val edges = materialize("cc: materialize edges",
       pairs.select(col("a_id").as("u"), col("b_id").as("v"))
         .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
         .repartition(col("v")))
@@ -955,8 +959,7 @@ object Dedup {
     // more full pass over the node set (and one more Spark job) per call,
     // purely to read a sum the checkpoint job already computes
     val obs0 = org.apache.spark.sql.Observation()
-    sc.setJobDescription("cc: materialize labels")
-    var labels = materialize(
+    var labels = materialize("cc: materialize labels",
       nodes.select(col(idCol).as("id"), col(idCol).as("lbl"))
         .observe(obs0, coalesce(sum("lbl"), lit(0L)).as("s"))) // empty input sums to null
     var converged = false
@@ -994,11 +997,10 @@ object Dedup {
       // rides the checkpoint job as an observed metric — one action per
       // iteration, no separate sum job.
       val obs = org.apache.spark.sql.Observation()
-      sc.setJobDescription(s"cc: round $iter")
       val nbrMin = edges.join(labels, edges("v") === labels("id"))
         .groupBy("u").agg(min("lbl").as("nmin"))
       val parent = labels.select(col("id").as("pid"), col("lbl").as("plbl"))
-      val next = materialize(labels
+      val next = materialize(s"cc: round $iter", labels
         .join(nbrMin, labels("id") === nbrMin("u"), "left")
         .join(parent, labels("lbl") === col("pid"), "left")
         .select(col("id"), least(col("lbl"),
@@ -1015,10 +1017,6 @@ object Dedup {
       "iterations — the pair graph has pathological diameter; raise maxIter")
     labels.select(col("id").as(idCol), col("lbl").as("cluster_id"))
     } finally {
-      // reset the thread-local job description on EVERY exit: a mid-loop
-      // failure would leave "cc: round N" stuck on the context,
-      // mislabeling every later job in the session
-      sc.setJobDescription(null)
       // restore the application's checkpoint dir — this function must not
       // silently repoint other jobs' reliable checkpoints. (If none was
       // set before, the per-call subdir remains set; SparkContext has no

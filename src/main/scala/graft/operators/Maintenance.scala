@@ -77,7 +77,9 @@ object Maintenance {
         val tmp = new Path(leaf.toString + "._compact_tmp")
         val bak = new Path(leaf.toString + "._compact_old")
         // coalesce, not repartition: compaction must not pay a shuffle —
-        // it only narrows the file count, preserving data distribution
+        // it only narrows the file count, preserving data distribution.
+        // A plain read, not Fs.readParquet: this rewrites the files it
+        // reads, so a cached schema would never be read again
         spark.read.parquet(leaf.toString).coalesce(nTarget)
           .write.mode("overwrite").parquet(tmp.toString)
         require(fs.rename(leaf, bak), s"compaction: could not move $leaf aside")
@@ -150,7 +152,7 @@ object Maintenance {
     import org.apache.spark.sql.functions._
     val cols = graft.operators.Curation.manifestAggCols(
       graft.functions.TextAnalytics.wsTokenCount(col("text")).cast("long"))
-    spark.read.parquet(dataDir).groupBy("shard").agg(cols.head, cols.tail: _*)
+    graft.sources.Fs.readParquet(spark, dataDir).groupBy("shard").agg(cols.head, cols.tail: _*)
   }
 
   /** Audit a published shard export: re-derive the manifest FROM the
@@ -161,7 +163,7 @@ object Maintenance {
     val vdir = graft.sources.Fs.resolveCurrent(spark, path,
       s"no shard export at $path (missing _current pointer — run writeShards first)")
     val derived = derivedManifest(spark, s"$vdir/data")
-    val manifest = spark.read.parquet(s"$vdir/manifest")
+    val manifest = graft.sources.Fs.readParquet(spark, s"$vdir/manifest")
     derived.exceptAll(manifest).unionAll(manifest.exceptAll(derived))
   }
 

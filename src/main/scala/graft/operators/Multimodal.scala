@@ -523,7 +523,7 @@ object Multimodal {
       // truncated bucket still surfaces the family
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("band", "bucket").orderBy("media_id")
-      spark.read.parquet(s"$vdir/hashes")
+      graft.sources.Fs.readParquet(spark, s"$vdir/hashes")
         .select(col("media_id"), col("hash"),
           explode(Dedup.bands64(col("hash"), nBands)).as("bb"))
         .select(col("media_id"), col("hash"), col("bb.band"), col("bb.bucket"))
@@ -565,7 +565,7 @@ object Multimodal {
         explode(Dedup.bands64(col("new_hash"), nBands)).as("bb"))
       .select(col("new_id"), col("new_hash"), col("bb.band"), col("bb.bucket"))
       .filter(col("band") < probed)
-    val idxBands = spark.read.parquet(s"$vdir/bands")
+    val idxBands = graft.sources.Fs.readParquet(spark, s"$vdir/bands")
       .filter(col("band") < probed)
       .select(col("band"), col("bucket"), col("media_id").as("idx_id"),
         col("hash").as("idx_hash"))

@@ -265,7 +265,7 @@ object SimilarityIvf {
     * cell-filter pushdown prunes partitions in EACH segment scan. */
   private def readVectors(spark: org.apache.spark.sql.SparkSession,
       path: String, segs: Seq[String]): DataFrame =
-    segs.map(s => spark.read.parquet(s"$path/$s")).reduce(_.unionByName(_))
+    segs.map(s => graft.sources.Fs.readParquet(spark, s"$path/$s")).reduce(_.unionByName(_))
 
   /** The `nprobe` nearest cells to `vd` — the ONE copy of the probe-cell
     * ranking (L2 over the common prefix, (distance, cell) tie order)
@@ -319,11 +319,11 @@ object SimilarityIvf {
                        nprobe: Int = 4): DataFrame = {
     import spark.implicits._
     val (centroids, segs) = resolveIndex(spark, path)
-    spark.sparkContext.setJobDescription("ivf: collect anchors")
-    val aRows = try anchors.select(col("vec_id"), col("label"), col("embedding"))
-      .limit(Dedup.maxVerifierSample + 1)
-      .as[(Long, Int, Array[Float])].collect()
-    finally spark.sparkContext.setJobDescription(null)
+    val aRows = graft.Session.withJobLabel(spark.sparkContext, "ivf: collect anchors") {
+      anchors.select(col("vec_id"), col("label"), col("embedding"))
+        .limit(Dedup.maxVerifierSample + 1)
+        .as[(Long, Int, Array[Float])].collect()
+    }
     require(aRows.length <= Dedup.maxVerifierSample,
       s"anchor set exceeds the cap ${Dedup.maxVerifierSample} — pre-filter anchors")
     // the anchor PAYLOAD (embedding + norm) broadcasts ONCE per anchor;

@@ -234,7 +234,7 @@ object SimilarityPq {
         java.lang.Double.valueOf(s)
       }
     })
-    val codes = spark.read.parquet(s"$vdir/codes")
+    val codes = graft.sources.Fs.readParquet(spark, s"$vdir/codes")
     val base = if (excludeIds.isEmpty) codes
                else codes.filter(!col("vec_id").isin(excludeIds: _*))
     val short = base.filter(col("code").isNotNull)

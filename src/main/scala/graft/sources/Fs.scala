@@ -4,7 +4,8 @@ import com.fasterxml.jackson.annotation.{JsonSetter, Nulls}
 import com.fasterxml.jackson.databind.DeserializationFeature._
 import com.fasterxml.jackson.databind.json.JsonMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import scala.reflect.{ClassTag, classTag}
 
 /** Session-configured Hadoop filesystem access — the one way the engine
@@ -112,6 +113,90 @@ object Fs {
       case e: com.fasterxml.jackson.core.JacksonException => throw new IllegalArgumentException(
         s"$p is not a readable artifact document (${e.getOriginalMessage}) — $what", e)
     }
+  }
+
+  // ---- parquet reads that resolve each schema once per file listing ----
+
+  /** Entries of [[readParquet]]'s schema cache: a `StructType` is a few
+    * KB, so the bound holds well under a MB; a workload reading more
+    * distinct listings than this re-infers the least recently used. */
+  private val SchemaCacheEntries = 256
+
+  private val schemaCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, StructType]): Boolean =
+        size() > SchemaCacheEntries
+    })
+
+  /** Session confs that parquet schema inference or partition discovery
+    * reads, besides the `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` families. */
+  private val inferenceConfs = Seq(
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive", "spark.sql.session.timeZone", "spark.sql.timestampType")
+
+  /** `spark.read.parquet(path)` that runs Spark's schema inference (one
+    * footer-reading Spark job) once per distinct file listing instead of
+    * on every read. A miss is exactly `spark.read.parquet(path)` and keeps
+    * that relation's `schema`; a hit is `spark.read.schema(cached)
+    * .parquet(path)`, which lists and discovers partitions as before but
+    * launches no job.
+    *
+    * Key: SHA-256 of the qualified path, the sorted recursive leaf listing
+    * under it as (path, length, mtime) per file, and the effective value
+    * of every conf above. A rewritten, added or removed file changes the
+    * listing and a conf flip changes the conf part, so a key can only
+    * name the files and settings its schema was inferred from. Bound: an
+    * access-order LRU of [[SchemaCacheEntries]] schemas per JVM.
+    *
+    * Value identity: the cached schema IS the relation schema Spark
+    * inferred for this key, and a user schema equal to the inferred one
+    * resolves the same relation (data columns in file order, partition
+    * columns last with the cached types — inference's order).
+    * `ReadParquetSpec` holds schema and analyzed output types equal to a
+    * plain read on a miss and a hit, for every fixture table, both
+    * `events.ts` layouts and every routed side-table writer/reader pair.
+    *
+    * For reads of files that do not change between reads; a path read
+    * once (a fresh version each call) or rewritten by its reader gains
+    * nothing and should stay a plain read. */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val key = schemaKey(spark, path)
+    key.flatMap(k => Option(schemaCache.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        // keyed on the listing taken before the read: were the files
+        // rewritten in between, the entry names a listing no later read
+        // sees again
+        key.foreach(schemaCache.put(_, df.schema))
+        df
+    }
+  }
+
+  /** [[readParquet]]'s cache key; None for a missing path, which then
+    * fails in `spark.read` with Spark's own error. */
+  private def schemaKey(spark: SparkSession, path: String): Option[String] = {
+    val (fs, p) = of(spark, path)
+    val root = fs.makeQualified(p)
+    // listStatus, not listFiles: on the local filesystem listFiles (which
+    // builds located statuses) took 2.6 ms for one fixture table, this
+    // 0.02 ms
+    def leaves(dir: Path): Seq[String] = fs.listStatus(dir).toSeq.flatMap { st =>
+      if (st.isDirectory) leaves(st.getPath)
+      else Seq(s"${st.getPath}\u0000${st.getLen}\u0000${st.getModificationTime}")
+    }
+    val listing = try leaves(root).sorted
+      catch { case _: java.io.FileNotFoundException => return None }
+    val set = spark.conf.getAll.keys.filter(k =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet."))
+    val confs = (set.toSeq ++ inferenceConfs).distinct.sorted
+      .map(k => s"$k=${spark.conf.getOption(k).orNull}")
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (Seq(root.toString) ++ listing ++ confs).foreach { s =>
+      md.update(s.getBytes("UTF-8")); md.update(0.toByte)
+    }
+    Some(md.digest().map("%02x".format(_)).mkString)
   }
 
   /** Resolve the `_current` `v<N>` directory of a versioned artifact root;

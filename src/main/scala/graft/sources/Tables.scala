@@ -16,6 +16,17 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * All loaders take the scale-factor directory so the same query code runs
   * at sf0.001 (smoke), sf0.01 (oracle), sf0.1 (bench) and, unchanged, on a
   * 100 TB cluster layout (directory of parquet files per table).
+  *
+  * Every load reads through [[Fs.readParquet]], so a table's schema is
+  * inferred (one Spark job reading parquet footers) once per distinct
+  * file listing and conf state, not on every load: the cache key is the
+  * qualified path, the sorted recursive (file, length, mtime) listing and
+  * the parquet-inference confs, including the `nanosAsLong` set here; the
+  * cache is an access-order LRU of 256 schemas per JVM. A warm load
+  * supplies the schema Spark inferred for that same key, so it resolves
+  * the same relation with no job (`ReadParquetSpec` holds the equality
+  * for every fixture table and both `events.ts` layouts, and
+  * `WarmReadSpec` the absence of a job).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -35,7 +46,7 @@ object Tables {
     // as-is: any other zone would shift Spark's nanos against the oracle's.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    val df = spark.read.parquet(s"$dir/$table.parquet")
+    val df = Fs.readParquet(spark, s"$dir/$table.parquet")
     if (table == "events" && df.schema("ts").dataType != LongType)
       df.withColumn("ts",
         (unix_micros(col("ts").cast(TimestampType)) * 1000L).as("ts"))

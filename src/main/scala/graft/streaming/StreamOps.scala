@@ -389,6 +389,8 @@ object StreamOps {
       s"rollup at $rollupPath already folded through batch ${last.get}, " +
         s"got batch $batchId from an unrelated stream — its earlier " +
         "batches were never merged here; use a fresh rollup path")
+    // a plain read, not Fs.readParquet: each version is read once, by
+    // the batch after the one that wrote it, so every read would miss
     val merged = fold(prev.map(d => spark.read.parquet(s"$d/$artifact")))
     graft.sources.Fs.writeVersioned(spark, rollupPath) { vdir =>
       merged.write.mode("overwrite").parquet(s"$vdir/$artifact")

@@ -27,7 +27,7 @@ object JobProfile {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.put(j.jobId, (j.time, Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .flatMap(p => Option(p.getProperty(graft.Session.JobDescription)))
           .getOrElse("")))
       override def onJobEnd(j: SparkListenerJobEnd): Unit = {
         Option(jobs.get(j.jobId)).foreach { case (t0, d) =>
@@ -39,7 +39,9 @@ object JobProfile {
     })
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      // warm pass (codegen + footer caches), then the profiled pass
+      // warm pass (codegen, and the parquet schemas Fs.readParquet keeps,
+      // so the profiled pass runs no schema-inference job), then the
+      // profiled pass
       for (pass <- Seq("warm", "profiled")) {
         done.clear(); taskTime.set(0L)
         val t0 = System.nanoTime()

@@ -18,14 +18,9 @@ class DriverModelLoadSpec extends SparkSpec {
     KMeans.saveModel(spark, km, kmDir)
     Classifier.saveModel(spark, clf, clfDir)
     Importance.saveImportanceModel(spark, imp, impDir)
-    val sc = spark.sparkContext
-    val group = s"driver-model-load-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(group, "load driver-held models", interruptOnCancel = false)
-    val loaded = try (Bpe.loadBpe(spark, bpeDir), KMeans.loadModel(spark, kmDir),
-        Classifier.loadModel(spark, clfDir), Importance.loadImportanceModel(spark, impDir))
-      finally sc.clearJobGroup()
-    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
-      sc.statusTracker.getJobIdsForGroup(group).mkString(","))
+    val (loaded, jobs) = withJobs((Bpe.loadBpe(spark, bpeDir), KMeans.loadModel(spark, kmDir),
+      Classifier.loadModel(spark, clfDir), Importance.loadImportanceModel(spark, impDir)))
+    assert(jobs.isEmpty, jobs.mkString(","))
     assert(loaded._1.merges.toSeq == bpe.merges.toSeq)
     assert(loaded._2.centroids.map(_.toSeq).toSeq == km.centroids.map(_.toSeq).toSeq)
     assert(loaded._3.dim == 2 && loaded._3.wNanos.toSeq == clf.wNanos.toSeq)

@@ -109,13 +109,8 @@ class IvfSpec extends SparkSpec {
 
   test("trainCentroids runs exactly one Spark job") {
     val embs = Tables.embeddings(spark, sfDir)
-    val sc = spark.sparkContext
-    val group = s"ivf-train-${System.nanoTime()}"
-    sc.setJobGroup(group, "trainCentroids")
-    try SimilarityIvf.trainCentroids(embs, nCells = 8, iters = 3)
-    finally sc.clearJobGroup()
-    val jobs = sc.statusTracker.getJobIdsForGroup(group)
-    assert(jobs.length == 1, s"jobs ${jobs.toSeq}")
+    val (_, jobs) = withJobs(SimilarityIvf.trainCentroids(embs, nCells = 8, iters = 3))
+    assert(jobs.length == 1, s"jobs $jobs")
   }
 
   /** Train on the fixture plus one vector `bad` (vec_id 900001) and

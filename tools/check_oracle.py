@@ -4,7 +4,7 @@ against DuckDB oracles and compare values exactly (sorted rows, sorted
 column names). Usage: check_oracle.py <sfDir> <verifyOutDir>
 
 `compare_frames` holds the single copy of the driver-mirroring comparison
-semantics; targeted checkers (check_sf1_r7.py) import it rather than
+semantics; targeted checkers (check_sf1.py) import it rather than
 re-implementing the contract.
 """
 import sys, json, glob, math

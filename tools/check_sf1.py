@@ -1,16 +1,16 @@
 #!/usr/bin/env python3
-"""Round-7 targeted sf1 correctness: compare the round's new/changed
-queries against DuckDB at /tmp/graft_sf1 (the full check_oracle run is
+"""Targeted sf1 correctness: compare the sf1 tier's queries against
+DuckDB on a `tools/gen_scale.py` fixture (the full check_oracle run is
 reserved for sf0.01 — the quadratic oracles take 30+ CPU-min at sf1).
 
 txt_signals' committed oracle joins the sf0.01 compress GOLDEN for the
 deflate columns (DuckDB has no zlib), so at sf1 we compare every column
 EXCEPT n_deflate/ratio_ppm, with n_bytes recomputed in SQL.
 
-Usage: check_sf1_r7.py <sfDir> <verifyOutDir> [query ...]
+Usage: check_sf1.py <sfDir> <verifyOutDir> [query ...]
 
 With explicit query names, only those are checked (a subset Verify run);
-without, the full round-7 target list is required and a missing output is
+without, the full target list is required and a missing output is
 a FAILURE (a query that crashed before writing parquet must not pass as
 "skipped").
 """
